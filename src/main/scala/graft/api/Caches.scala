@@ -34,9 +34,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Harness surfaces (Verify/Bench/GoldenSpec) sweep between queries.
-  * [[Dedup.connectedComponents]] manages its own localCheckpoint lifecycle
-  * (only the blocks backing its RETURNED frame outlive the call — freeing
-  * those would destroy the result, so they are deliberately not registered).
+  * Checkpointed solver state is not registered here: the solvers free
+  * their superseded rounds through [[Checkpoints]] (frames a round's step
+  * caches are freed with the round), and only the blocks backing a
+  * solver's RETURNED frame outlive the call — freeing those would destroy
+  * the result.
   */
 object Caches {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

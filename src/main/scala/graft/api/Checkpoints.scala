@@ -1,11 +1,15 @@
 package graft.api
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.storage.StorageLevel
 
-/** Shared per-round lineage truncation for the iterative solvers
-  * ([[Dedup.connectedComponents]], [[Graph.pagerankUntil]],
-  * [[Graph.kcoreUntil]]) — previously three identical private helpers, now
-  * one with a DURABILITY knob (r12).
+/** Per-round lineage truncation, and the one fixed-point loop every
+  * open-ended solver runs through ([[Dedup.connectedComponents]],
+  * [[Graph.pagerankUntil]], [[Graph.kcoreUntil]], and the min-reach and
+  * mark loops of [[Graph.stronglyConnected]]).
   *
   * An open-ended loop must truncate LOGICAL lineage every round (persist
   * alone caches data but re-analyzes the whole plan history, so driver
@@ -35,15 +39,9 @@ private[api] object Checkpoints {
   private var lastDir: Option[String] = None
 
   /** Eagerly checkpoint `df` (local or reliable per `dir`) and return the
-    * truncated frame plus the handle for freeing the SUPERSEDED round:
-    * for local checkpoints, the backing RDD (its blocks are freed with
-    * `unpersist` — taken directly off the returned plan, never by diffing
-    * `sparkContext.getPersistentRDDs`, which would misattribute RDDs
-    * another thread persisted concurrently); for reliable checkpoints,
-    * None (state lives in files, not in evictable blocks).
+    * truncated frame; [[free]] releases the blocks behind it.
     */
-  def tracked(df: DataFrame, dir: Option[String])
-      : (DataFrame, Option[org.apache.spark.rdd.RDD[_]]) = dir match {
+  def tracked(df: DataFrame, dir: Option[String]): DataFrame = dir match {
     case Some(path) =>
       val sc = df.sparkSession.sparkContext
       // setCheckpointDir mints a fresh UUID SUBDIR under the given path on
@@ -64,20 +62,67 @@ private[api] object Checkpoints {
           sc.setCheckpointDir(path)
           lastDir = Some(path)
         }
-        (df.checkpoint(true), None)
+        df.checkpoint(true)
       }
-    case None =>
-      val out = df.localCheckpoint(true)
-      val rdd = out.queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-        case _ => None // unexpected plan shape: leak (bounded) over misfree
-      }
-      (out, rdd)
+    case None => df.localCheckpoint(true)
   }
 
-  /** Frees a superseded round's local-checkpoint blocks (no-op for the
-    * reliable path's None handle).
+  /** Frees the local-checkpoint blocks behind a frame [[tracked]] returned.
+    * The RDD is taken off the frame's own plan, never by diffing
+    * `sparkContext.getPersistentRDDs`, which would misattribute RDDs
+    * another thread persisted concurrently. A reliable checkpoint holds no
+    * blocks (its state lives in files), so freeing it is a no-op, and so
+    * is freeing a frame twice.
     */
-  def free(r: Option[org.apache.spark.rdd.RDD[_]]): Unit =
-    r.foreach(_.unpersist(blocking = false))
+  def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: LogicalRDD if l.rdd.getStorageLevel != StorageLevel.NONE =>
+      l.rdd.unpersist(blocking = false)
+    case _ => // no blocks, or an unexpected plan shape: leak (bounded) over misfree
+  }
+
+  /** Runs an open-ended loop to its fixed point. `init` and every `step`
+    * output are checkpointed through [[tracked]], and each round frees the
+    * state it replaces, so one generation of state is materialized between
+    * rounds. The loop stops once `converged(previous, current)` holds on
+    * the probes of consecutive states, or after `maxRounds` rounds.
+    * Returns (final state, rounds run, converged); the caller decides what
+    * stopping at the cap means.
+    *
+    * A round issues one checkpoint and one probe: each state is probed
+    * once and its value carried into the next round's test. `converged`
+    * runs before the replaced state is freed, so a probe may return the
+    * state frame itself for a test that reads both rounds. Frames a step
+    * persists through [[Caches.cache]] live for that round only — the
+    * eager checkpoint has materialized everything the new state reads.
+    * The final state's blocks back the returned frame; the caller frees
+    * it, if ever, with [[free]].
+    */
+  def fixedPoint[P](init: DataFrame, maxRounds: Int, dir: Option[String])(
+      probe: DataFrame => P)(converged: (P, P) => Boolean)(
+      step: DataFrame => DataFrame): (DataFrame, Int, Boolean) = {
+    var state = tracked(init, dir)
+    var p = probe(state)
+    var rounds = 0
+    var done = false
+    while (!done && rounds < maxRounds) {
+      val next = Caches.scoped(tracked(step(state), dir))
+      val q = probe(next)
+      done = converged(p, q)
+      free(state)
+      state = next
+      p = q
+      rounds += 1
+    }
+    (state, rounds, done)
+  }
+
+  /** Exact sum of a long column, 0 on an empty frame — the probe of the
+    * min-label loops: labels only ever decrease, so an unchanged sum means
+    * no label moved. DECIMAL(38,0) keeps it exact where a Long sum would
+    * fail on overflow under ANSI mode (ids near `Long.MaxValue`, such as
+    * 64-bit hashes) or, without ANSI, wrap and alias two distinct states.
+    */
+  def exactSum(c: String)(df: DataFrame): BigDecimal =
+    BigDecimal(df.agg(coalesce(sum(col(c).cast(DecimalType(38, 0))),
+      lit(0).cast(DecimalType(38, 0)))).head().getDecimal(0))
 }

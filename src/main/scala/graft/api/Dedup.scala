@@ -591,25 +591,20 @@ object Dedup {
     * propagation needs ~1000 (each a full distributed job wave — the
     * difference between seconds and a blown iteration cap at scale).
     *
-    * Every round checkpoints its label frame — an iterative loop must
-    * TRUNCATE logical lineage (persist alone caches data but every round
-    * still re-analyzes the whole history, so driver planning cost grows
-    * superlinearly with iterations) — and unpersists the superseded round's
-    * blocks, so at most one generation of labels is materialized at a time
-    * (plus the edge frame, freed on exit; the FINAL label frame stays
-    * materialized because it backs the returned DataFrame). Checkpoints are
-    * executor-LOCAL by default; pass `checkpointDir` for RELIABLE per-round
-    * state that survives executor loss on a real cluster — the
-    * [[Checkpoints]] durability knob (r12), a physical choice only (ApiSpec
-    * pins reliable == local row-for-row).
+    * The rounds run on [[Checkpoints.fixedPoint]]: every round's label
+    * frame is checkpointed and the superseded round freed, so one
+    * generation of labels is materialized at a time (plus the edge frame,
+    * freed on exit; the final label frame backs the returned DataFrame).
+    * Checkpoints are executor-LOCAL by default; `checkpointDir` makes them
+    * RELIABLE, surviving executor loss on a real cluster — a physical
+    * choice only (ApiSpec pins reliable == local row-for-row).
     *
-    * Convergence is a label-sum fixed point (labels only ever decrease, so
-    * an unchanged sum means no label moved). The probe runs EVERY round
-    * (r17; was every 2nd): it is one small aggregate over the round's
-    * checkpointed label frame, while a full hook+jump round is two joins +
-    * an aggregate over the edge frame — probing less often routinely paid
-    * one extra post-convergence round, which costs far more than the
-    * probes it saved.
+    * Convergence is an exact label-sum fixed point ([[Checkpoints.exactSum]]:
+    * labels only ever decrease, so an unchanged sum means no label moved),
+    * probed once per round — one small aggregate over the checkpointed
+    * label frame, far cheaper than the two joins and the aggregate over
+    * the edge frame a round costs. Hitting `maxIter` throws rather than
+    * return split clusters.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): DataFrame =
@@ -617,77 +612,46 @@ object Dedup {
 
   /** [[connectedComponents]] plus the number of hook+jump rounds it ran —
     * the observable behind the O(log n) claim. `graft.Stress` records it
-    * (rounds ≈ log₂(longest label chain) + the 2-round convergence probe
-    * granularity) and ApiSpec asserts it on a 1000-chain.
+    * (rounds ≈ log₂(longest label chain) + the one round that finds no
+    * change) and ApiSpec asserts it on a 1000-chain.
     */
   def connectedComponentsWithRounds(pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    // per-round lineage truncation — local blocks by default, reliable
-    // files under checkpointDir when the caller needs rounds to survive
-    // executor loss (the durability trade is on the Checkpoints scaladoc)
-    def checkpointTracked(df: DataFrame) =
-      Checkpoints.tracked(df, checkpointDir)
-    def free(r: Option[org.apache.spark.rdd.RDD[_]]): Unit =
-      Checkpoints.free(r)
-
-    val (edges, edgeRdd) = checkpointTracked(
+    val edges = Checkpoints.tracked(
       pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))))
-    var (comp, compRdd) = checkpointTracked(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id")))
-    // coalesce: sum over an empty pair frame is null, not 0
-    def labelSumOf(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("component")), lit(0L))).head().getLong(0)
-    var labelSum = labelSumOf(comp)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+        .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))),
+      checkpointDir)
+    val (comp, rounds, converged) = Checkpoints.fixedPoint(
+        edges.select(col("src").as("id")).distinct()
+          .withColumn("component", col("id")),
+        maxIter, checkpointDir)(Checkpoints.exactSum("component"))(_ == _) { comp =>
       val nbrMin = edges
         .join(comp.select(col("id").as("dst"), col("component").as("nc")), "dst")
         .groupBy("src").agg(min(col("nc")).as("nbr_min"))
-      val hooked = comp
+      // the jump self-joins this frame; cache it for the round so the
+      // hook subplan (join + aggregate) computes once, not once per side
+      val hooked = Caches.cache(comp
         .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("component"))
-        // the jump self-joins this frame; persist so the hook subplan
-        // (join + aggregate) computes once, not once per join side
-        .persist()
+            .as("component")))
       // labels are always ids of nodes in the same component, so the jump
       // stays within the component and only ever decreases labels
-      val (next, nextRdd) = checkpointTracked(
-        hooked
-          .join(hooked.select(col("id").as("pid"), col("component").as("pc")),
-            col("component") === col("pid"), "left")
-          .select(col("id"), coalesce(col("pc"), col("component")).as("component")))
-      hooked.unpersist(blocking = false)
-      free(compRdd)
-      comp = next
-      compRdd = nextRdd
-      i += 1
-      // probe EVERY round (r17; was every 2nd): the probe is one small
-      // aggregate over the just-checkpointed label frame, while a
-      // hook+jump round is two joins + an aggregate over the EDGE frame —
-      // on any non-trivial graph the round dwarfs the probe, so skipping
-      // probes to save aggregates routinely bought one full extra round
-      // after convergence. Detection is unchanged: labels only decrease,
-      // so an equal sum across one round is exactly a fixed point.
-      val nextSum = labelSumOf(comp)
-      converged = nextSum == labelSum
-      labelSum = nextSum
+      hooked
+        .join(hooked.select(col("id").as("pid"), col("component").as("pc")),
+          col("component") === col("pid"), "left")
+        .select(col("id"), coalesce(col("pc"), col("component")).as("component"))
     }
-    free(edgeRdd)
+    Checkpoints.free(edges)
     // an unconverged result silently splits clusters (duplicate survivors
-    // downstream) — surface it instead; convergence costs one cheap extra
-    // round, so hitting the cap means the label chains outlived 2^maxIter
-    // doubling steps — far past any real graph; raise maxIter if it happens
+    // downstream); hitting the cap means the label chains outlived
+    // 2^maxIter doubling steps — far past any real graph
     if (!converged) {
-      free(compRdd)
+      Checkpoints.free(comp)
       throw new IllegalStateException(
         s"connectedComponents did not converge within $maxIter iterations; " +
           "raise maxIter")
     }
-    (comp, i)
+    (comp, rounds)
   }
 }

@@ -107,8 +107,8 @@ object Graph {
     * (read `iters`× each — `Caches.sweep` when done); each iteration is ONE
     * src-keyed equi-join (rank ⋈ deg is node-grain) + ONE dst-keyed hash
     * aggregate. Bounded-iteration unroll keeps plan depth fixed; the
-    * open-ended solver is [[pagerankUntil]], which localCheckpoints per
-    * round like the CC builder.
+    * open-ended solver is [[pagerankUntil]], which checkpoints every round
+    * on [[Checkpoints.fixedPoint]].
     */
   def pagerank(edgesIn: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
@@ -117,10 +117,9 @@ object Graph {
       .agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg")))
     // out-degree is per-round-CONSTANT node state: attach it to the cached
-    // edge list ONCE instead of re-joining rank⋈deg every round (r17,
-    // guide §2.4 — one node-grain join per round removed; the quotient
-    // rank/deg is spelled identically, so every round's bits are unchanged
-    // and the pagerankUntil uniform-weight equality stays bit-exact)
+    // edge list ONCE instead of re-joining rank⋈deg every round (the
+    // quotient rank/deg is spelled identically, so the pagerankUntil
+    // uniform-weight equality stays bit-exact)
     val edgesDeg = Caches.cache(spread(edges
       .join(deg.select(col("node").as("src"), col("deg")), "src")))
     var rank = deg.select(col("node"), lit(1.0).as("rank"))
@@ -149,21 +148,18 @@ object Graph {
     * follows trade volume, not mere adjacency.
     *
     * Scale shape: per round ONE src-keyed equi-join + ONE dst-keyed hash
-    * aggregate (the [[pagerank]] step), then an eager per-round checkpoint
-    * to truncate lineage (an open-ended loop would otherwise grow the plan
-    * superlinearly — the CC builder's discipline, Dedup.scala): executor-
-    * local by default, RELIABLE into `checkpointDir` when rounds must
-    * survive executor loss (the [[Checkpoints]] durability knob, r12) —
-    * and a node-grain driver probe for `max |Δ|`. At most one superseded
-    * rank generation stays materialized; the edge/out-mass frames persist
-    * via [[Caches]].
+    * aggregate (the [[pagerank]] step) on [[Checkpoints.fixedPoint]]: the
+    * round's ranks are checkpointed (executor-local by default, reliable
+    * into `checkpointDir` when rounds must survive executor loss) and the
+    * superseded round freed, and one node-grain driver probe joins the two
+    * rounds for `max |Δ|`. The edge/out-mass frames persist via
+    * [[Caches]]. Reaching `maxIters` is not an error: the ranks of the
+    * last round are returned.
     */
   def pagerankUntil(edgesIn: DataFrame, eps: Double = 1e-6,
       maxIters: Int = 40,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     require(maxIters >= 1, s"maxIters must be positive, got $maxIters")
-    def checkpointTracked(df: DataFrame) =
-      Checkpoints.tracked(df, checkpointDir)
     val base =
       if (edgesIn.columns.contains("w"))
         edgesIn.select(col("src"), col("dst"), col("w").cast("double").as("w"))
@@ -175,31 +171,26 @@ object Graph {
       .agg(sum(col("w").cast(DecimalType(28, 6))).as("wsum"))
       .select(col("src").as("node"), col("wsum")))
     // per-round-constant out-mass attached to the cached edge list ONCE
-    // (r17, the pagerank() discipline): each round then joins rank only —
-    // one node-grain join per round removed, quotient bits unchanged
+    // (the pagerank() discipline): each round then joins rank only
     val edgesWsum = Caches.cache(spread(edges
       .join(wsum.select(col("node").as("src"), col("wsum")), "src")))
-    var (rank, rankRdd) = checkpointTracked(
-      wsum.select(col("node"), lit(1.0).as("rank")))
-    var rounds = 0
-    var delta = Double.MaxValue
-    while (rounds < maxIters && delta >= eps) {
-      val (next, nextRdd) = checkpointTracked(edgesWsum
+    // the probe is the state itself: the test joins both rounds, and a
+    // NaN delta stops the loop as a converged one does
+    def settled(prev: DataFrame, next: DataFrame): Boolean =
+      !(next.join(prev.select(col("node"), col("rank").as("prev")), "node")
+        .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0.0)))
+        .head().getDouble(0) >= eps)
+    val (rank, rounds, _) = Checkpoints.fixedPoint(
+        wsum.select(col("node"), lit(1.0).as("rank")), maxIters,
+        checkpointDir)(identity)(settled) { rank =>
+      edgesWsum
         .join(rank, col("src") === col("node"))
         .select(col("dst"),
           q6(col("rank") * col("w") / col("wsum").cast("double"))
             .cast(DecimalType(28, 6)).as("c"))
         .groupBy(col("dst").as("node"))
         .agg((lit(0.15) + lit(0.85) * sum(col("c")).cast("double"))
-          .as("rank")))
-      delta = next.join(rank.select(col("node"), col("rank").as("prev")),
-          "node")
-        .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0.0)))
-        .head().getDouble(0)
-      rankRdd.foreach(_.unpersist(blocking = false))
-      rank = next
-      rankRdd = nextRdd
-      rounds += 1
+          .as("rank"))
     }
     (rank.select(col("node"), col("rank")), rounds)
   }
@@ -256,29 +247,27 @@ object Graph {
   }
 
   /** Strongly connected components of a DIRECTED edge list `edges(src,
-    * dst)` (r15, the graph alternative the r13/r14 verdicts queued) —
-    * exact SCC membership `(node, scc)` with `scc` = the component's
-    * smallest node id. Phased min-label decomposition:
+    * dst)` — exact SCC membership `(node, scc)` with `scc` = the
+    * component's smallest node id. Phased min-label decomposition:
     *
-    *  0. TRIM (r16, the FW-BW-Trim step): nodes with no remaining
-    *     in-edges or no remaining out-edges cannot lie on a cycle — they
-    *     are singleton SCCs, assigned IN BULK (all current sources and
-    *     sinks per round) without a min-reach fixpoint. Iterated to a
-    *     bounded best-effort fixpoint before every phase: on DAG-heavy
-    *     graphs (and the r15 ADVICE's pathological id-decreasing chain,
-    *     which previously burned one full phase per node) trimming
-    *     dissolves most of the graph in a few cheap rounds; whatever
-    *     survives is cyclic and proceeds to the phases. Trim rounds are
-    *     capped at maxRounds and the cap is NOT a refusal — an untrimmed
-    *     remainder is simply handled by the exact phases.
+    *  0. TRIM (the FW-BW-Trim step): nodes with no remaining in-edges or
+    *     no remaining out-edges cannot lie on a cycle — they are singleton
+    *     SCCs, assigned IN BULK (all current sources and sinks per round)
+    *     without a min-reach fixpoint. Iterated before every phase to a
+    *     bounded best-effort fixpoint: on DAG-heavy graphs (and an
+    *     id-decreasing chain, which would otherwise cost one full phase
+    *     per node) trimming dissolves most of the graph in a few cheap
+    *     rounds; whatever survives is cyclic and proceeds to the phases.
+    *     Trim rounds are capped at maxRounds and the cap is NOT a refusal
+    *     — an untrimmed remainder is simply handled by the exact phases.
     *  1. FORWARD MIN-REACH to fixpoint: `f(v) = min{id(u) : v ⇝ u}`,
     *     computed by pull rounds (`f(v) ← min(f(v), min over v→w of
     *     f(w))`) — O(directed diameter) rounds: the label wave moves one
     *     hop per round, and unlike undirected CC there is no valid
     *     pointer-jump (a node's label is its own id until the wave
-    *     arrives, so f∘f has nothing to jump through; an r15 prototype
-    *     jump accelerated nothing and its per-round persist/self-join
-    *     made round cost grow ~2.5× per round — measured, removed).
+    *     arrives, so f∘f has nothing to jump through). f is per-node
+    *     non-increasing, so the exact label sum ([[Checkpoints.exactSum]])
+    *     is unchanged only at the fixpoint.
     *  2. EXTRACT: every class representative m (f(m) = m — each class
     *     has one: f(v) = m implies m is a node with f(m) = m) marks its
     *     forward closure RESTRICTED to its own class; the marked set is
@@ -286,36 +275,37 @@ object Graph {
     *     m ⇝ v, and every intermediate node of an m→v path with
     *     v ∈ SCC(m) is itself in SCC(m) (it reaches m through v and is
     *     reached from m), so the class-restricted propagation loses no
-    *     member — and it keeps per-node mark state at one row.
+    *     member — and it keeps per-node mark state at one row. The mark
+    *     set only grows, so its count is unchanged only at the fixpoint.
     *  3. Assigned nodes and their edges drop out; remaining nodes (class
     *     members the representative could not reach) repeat. Each phase
     *     assigns at least every current representative, so the phase
     *     count is bounded and small in practice (dense fixtures: 1-2).
     *
     * Determinism: min/distinct throughout — no tie-breaks, no floats.
-    * Bounded-round REFUSAL contract (the wedgeBudget discipline): a
-    * phase whose min-reach or mark loop fails to converge within
-    * `maxRounds`, or a decomposition needing more than `maxPhases`
-    * phases, throws with the exact knob to raise — an unconverged SCC
-    * silently merges or splits components, so it must never return.
+    * Bounded-round REFUSAL contract: a phase whose min-reach or mark loop
+    * fails to converge within `maxRounds`, or a decomposition needing more
+    * than `maxPhases` phases, throws with the exact knob to raise — an
+    * unconverged SCC silently merges or splits components, so it must
+    * never return.
     *
     * Scale shape: per round one edge⋈label join + node-grain hash
-    * aggregate + one label self-join (the jump) — map-side combinable,
-    * no windows, nothing quadratic; per-stage lineage truncates through
-    * [[Checkpoints]] (local blocks by default, reliable files under
-    * `checkpointDir` on preemptible executors). The DuckDB oracle in the
-    * fixture key computes the same components via recursive all-pairs
-    * reachability — fixture-scale only; THIS decomposition is the
-    * 100 TB path.
+    * aggregate — map-side combinable, no windows, nothing quadratic. The
+    * min-reach and mark loops run on [[Checkpoints.fixedPoint]] (one
+    * checkpoint + one probe per round, the superseded round freed); local
+    * blocks by default, reliable files under `checkpointDir` on
+    * preemptible executors. Only the assigned frames' blocks outlive the
+    * call: they back the result. The DuckDB oracle in the fixture key
+    * computes the same components via recursive all-pairs reachability —
+    * fixture-scale only; THIS decomposition is the 100 TB path.
     */
   def stronglyConnected(edgesIn: DataFrame, maxRounds: Int = 40,
       maxPhases: Int = 8, checkpointDir: Option[String] = None): DataFrame =
     stronglyConnectedWithStats(edgesIn, maxRounds, maxPhases, checkpointDir)._1
 
   /** [[stronglyConnected]] plus the measured decomposition counters
-    * (phases, trim/reach/mark rounds) — the observability hook the Stress
-    * harness records (r16, the r15 verdict's scc-stress ask); the public
-    * entry point discards them.
+    * (phases, trim/reach/mark rounds) that the Stress harness records; the
+    * public entry point discards them.
     */
   private[graft] def stronglyConnectedWithStats(edgesIn: DataFrame,
       maxRounds: Int = 40, maxPhases: Int = 8,
@@ -324,16 +314,25 @@ object Graph {
       s"maxRounds/maxPhases must be positive, got $maxRounds/$maxPhases")
     var statTrim = 0L; var statReach = 0L; var statMark = 0L
     def cpT(df: DataFrame) = Checkpoints.tracked(df, checkpointDir)
-    def free(r: Option[org.apache.spark.rdd.RDD[_]]): Unit = Checkpoints.free(r)
-    var (edges, edgesRdd) = cpT(edgesIn.select(col("src"), col("dst"))
+    var edges = cpT(edgesIn.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst")).distinct())
-    // node set from the UNFILTERED list (r15 ADVICE): a node whose only
-    // incident edges are self-loops must surface as its own singleton SCC,
-    // not vanish with the dropped loops
-    var (nodes, nodesRdd) = cpT(
+    // node set from the UNFILTERED list: a node whose only incident edges
+    // are self-loops must surface as its own singleton SCC, not vanish
+    // with the dropped loops
+    var nodes = cpT(
       edgesIn.select(col("src").as("id"))
         .union(edgesIn.select(col("dst").as("id")))
         .filter(col("id").isNotNull).distinct())
+    // drop the assigned nodes `done(id)` and their edges
+    def dropAssigned(done: DataFrame): Unit = {
+      val restNodes = cpT(nodes.join(done, Seq("id"), "left_anti"))
+      val restEdges = cpT(edges
+        .join(restNodes.select(col("id").as("src")), Seq("src"), "left_semi")
+        .join(restNodes.select(col("id").as("dst")), Seq("dst"), "left_semi"))
+      Checkpoints.free(nodes); Checkpoints.free(edges)
+      nodes = restNodes
+      edges = restEdges
+    }
     val assigned = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var remaining = nodes.count()
     var phase = 0
@@ -346,123 +345,68 @@ object Graph {
       while (trimming && trimRound < maxRounds && remaining > 0) {
         trimRound += 1
         // checkpoint FIRST, count the materialized frame: a productive
-        // round's anti-joins run once, not twice (r16 review — the lazy
-        // probe saved a checkpoint only on the single terminal zero round
-        // while doubling every productive one); the terminal round's empty
-        // checkpoint frees immediately
-        val (trivial, trivialRdd) = cpT(
+        // round's anti-joins run once, not twice; the terminal round's
+        // empty checkpoint frees immediately
+        val trivial = cpT(
           nodes.join(edges.select(col("dst").as("id")), Seq("id"), "left_anti")
             .unionByName(
               nodes.join(edges.select(col("src").as("id")), Seq("id"), "left_anti"))
             .distinct())
         val nTrivial = trivial.count()
-        if (nTrivial == 0) { trimming = false; free(trivialRdd) }
+        if (nTrivial == 0) { trimming = false; Checkpoints.free(trivial) }
         else {
           statTrim += 1
-          // trivial's blocks back the RESULT — never freed (the marks rule)
+          // trivial's blocks back the RESULT — never freed
           assigned += trivial.select(col("id").as("node"), col("id").as("scc"))
-          val (restNodes, restRdd) = cpT(
-            nodes.join(trivial, Seq("id"), "left_anti"))
-          val (restEdges, restERdd) = cpT(edges
-            .join(restNodes.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(restNodes.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-          free(nodesRdd); free(edgesRdd)
-          nodes = restNodes; nodesRdd = restRdd
-          edges = restEdges; edgesRdd = restERdd
+          dropAssigned(trivial)
           remaining -= nTrivial
-          if (sys.env.contains("GRAFT_SCC_DEBUG")) System.err.println(
-            s"[scc] trim round $trimRound: $nTrivial singletons, $remaining left")
         }
       }
       if (remaining > 0) {
-      phase += 1
-      require(phase <= maxPhases,
-        s"stronglyConnected needed more than maxPhases $maxPhases phases " +
-          s"($remaining nodes still unassigned) — raise maxPhases")
-      // 1. forward min-reach to fixpoint (pull rounds only — the r15
-      // prototype pointer jump was measured slower and removed, see the
-      // scaladoc)
-      var (f, fRdd) = cpT(nodes.withColumn("f", col("id")))
-      // convergence by EXACT sum equality: f is per-node non-increasing
-      // (least(f, …)), so with exact arithmetic the sum strictly decreases
-      // unless nothing changed — DECIMAL(38,0) keeps it exact where a Long
-      // sum could wrap and alias two distinct states (r15 ADVICE)
-      def sumOf(df: DataFrame): java.math.BigDecimal =
-        df.agg(coalesce(sum(col("f").cast(DecimalType(38, 0))),
-          lit(0).cast(DecimalType(38, 0)))).head().getDecimal(0)
-      var fSum = sumOf(f)
-      var converged = false
-      var round = 0
-      while (!converged) {
-        round += 1
-        statReach += 1
-        require(round <= maxRounds,
+        phase += 1
+        require(phase <= maxPhases,
+          s"stronglyConnected needed more than maxPhases $maxPhases phases " +
+            s"($remaining nodes still unassigned) — raise maxPhases")
+        // 1. forward min-reach to fixpoint (pull rounds)
+        val (f, reachRounds, reached) = Checkpoints.fixedPoint(
+            nodes.withColumn("f", col("id")), maxRounds, checkpointDir)(
+            Checkpoints.exactSum("f"))(_ == _) { f =>
+          val pulled = edges
+            .join(f.select(col("id").as("dst"), col("f").as("fw")), "dst")
+            .groupBy(col("src").as("id")).agg(min(col("fw")).as("nm"))
+          f.join(pulled, Seq("id"), "left")
+            .select(col("id"),
+              least(col("f"), coalesce(col("nm"), col("f"))).as("f"))
+        }
+        statReach += reachRounds
+        require(reached,
           s"forward min-reach did not converge within maxRounds $maxRounds " +
             "— raise maxRounds (rounds scale with the directed diameter)")
-        val tDbg = System.nanoTime()
-        val pulled = edges
-          .join(f.select(col("id").as("dst"), col("f").as("fw")), "dst")
-          .groupBy(col("src").as("id")).agg(min(col("fw")).as("nm"))
-        val (next, nextRdd) = cpT(f.join(pulled, Seq("id"), "left")
-          .select(col("id"),
-            least(col("f"), coalesce(col("nm"), col("f"))).as("f")))
-        free(fRdd); f = next; fRdd = nextRdd
-        val nextSum = sumOf(f)
-        converged = nextSum.compareTo(fSum) == 0
-        fSum = nextSum
-        if (sys.env.contains("GRAFT_SCC_DEBUG")) System.err.println(
-          f"[scc] reach round $round: ${(System.nanoTime() - tDbg) / 1e9}%.2f s, sum $nextSum")
-      }
-      // 2. class-restricted forward marks from the representatives
-      var (marks, marksRdd) = cpT(f.filter(col("f") === col("id")))
-      var mCount = marks.count()
-      var newCount = mCount
-      round = 0
-      while (newCount > 0) {
-        round += 1
-        statMark += 1
-        require(round <= maxRounds,
+        // 2. class-restricted forward marks from the representatives; each
+        // round's new marks are anti-joined against the old ones
+        val (marks, markRounds, marked) = Checkpoints.fixedPoint(
+            f.filter(col("f") === col("id")), maxRounds, checkpointDir)(
+            _.count())(_ == _) { marks =>
+          marks.unionByName(edges
+            .join(marks.select(col("id").as("src"), col("f").as("mf")), "src")
+            .select(col("dst").as("id"), col("mf"))
+            .join(f, "id").filter(col("f") === col("mf"))
+            .select(col("id"), col("f")).distinct()
+            .join(marks, Seq("id"), "left_anti"))
+        }
+        statMark += markRounds
+        require(marked,
           s"SCC mark propagation did not converge within maxRounds " +
             s"$maxRounds — raise maxRounds (rounds scale with the largest " +
             "component's internal diameter)")
-        val tDbg = System.nanoTime()
-        val stepped = edges
-          .join(marks.select(col("id").as("src"), col("f").as("mf")), "src")
-          .select(col("dst").as("id"), col("mf"))
-          .join(f, "id").filter(col("f") === col("mf"))
-          .select(col("id"), col("f")).distinct()
-          .join(marks, Seq("id"), "left_anti")
-        // ONE checkpoint + ONE count per round (r17): checkpoint the MERGED
-        // frame directly and read the round's progress as the count delta —
-        // marks grows monotonically and stepped is anti-joined against it,
-        // so |merged| − |marks| IS the fresh count. The r16 form
-        // checkpointed fresh AND merged (2 jobs) and counted both (2 more);
-        // the step subplan still executes exactly once (inside the merged
-        // checkpoint), so this drops pure barrier overhead, not work.
-        val (merged, mergedRdd) = cpT(marks.unionByName(stepped))
-        val mc = merged.count()
-        newCount = mc - mCount
-        if (newCount > 0) {
-          free(marksRdd); marks = merged; marksRdd = mergedRdd
-          mCount = mc
-        } else free(mergedRdd)
-        if (sys.env.contains("GRAFT_SCC_DEBUG")) System.err.println(
-          f"[scc] mark round $round: ${(System.nanoTime() - tDbg) / 1e9}%.2f s, new $newCount")
-      }
-      assigned += marks.select(col("id").as("node"), col("f").as("scc"))
-      // 3. drop the assigned nodes and their edges; next phase
-      val (restNodes, restRdd) = cpT(
-        nodes.join(marks.select("id"), Seq("id"), "left_anti"))
-      val (restEdges, restERdd) = cpT(edges
-        .join(restNodes.select(col("id").as("src")), Seq("src"), "left_semi")
-        .join(restNodes.select(col("id").as("dst")), Seq("dst"), "left_semi"))
-      free(nodesRdd); free(edgesRdd); free(fRdd)
-      nodes = restNodes; nodesRdd = restRdd
-      edges = restEdges; edgesRdd = restERdd
-      remaining = nodes.count()
+        assigned += marks.select(col("id").as("node"), col("f").as("scc"))
+        // 3. drop the assigned nodes and their edges; next phase
+        dropAssigned(marks.select("id"))
+        Checkpoints.free(f)
+        remaining = nodes.count()
       }
     }
-    free(nodesRdd); free(edgesRdd)
+    Checkpoints.free(nodes); Checkpoints.free(edges)
     val result =
       if (assigned.isEmpty)
         edgesIn.sparkSession.emptyDataFrame
@@ -849,7 +793,7 @@ object Graph {
     * — the Pregel BFS step. Frontier and visited frames persist via
     * [[Caches]] (visited is re-read by every later round's anti-join);
     * bounded `maxHops` keeps plan depth fixed (an open-ended BFS would
-    * localCheckpoint per round like [[pagerankUntil]]). Both state frames
+    * run on [[Checkpoints.fixedPoint]] like [[pagerankUntil]]). Both state frames
     * are NODE-grain; when they broadcast, the edge list is never
     * reshuffled — each round is map-side edge⋈frontier + one node-grain
     * distinct + a broadcast anti-join. But frontier and visited GROW
@@ -977,13 +921,11 @@ object Graph {
     // (the big one, ≤ k×|E|) and the interior σ levels. hops, σ(maxHops)
     // (δ(maxHops) is a lazy select over it) and the δ levels stay — the
     // returned frame reads them lazily.
-    val freeable =
-      scala.collection.mutable.ListBuffer.empty[Option[org.apache.spark.rdd.RDD[_]]]
-    def cp(df: DataFrame): DataFrame =
-      Checkpoints.tracked(df, checkpointDir)._1
+    val freeable = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    def cp(df: DataFrame): DataFrame = Checkpoints.tracked(df, checkpointDir)
     def cpFreeable(df: DataFrame): DataFrame = {
-      val (out, h) = Checkpoints.tracked(df, checkpointDir)
-      freeable += h
+      val out = cp(df)
+      freeable += out
       out
     }
     // spread() deliberately NOT applied here or in the BFS family (r17):
@@ -1069,9 +1011,8 @@ object Graph {
     * is dominated by the edge-list derivation, not the rounds; the hint's
     * payoff is the per-round shuffle volume at scale (node-grain
     * aggregates only). No edge mutation, no accumulating state beyond the
-    * shrinking alive set (cached per round via [[Caches]]; an open-ended
-    * peel would checkpoint like the CC builder). GraphsSpec pins hinted ==
-    * unhinted.
+    * shrinking alive set (cached per round via [[Caches]]; the open-ended
+    * peel is [[kcoreUntil]]). GraphsSpec pins hinted == unhinted.
     */
   def kcore(edgesIn: DataFrame, k: Int, rounds: Int,
       broadcastMaxNodes: Long = 5000000L): DataFrame = {
@@ -1080,76 +1021,55 @@ object Graph {
     val edges = Caches.cache(spread(edgesIn.select(col("src"), col("dst"))))
     val hinted = nodeHint(edges, broadcastMaxNodes)
     var alive = Caches.cache(edges.select(col("src").as("node")).distinct())
-    for (_ <- 1 to rounds) {
-      alive = Caches.cache(edges
-        .join(hinted(alive.select(col("node").as("src"))), "src")
-        .join(hinted(alive.select(col("node").as("dst"))), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= k)
-        .select("node"))
-    }
+    for (_ <- 1 to rounds)
+      alive = Caches.cache(peelRound(edges, hinted, k)(alive))
+    aliveDegrees(edges, hinted, alive)
+  }
+
+  /** One synchronous peel: the alive nodes whose degree among alive nodes
+    * is at least `k`.
+    */
+  private def peelRound(edges: DataFrame, hinted: DataFrame => DataFrame,
+      k: Int)(alive: DataFrame): DataFrame =
+    aliveDegrees(edges, hinted, alive).filter(col("coredeg") >= k).select("node")
+
+  /** (node, coredeg): each alive node's degree among alive nodes. */
+  private def aliveDegrees(edges: DataFrame, hinted: DataFrame => DataFrame,
+      alive: DataFrame): DataFrame =
     edges
       .join(hinted(alive.select(col("node").as("src"))), "src")
       .join(hinted(alive.select(col("node").as("dst"))), "dst")
       .groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("coredeg"))
-  }
 
   /** Open-ended k-core peel — [[kcore]] run to FIXPOINT: synchronous
     * deg≥k rounds until a round removes nothing, returning (survivors
     * with their in-core degree, executed rounds). The converged result is
     * the true k-core (every survivor's degree among survivors is ≥ k —
     * GraphsSpec asserts it directly), where the bounded [[kcore]] unroll
-    * is a trajectory prefix.
+    * is a trajectory prefix. Reaching `maxRounds` is not an error: the
+    * survivors of the last round are returned.
     *
     * Scale shape: identical per-round plan to [[kcore]] (edges restricted
     * by two [[nodeHint]]-guarded node-grain semi-joins + one
     * map-side-combinable degree aggregate; the edge list is never
-    * reshuffled), but each round's alive set localCheckpoints — the
-    * [[pagerankUntil]]/CC discipline that keeps plan depth CONSTANT at
-    * unbounded round counts (a lazy unroll would nest the whole history
-    * into one plan and die in the optimizer long before the cluster
-    * notices) — and the previous round's blocks free as soon as the next
-    * lands. Convergence detection is one count per round, the same price
-    * [[pagerankUntil]] pays for its delta.
+    * reshuffled), run on [[Checkpoints.fixedPoint]]: each round's alive
+    * set is checkpointed, which keeps plan depth CONSTANT at unbounded
+    * round counts, and the previous round's blocks free as soon as the
+    * next lands. The alive set only shrinks, so one count per round
+    * detects the fixpoint.
     */
   def kcoreUntil(edgesIn: DataFrame, k: Int, maxRounds: Int = 100,
       broadcastMaxNodes: Long = 5000000L,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    def checkpointTracked(df: DataFrame) =
-      Checkpoints.tracked(df, checkpointDir)
     val edges = Caches.cache(spread(edgesIn.select(col("src"), col("dst"))))
     val hinted = nodeHint(edges, broadcastMaxNodes)
-    var (alive, aliveRdd) = checkpointTracked(
-      edges.select(col("src").as("node")).distinct())
-    var n = alive.count()
-    var rounds = 0
-    var shrunk = true
-    while (rounds < maxRounds && shrunk) {
-      val (next, nextRdd) = checkpointTracked(edges
-        .join(hinted(alive.select(col("node").as("src"))), "src")
-        .join(hinted(alive.select(col("node").as("dst"))), "dst")
-        .groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("dg"))
-        .filter(col("dg") >= k)
-        .select("node"))
-      val m = next.count()
-      shrunk = m < n
-      aliveRdd.foreach(_.unpersist(blocking = false))
-      alive = next
-      aliveRdd = nextRdd
-      n = m
-      rounds += 1
-    }
-    val out = edges
-      .join(hinted(alive.select(col("node").as("src"))), "src")
-      .join(hinted(alive.select(col("node").as("dst"))), "dst")
-      .groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("coredeg"))
-    (out, rounds)
+    val (alive, rounds, _) = Checkpoints.fixedPoint(
+        edges.select(col("src").as("node")).distinct(), maxRounds,
+        checkpointDir)(_.count())(_ == _)(peelRound(edges, hinted, k))
+    (aliveDegrees(edges, hinted, alive), rounds)
   }
 
   /** Neighborhood-Jaccard node similarity over a SYMMETRIC edge list

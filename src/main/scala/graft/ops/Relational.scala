@@ -43,7 +43,8 @@ object Relational {
   private val srcCsvRoundtrip = Q(
     "src_csv_roundtrip",
     (s, d) => {
-      val out = s"/root/repo/target/io/csv_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      val out = new java.io.File(Llm.shardRoot,
+        s"csv_${d.replaceAll("[^A-Za-z0-9]", "_")}").getAbsolutePath
       val sample = T.lineitem(s, d).filter(col("l_orderkey") % 100 === 0)
       sample.write.mode("overwrite").option("header", "true").csv(out)
       s.read.schema(sample.schema).option("header", "true").csv(out)
@@ -82,7 +83,8 @@ ORDER BY $liAllColsSql"""))
   private val srcJsonLines = Q(
     "src_json_lines",
     (s, d) => {
-      val out = s"/root/repo/target/io/json_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      val out = new java.io.File(Llm.shardRoot,
+        s"json_${d.replaceAll("[^A-Za-z0-9]", "_")}").getAbsolutePath
       val sample = T.events(s, d).filter(col("event_id") % 10 === 0)
         .select(col("event_id"), em(col("ts")).as("ts_us"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -677,7 +679,8 @@ GROUP BY 1 ORDER BY p_type"""))
   private val srcPartitionedScan = Q(
     "src_partitioned_scan",
     (s, d) => {
-      val out = s"/root/repo/target/io/part_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      val out = new java.io.File(Llm.shardRoot,
+        s"part_${d.replaceAll("[^A-Za-z0-9]", "_")}").getAbsolutePath
       T.events(s, d)
         .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
         .write.mode("overwrite").partitionBy("event_type").parquet(out)

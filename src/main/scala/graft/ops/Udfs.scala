@@ -240,13 +240,15 @@ FROM dec ORDER BY doc_id"""))
   /** Multimodal ingestion path: opaque media files on disk read through
     * Spark's `binaryFile` source (path/length/modificationTime metadata +
     * binary content column) — the layout a 100 TB media corpus lands in
-    * before any decode stage. Files are written once from the documents
-    * fixture (deterministic bytes); side-effecting → declared-only.
+    * before any decode stage. Files are written once per JVM from the
+    * documents fixture (deterministic bytes) under the per-JVM scratch
+    * root ([[Llm.shardRoot]]); side-effecting → declared-only.
     */
   private val srcBinaryFiles = Q(
     "src_binary_files",
     (s, d) => {
-      val dir = s"/root/repo/target/io/media_${d.replaceAll("[^A-Za-z0-9]", "_")}"
+      val dir = new java.io.File(Llm.shardRoot,
+        s"media_${d.replaceAll("[^A-Za-z0-9]", "_")}").getAbsolutePath
       val marker = java.nio.file.Paths.get(dir, "_graft_fixture_done")
       if (!java.nio.file.Files.exists(marker)) {
         // one-time fixture setup (same guarded-write pattern as

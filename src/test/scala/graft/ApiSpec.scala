@@ -185,8 +185,8 @@ class ApiSpec extends SparkSpec {
     val jobs = jobCounter.get()
     // the direct observable behind the job-count proxy below: pointer
     // doubling halves the label-chain depth per round, so the 1000-link
-    // chain closes in ~log2(1000)=10 rounds + the 2-round convergence-probe
-    // granularity — an O(diameter) propagation would need ~1000
+    // chain closes in ~log2(1000)=10 rounds + the one round that finds no
+    // change — an O(diameter) propagation would need ~1000
     assert(rounds <= 14, s"expected O(log n) CC rounds, ran $rounds")
     assert(Seq(1L, 2L, 3L).forall(comp(_) == 1L))
     assert(Seq(4L, 5L).forall(comp(_) == 4L))
@@ -206,6 +206,58 @@ class ApiSpec extends SparkSpec {
     intercept[IllegalStateException] {
       Dedup.connectedComponents(deep, maxIter = 1)
     }
+  }
+
+  test("connectedComponents handles ids near Long.MaxValue") {
+    import spark.implicits._
+    // 64-bit hashed doc ids: the label sum of even a 3-node chain exceeds
+    // a Long, so the convergence probe must not sum in Long arithmetic
+    val m = Long.MaxValue
+    val pairs = Seq((m - 1, m - 2), (m - 2, m - 3)).toDF("a_id", "b_id")
+    val comp = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    assert(comp == Map((m - 1) -> (m - 3), (m - 2) -> (m - 3), (m - 3) -> (m - 3)))
+  }
+
+  test("open-ended graph solvers free every superseded round") {
+    import spark.implicits._
+    import graft.api.{Caches, Graph}
+    def clean(): Unit = {
+      Caches.sweep(spark)
+      spark.catalog.clearCache()
+      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    }
+    def held = spark.sparkContext.getPersistentRDDs.size
+    // a chorded 8-ring with a 3-node tail: the tail peels one node per
+    // k-core round, and pagerank needs many rounds to settle
+    val g = sym((1L to 8L).map(i => (i, i % 8 + 1)) ++
+      Seq((1L, 5L), (8L, 9L), (9L, 10L), (10L, 11L)))
+    clean()
+    val (ranks, pr) = Graph.pagerankUntil(g, eps = 1e-9, maxIters = 30)
+    Caches.sweep(spark)
+    assert(pr > 2 && held <= 1,
+      s"pagerankUntil held $held RDDs after $pr rounds; only its result may stay")
+    assert(ranks.count() == 11)
+    clean()
+    val (core, kr) = Graph.kcoreUntil(g, k = 2)
+    Caches.sweep(spark)
+    assert(kr == 4 && held <= 1,
+      s"kcoreUntil held $held RDDs after $kr rounds; only its result may stay")
+    assert(core.select("node").as[Long].collect().toSet == (1L to 8L).toSet)
+    clean()
+    // cycle 1-4 feeding cycle 5-6, a source 7 and a sink 8
+    val directed = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L),
+      (5L, 6L), (6L, 5L), (7L, 1L), (6L, 8L)).toDF("src", "dst")
+    val (scc, st) = Graph.stronglyConnectedWithStats(directed)
+    Caches.sweep(spark)
+    // only the assigned frames (one per productive trim round, one per
+    // phase) back the result
+    assert(held <= st("trim_rounds") + st("phases"),
+      s"stronglyConnected held $held RDDs with stats $st")
+    assert(st("reach_rounds") > 1 && st("mark_rounds") > 1, s"stats $st")
+    assert(scc.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 5L,
+        7L -> 7L, 8L -> 8L))
+    clean()
   }
 
   test("Caches.sweep frees every block the pair builders persist") {
