@@ -1,4 +1,5 @@
 package graft
+import graft.api.Caches
 import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -129,15 +130,6 @@ object Bench {
     val quiesceTimedOut = loadAvg > 2.0
     val loadStart = loadAvg
     val failed = mutable.ListBuffer.empty[String]
-    // drop blocks persisted inside operators so runs stay independent and
-    // cold (cache build-up also degrades later queries via GC pressure);
-    // localCheckpoint blocks live in persistentRdds, not the SQL cache
-    // manager, and api builders register frames with Caches
-    def sweepAll(): Unit = {
-      graft.api.Caches.sweep(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
     // dev-loop subset (comma-separated key names); the driver sets no env →
     // full suite, and the emitted record still reports n_queries so a
     // subset run can never masquerade as a full one. Every requested key
@@ -167,9 +159,7 @@ object Bench {
       envPath.filterNot(p => new java.io.File(p).isFile).foreach(p =>
         System.err.println(s"[bench] baseline $p (SPARK_GRAFT_BENCH_BASELINE)" +
           " does not exist — suspect_load detection disabled this run"))
-      val path = envPath
-        .orElse(Seq("bench_baseline.json", "/root/repo/bench_baseline.json")
-          .find(p => new java.io.File(p).isFile))
+      val path = envPath.orElse(Some("bench_baseline.json"))
       path.filter(p => new java.io.File(p).isFile).map { p =>
         try {
           val root = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -226,7 +216,10 @@ object Bench {
       val t = System.nanoTime()
       graft.ops.Llm.deriveSessionArtifacts(spark, sfDir)
       graft.ops.Graphs.deriveSessionArtifacts(spark, sfDir)
-      sweepAll()
+      // here and between samples: drop the blocks operators persisted so
+      // runs stay independent and cold (cache build-up also degrades later
+      // queries via GC pressure)
+      Caches.sweepAll(spark)
       val sec = (System.nanoTime() - t) / 1e9
       System.err.println(f"[bench] setup: session artifacts derived in $sec%.1f s (unrecorded in per-key numbers)")
       sec
@@ -251,7 +244,7 @@ object Bench {
       if (warmed) {
         try { fn(spark, sfDir).queryExecution.toRdd.count() }
         catch { case _: Throwable => () } // measured runs will report it
-        sweepAll()
+        Caches.sweepAll(spark)
       }
       val gc0 = gcMs
       // per-query loadavg sample: a contention spike MID-run (the quiesce
@@ -292,7 +285,7 @@ object Bench {
       val run1 = (System.nanoTime() - t0) / 1e9
       sampleLoad()
       val gcSec = (gcMs - gc0) / 1000.0
-      sweepAll()
+      Caches.sweepAll(spark)
       // two more full fn()+execute samples (fresh plan each — re-running
       // the SAME QueryExecution's RDD would reuse its shuffle map outputs
       // and time only the final stage), caches swept between samples so
@@ -308,7 +301,7 @@ object Bench {
             Some(((System.nanoTime() - t) / 1e9, ld))
           } catch { case _: Throwable => failed += name; ok = false; None }
         sampleLoad()
-        sweepAll()
+        Caches.sweepAll(spark)
         r
       }
       val base = (run1, qLoad) +:
@@ -390,9 +383,9 @@ object Bench {
           fn(spark, sfDir).queryExecution.toRdd.count()
           val r = (System.nanoTime() - t) / 1e9
           sampleLoad()
-          sweepAll()
+          Caches.sweepAll(spark)
           Some(r)
-        } catch { case _: Throwable => sampleLoad(); sweepAll(); None }
+        } catch { case _: Throwable => sampleLoad(); Caches.sweepAll(spark); None }
       // the WHOLE round — wait AND samples — charges the shared budget
       // (r14 review: a change that legitimately regresses many keys >2x
       // would otherwise multiply quiet-host bench time without bound,
@@ -507,7 +500,7 @@ object Bench {
     // Full-suite runs only — a subset run would overwrite the round's
     // record with a partial map (the STRESS.json caveat).
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "/root/repo/BENCH_DETAIL.json")
+      "BENCH_DETAIL.json")
     if (only.isEmpty) {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(detailPath),
@@ -533,7 +526,7 @@ object Bench {
     // summary with a partial total. Additions only — nothing about the
     // timing or the stdout lines above changes.
     val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY",
-      "/root/repo/BENCH_SUMMARY.json")
+      "BENCH_SUMMARY.json")
     if (only.isEmpty) {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(summaryPath),

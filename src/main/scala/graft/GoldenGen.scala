@@ -76,9 +76,7 @@ object GoldenGen {
     spark.sparkContext.setLogLevel("WARN")
     val entries = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val (rows, hash) = fingerprint(fn(spark, sfDir))
-      graft.api.Caches.sweep(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.api.Caches.sweepAll(spark)
       System.err.println(s"[golden] $name rows=$rows $hash")
       s"""  "$name": {"rows": $rows, "hash": "$hash"}"""
     }

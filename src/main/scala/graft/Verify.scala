@@ -29,12 +29,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // blocks persisted inside operators must not accumulate across the
-      // 90+ query loop (a memory bomb at bigger verify scales); local
-      // checkpoints live in persistentRdds, outside the SQL cache manager,
-      // and the api builders register their frames with Caches
-      graft.api.Caches.sweep(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // 90+ query loop (a memory bomb at bigger verify scales)
+      graft.api.Caches.sweepAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

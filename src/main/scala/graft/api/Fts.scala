@@ -105,23 +105,21 @@ object Fts {
     * volume-weighted price percentile `percentile()` can't express).
     * Output: keyCol, wp50, wp90, total_weight.
     *
-    * Scale shape — NO window partitioned on the (possibly low-cardinality)
-    * key alone, which would funnel every distinct value of a key through
-    * one reducer: the raw frame pre-aggregates to one row per (key,
-    * DISTINCT value) map-side; per-key totals and value bounds come from a
-    * tiny aggregate broadcast back; values bucket by EQUI-DEPTH
-    * approx-percentile cuts (r15 — see [[equiDepthBucketed]]; a linear
-    * range split collapsed heavy-tailed domains); per-bucket partial sums (keys × buckets rows) turn into
-    * exclusive offsets via a triangular self-join over that tiny frame; and
-    * the only window partitions on (key, bucket) — reducer input is
-    * corpus/buckets, tunable, not corpus/|keys|. The cumulative order is
-    * tie-free (value is unique within a key after the pre-aggregate), and
-    * for integer-valued weights (≪2^53) every sum is exact in any
-    * association order, so the two-stage addition is bit-identical to a
-    * single-pass prefix sum. The p-thresholds multiply instead of divide
-    * (cw·2 ≥ tw, cw·10 ≥ tw·9): pure integer arithmetic, no float rounding
-    * to diverge between engines; min(CASE WHEN qualifies) picks the
-    * crossing value without a second window pass.
+    * Scale shape — NO window over a fact-sized partition of the (possibly
+    * low-cardinality) key, which would funnel every distinct value of a
+    * key through one reducer: the raw frame pre-aggregates to one row per
+    * (key, DISTINCT value) map-side; per-key totals come from a tiny
+    * aggregate broadcast back; values bucket by equi-depth cuts (see
+    * [[equiDepthBucketed]]); and the cumulative weight is the shared
+    * two-stage prefix sum ([[prefixSums]]), whose only windows see at
+    * most `buckets` rows per key (offsets) or one (key, bucket) slice.
+    * The cumulative order is tie-free (value is unique within a key after
+    * the pre-aggregate), and for integer-valued weights (≪2^53) every sum
+    * is exact in any association order, so the two-stage addition is
+    * bit-identical to a single-pass prefix sum. The p-thresholds multiply
+    * instead of divide (cw·2 ≥ tw, cw·10 ≥ tw·9): pure integer arithmetic,
+    * no float rounding to diverge between engines; min(CASE WHEN
+    * qualifies) picks the crossing value without a second window pass.
     */
   def weightedPercentiles(df: DataFrame, keyCol: String, valueCol: String,
       weightCol: String, buckets: Int = 32): DataFrame =
@@ -212,12 +210,20 @@ object Fts {
       .agg(percentile_approx(col(valueCol).cast("double"),
         typedLit(fracs), lit(1000)).as("cuts"))
     pre.join(broadcast(cuts), Seq(keyCol))
-      .withColumn("bucket",
-        aggregate(col("cuts"), lit(0L),
-          (acc, c) => acc +
-            when(col(valueCol).cast("double") > c, 1L).otherwise(0L)))
+      .withColumn("bucket", bucketOf(col(valueCol), col("cuts")))
       .drop("cuts")
   }
+
+  /** A value's bucket: the count of cuts strictly below it. Null cuts (a
+    * key whose values are all null — `percentile_approx` ignores nulls)
+    * and null values both land in bucket 0, so such rows stay in the
+    * result instead of vanishing at the offsets join; bucket 0 is the
+    * lowest bucket and nulls sort first, so monotonicity holds.
+    */
+  private def bucketOf(value: Column, cuts: Column): Column =
+    coalesce(aggregate(cuts, lit(0L),
+      (acc, c) => acc + when(value.cast("double") > c, 1L).otherwise(0L)),
+      lit(0L))
 
   /** ONE driver-bounded equi-depth cuts derivation (r16, the r15 verdict's
     * shared-cuts ask): ≤ `buckets−1` approx-percentile cut points over
@@ -247,10 +253,7 @@ object Fts {
     */
   private def literalCutsBucketed(pre: DataFrame, valueCol: String,
       cuts: Seq[Double]): DataFrame =
-    pre.withColumn("bucket",
-      aggregate(typedLit(cuts), lit(0L),
-        (acc, c) => acc +
-          when(col(valueCol).cast("double") > c, 1L).otherwise(0L)))
+    pre.withColumn("bucket", bucketOf(col(valueCol), typedLit(cuts)))
 
   /** The equi-depth machinery buckets by `cast(valueCol as double)`, which
     * is monotone w.r.t. the column's native ordering ONLY for numeric
@@ -278,12 +281,12 @@ object Fts {
     * (key, bucket), so reducer input is |distinct values|/buckets.
     *
     * All arithmetic stays in LONG (weights must be integer-valued and
-    * totals < 2⁶³): per-bucket partials, the triangular-offset join over
-    * the tiny (keys × buckets) frame, and the within-bucket running sums
-    * are exact in any association order — `cum1`/`cum2` are bit-identical
-    * to a single-pass ordered prefix sum, so consumers keep their oracle
-    * hashes when they swap in this form. Both running sums share ONE
-    * window spec (one WindowExec, one sort).
+    * totals < 2⁶³): per-bucket partials, the exclusive offsets over the
+    * tiny (keys × buckets) frame, and the within-bucket running sums
+    * ([[prefixSums]]) are exact in any association order — `cum1`/`cum2`
+    * are bit-identical to a single-pass ordered prefix sum, so consumers
+    * keep their oracle hashes when they swap in this form. Both running
+    * sums share ONE window spec (one WindowExec, one sort).
     */
   def cumulativeCounts2(df: DataFrame, keyCol: String, valueCol: String,
       w1: Column, w2: Column, buckets: Int = 32): DataFrame =
@@ -329,29 +332,41 @@ object Fts {
       case Some(cs) => literalCutsBucketed(pre, valueCol, cs)
       case None     => equiDepthBucketed(pre, keyCol, valueCol, buckets)
     }
-    // exclusive per-bucket offsets as ONE bounded window pass over the
-    // (keys × buckets) frame (r18, the r17 verdict's constant-factor ask):
-    // the r14–r17 form was a triangular self-join + second hash aggregate,
-    // which consumed `bw` twice and re-expanded the bucketed subtree per
-    // consumer — ~3 extra small stages on every rider of this machinery.
-    // The window partitions on the KEY with ≤ `buckets` rows per key (a
-    // CONSTANT, never data-sized — the same bounded-partition class as the
-    // tie-run windows), so no reducer ever sees more than `buckets` rows.
-    // Exact-LONG running sums in bucket order produce the identical
-    // offsets the join form summed in hash order — bit-identical.
-    val bw = bucketed.groupBy(keyCol, "bucket")
-      .agg(sum(col("c1")).as("b1"), sum(col("c2")).as("b2"))
-    val wOff = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bw.select(col(keyCol), col("bucket"),
-      coalesce(sum(col("b1")).over(wOff), lit(0L)).as("off1"),
-      coalesce(sum(col("b2")).over(wOff), lit(0L)).as("off2"))
-    val w = Window.partitionBy(col(keyCol), col("bucket")).orderBy(valueCol)
-    bucketed.join(broadcast(offsets), Seq(keyCol, "bucket"))
-      .withColumn("cum1", col("off1") + sum(col("c1")).over(w))
-      .withColumn("cum2", col("off2") + sum(col("c2")).over(w))
+    prefixSums(bucketed, keyCol, valueCol, Seq("c1" -> "cum1", "c2" -> "cum2"))
       .select(col(keyCol), col(valueCol), col("c1"), col("c2"),
         col("cum1"), col("cum2"))
+  }
+
+  /** The two-stage prefix-sum tail every rider of this module shares:
+    * over a bucketed `(key, value, bucket, …)` frame, adds for each
+    * `sumCol -> cumCol` pair the INCLUSIVE running sum of `sumCol` over
+    * the values ≤ this one within the key, as `off + within-bucket sum`:
+    *   - per-(key, bucket) partial sums — at most `buckets` rows per key;
+    *   - the exclusive offsets: ONE window over that aggregate,
+    *     partitioned on the key alone but bounded by construction (its
+    *     input never holds more than `buckets` rows per key);
+    *   - the offsets broadcast back onto the bucketed rows;
+    *   - the within-bucket running sums, all over ONE
+    *     (key, bucket)-partitioned window spec (one WindowExec, one sort).
+    * Exact for LONG sums and for integer-valued double sums (≪2^53) in
+    * any association order, so `cumCol` is bit-identical to a single-pass
+    * value-ordered prefix sum.
+    */
+  private def prefixSums(bucketed: DataFrame, keyCol: String,
+      valueCol: String, sums: Seq[(String, String)]): DataFrame = {
+    val partials = sums.map { case (s, _) => sum(col(s)).as(s"b_$s") }
+    val bw = bucketed.groupBy(keyCol, "bucket")
+      .agg(partials.head, partials.tail: _*)
+    val wOff = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = bw.select(col(keyCol) +: col("bucket") +: sums.map {
+      case (s, _) => coalesce(sum(col(s"b_$s")).over(wOff), lit(0)).as(s"off_$s")
+    }: _*)
+    val w = Window.partitionBy(col(keyCol), col("bucket")).orderBy(valueCol)
+    sums.foldLeft(bucketed.join(broadcast(offsets), Seq(keyCol, "bucket"))) {
+      case (df, (s, cum)) =>
+        df.withColumn(cum, col(s"off_$s") + sum(col(s)).over(w))
+    }
   }
 
   /** The shared core of the weighted-percentile / rank-cutoff family: one
@@ -380,20 +395,7 @@ object Fts {
     val stats = pre.groupBy(keyCol).agg(sum(col("w")).as("tw"))
     val bucketed = equiDepthBucketed(pre, keyCol, valueCol, buckets)
       .join(broadcast(stats), Seq(keyCol))
-    // same bounded-window offsets as [[cumulativeCounts2Pre]] (r18): ≤
-    // `buckets` rows per key through the window, one pass instead of the
-    // triangular join + re-aggregate. Bit-exactness rests on the SAME
-    // precondition the method already documents — integer-valued weights,
-    // where double addition is exact in any association order (the join
-    // form summed in hash order, also unordered).
-    val bw = bucketed.groupBy(keyCol, "bucket").agg(sum(col("w")).as("bw"))
-    val wOff = Window.partitionBy(col(keyCol)).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = bw.select(col(keyCol), col("bucket"),
-      coalesce(sum(col("bw")).over(wOff), lit(0.0)).as("off"))
-    bucketed.join(broadcast(offsets), Seq(keyCol, "bucket"))
-      .withColumn("cw", col("off") + sum(col("w")).over(
-        Window.partitionBy(col(keyCol), col("bucket")).orderBy(valueCol)))
+    prefixSums(bucketed, keyCol, valueCol, Seq("w" -> "cw"))
       .select(col(keyCol), col(valueCol), col("w"), col("tw"), col("cw"))
   }
 }

@@ -971,19 +971,20 @@ ORDER BY ap.event_type, ap.dn"""))
     * price ordering — exact integer comparisons, no float exposure
     * anywhere (price enters as cents).
     *
-    * Scale shape (r15, the r14 verdict's dimension-grain-sort ask): the
-    * strictly-cheaper running max rides the two-stage bucketed pattern
-    * instead of a global RANGE window over the part dim — the frame
-    * collapses to DISTINCT-PRICE grain first (one hash agg: per price its
-    * max size = the old tie window for free), prices equi-depth-bucket
-    * ([[graft.api.Fts.equiDepthBucketed]]), prior-bucket maxima arrive by
-    * the triangular join over the tiny bucket frame, and the only window
-    * is the within-bucket EXCLUSIVE running max at distinct-price grain
-    * (`greatest` skips nulls, so bucket heads and the global minimum keep
-    * the no-cheaper-part NULL semantics). Pure integer max algebra — max
-    * is associative/commutative, so the split is exactly the global
-    * exclusive max and the outputs are bit-identical (oracle unchanged,
-    * still the single-window form: fixture-scale DuckDB).
+    * Scale shape: the strictly-cheaper running max rides the two-stage
+    * bucketed pattern instead of a global RANGE window over the part dim
+    * — the frame collapses to DISTINCT-PRICE grain first (one hash agg:
+    * per price its max size = the tie window for free), prices
+    * equi-depth-bucket ([[graft.api.Fts.equiDepthBucketed]]), prior-bucket
+    * maxima are an exclusive running max over the ≤ 32-row bucket
+    * aggregate (an unpartitioned window, bounded by its input), and the
+    * only fact-side window is the within-bucket EXCLUSIVE running max at
+    * distinct-price grain (`greatest` skips nulls, so bucket heads and
+    * the global minimum keep the no-cheaper-part NULL semantics). Pure
+    * integer max algebra — max is associative/commutative, so the split
+    * is exactly the global exclusive max and the outputs are
+    * bit-identical (oracle unchanged, still the single-window form:
+    * fixture-scale DuckDB).
     */
   private val winSkyline = Q(
     "win_skyline",
@@ -996,11 +997,9 @@ ORDER BY ap.event_type, ap.dn"""))
         .agg(max(col("p_size")).as("max_tie"))
         .withColumn("gk", lit(0))
       val b = graft.api.Fts.equiDepthBucketed(grp, "gk", "price_c", 32)
-      val bmax = b.groupBy("bucket").agg(max(col("max_tie")).as("bm"))
-      val prior = bmax.select(col("bucket").as("bk2"), col("bm"))
-      val offs = bmax.select("bucket")
-        .join(prior, col("bk2") < col("bucket"), "left")
-        .groupBy("bucket").agg(max(col("bm")).as("off"))
+      val offs = b.groupBy("bucket").agg(max(col("max_tie")).as("bm"))
+        .select(col("bucket"), max(col("bm")).over(Window.orderBy("bucket")
+          .rowsBetween(Window.unboundedPreceding, -1)).as("off"))
       val wIn = Window.partitionBy("bucket").orderBy("price_c")
         .rowsBetween(Window.unboundedPreceding, -1)
       val cheaper = b.join(broadcast(offs), "bucket")

@@ -2024,6 +2024,40 @@ class ApiSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("a key whose values are all null keeps its rows on every prefix-sum path") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // percentile_approx yields NULL cuts for an all-null key; its rows must
+    // land in bucket 0 like on the literal-cuts path, not drop out at the
+    // offsets join
+    val rows = Seq[(String, Option[Long])](("a", Some(1L)), ("a", Some(2L)),
+      ("a", Some(3L)), ("b", None), ("b", None), ("c", Some(5L)), ("c", None))
+      .toDF("k", "v")
+    def collected(df: org.apache.spark.sql.DataFrame) = df.orderBy("k", "v")
+      .select("k", "v", "c1", "c2", "cum1", "cum2")
+      .as[(String, Option[Long], Long, Long, Long, Long)].collect().toSeq
+    val perKey = collected(
+      Fts.cumulativeCounts2(rows, "k", "v", lit(1L), lit(0L)))
+    val literal = collected(Fts.cumulativeCounts2(rows, "k", "v", lit(1L),
+      lit(0L), 32, Some(Fts.equiDepthCuts(rows, "v"))))
+    val w = Window.partitionBy("k").orderBy("v")
+    val plain = collected(rows.groupBy("k", "v")
+      .agg(sum(lit(1L)).as("c1"), sum(lit(0L)).as("c2"))
+      .withColumn("cum1", sum("c1").over(w))
+      .withColumn("cum2", sum("c2").over(w)))
+    assert(plain.contains(("b", None, 2L, 0L, 2L, 0L)), plain)
+    assert(perKey == plain, s"per-key cuts: $perKey vs $plain")
+    assert(literal == plain, s"literal cuts: $literal vs $plain")
+    val weighted = rows.withColumn("w", lit(1.0))
+    val cw = Fts.cumulativeWeights(weighted, "k", "v", "w")
+      .filter(col("k") === "b").select("cw").as[Double].collect().toSeq
+    assert(cw == Seq(2.0), s"cumulativeWeights for b: $cw")
+    val tw = Fts.weightedPercentiles(weighted, "k", "v", "w")
+      .filter(col("k") === "b").select("total_weight").as[Double].collect().toSeq
+    assert(tw == Seq(2.0), s"weightedPercentiles for b: $tw")
+    graft.api.Caches.sweep(spark)
+  }
+
   test("artifact GC: a parameter change leaves an enumerable stale sibling; dropArtifacts sweeps it") {
     import spark.implicits._
     val dirA = "/tmp/graft_gc_fixture_a"

@@ -29,10 +29,7 @@ class GoldenSpec extends SparkSpec {
       val (rows, hash) = GoldenGen.fingerprint(q(name))
       // operators persist/checkpoint internally; don't let blocks pile up
       // across the ~100-query sweep
-      graft.api.Caches.sweep(spark)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      graft.api.Caches.sweepAll(spark)
       assert(rows > 0, s"$name returned 0 rows")
       val (gRows, gHash) = golden.getOrElse(name,
         fail(s"$name missing from ${GoldenGen.goldenPath} — regenerate via " +

@@ -1,13 +1,31 @@
 package graft
 
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, InputAdapter, ProjectExec, SortExec, SparkPlan, TakeOrderedAndProjectExec, WholeStageCodegenExec}
 
 /** Plan-quality assertions: the physical plans must have the shape that
   * survives a 100 TB scale-up — pushdown reaching the parquet scan, pruned
   * read schemas, broadcast dims, partition pruning, two-stage top-k
   * (SURVEY.md §4).
+  *
+  * The WINDOW SCALE RULE guards every key that rides the shared two-stage
+  * prefix sum, given the key's coarse key columns (a handful of distinct
+  * values, or a constant). A `WindowExec` violates it iff both hold:
+  *   - its partition columns are a subset of the coarse columns (an empty
+  *     partition counts), so all rows of one coarse value meet in one
+  *     reducer;
+  *   - its input is not a bounded aggregate: looking through sorts,
+  *     exchanges, AQE reads and stages, projections and codegen wrappers,
+  *     the nearest operator is not an aggregate grouped on `bucket`
+  *     (≤ `buckets` rows per key) or `decile` (10 rows).
+  * The walk enters cached plans (`InMemoryTableScanExec`), which
+  * `collectWithSubqueries` alone does not.
   */
 class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -16,6 +34,25 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def scans(p: SparkPlan): Seq[FileSourceScanExec] =
     collectWithSubqueries(p) { case s: FileSourceScanExec => s }
+
+  private def windows(p: SparkPlan): Seq[WindowExec] =
+    collectWithSubqueries(p) {
+      case w: WindowExec => Seq(w)
+      case m: InMemoryTableScanExec => windows(m.relation.cachedPlan)
+    }.flatten
+
+  private def boundedInput(p: SparkPlan): Boolean = p match {
+    case a: BaseAggregateExec =>
+      a.groupingExpressions.exists(e => e.name == "bucket" || e.name == "decile")
+    case _: SortExec | _: Exchange | _: AQEShuffleReadExec | _: ProjectExec |
+        _: WholeStageCodegenExec | _: InputAdapter => boundedInput(p.children.head)
+    case s: QueryStageExec => boundedInput(s.plan)
+    case _ => false
+  }
+
+  private def violates(coarse: Set[String])(w: WindowExec): Boolean =
+    w.partitionSpec.forall(_.references.forall(a => coarse(a.name))) &&
+      !boundedInput(w.child)
 
   test("filt_conjunctive pushes predicates into the parquet scan") {
     val sc = scans(plan("filt_conjunctive"))
@@ -256,7 +293,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("hot per-row paths run inside whole-stage codegen") {
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
     // the flagship aggregate, the pure per-row corpus filters, and the
     // custom-expression paths (vec_dot / bits_hamming) must all plan
     // WholeStageCodegen spans — an interpreted fragment here multiplies
@@ -269,13 +305,11 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         case w: WholeStageCodegenExec => w
       }
       assert(spans.nonEmpty, s"$name has no WholeStageCodegen span:\n${qe.executedPlan}")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.api.Caches.sweepAll(spark)
     }
   }
 
   test("cell assignment plans as ONE codegen'd argmax projection (no join, no struct array)") {
-    import org.apache.spark.sql.execution.WholeStageCodegenExec
     import org.apache.spark.sql.functions._
     // the k-means scoring pass is the whole-corpus hot loop of the ANN /
     // semdedup stack: it must stay a shuffle-free projection whose argmax
@@ -299,168 +333,79 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
     assert(shuffles.isEmpty,
       s"cell assignment must be a pure per-row map, found shuffle:\n$plan")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    graft.api.Caches.sweepAll(spark)
   }
 
-  test("agg_weighted_percentile never windows on the flag alone") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // partitionBy(l_returnflag) — 3 distinct values — funnels every distinct
-    // price of a flag through one reducer at scale; the two-stage prefix sum
-    // must leave only windows keyed on (flag, bucket)
-    val p = plan("agg_weighted_percentile")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"within-bucket cumulative sum should still be a window:\n$p")
-    val bad = wins.filter(_.partitionSpec.size < 2)
-    assert(bad.isEmpty,
-      s"every window must partition on (flag, bucket), not the flag alone:\n$p")
-  }
+  // every registry key riding the shared two-stage prefix sum
+  // (graft.api.Fts' bucketed prefix sums and equi-depth buckets), with the
+  // coarse key column(s) it sums under
+  private val prefixSumRiders: Seq[(String, Set[String])] = Seq(
+    "agg_weighted_percentile" -> Set("l_returnflag"),
+    "agg_quantile_normalize" -> Set("flag", "gk"),
+    "agg_ks_test" -> Set("gk"),
+    "agg_mann_whitney" -> Set("gk"),
+    "agg_spearman" -> Set("flag"),
+    "agg_trimmed_mean" -> Set("flag"),
+    "agg_winsorized_mean" -> Set("flag"),
+    "agg_hhi_gini" -> Set("g"),
+    "llm_vocab_growth" -> Set("gk"),
+    "llm_auc_roc" -> Set("gk"),
+    "llm_lift_gains" -> Set("gk"),
+    "win_pareto_abc" -> Set("gk"),
+    "win_skyline" -> Set("gk"),
+    "win_ntile" -> Set("g"),
+    "win_ntile_scalable" -> Set("g"),
+    "win_interval_sweep" -> Set("g"),
+    "win_first_last_pctrank" -> Set("event_type"))
 
-  test("agg_quantile_normalize windows only on (key, bucket) — no fact-grain sort") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the r13 form ran count().over(Window.partitionBy()) + a GLOBAL
-    // row_number over raw lineitem rows — the repo's last single-reducer
-    // fact-grain window; the two-stage cumulativeCounts2 rewrite must leave
-    // only (key, bucket)-partitioned within-bucket running sums
-    // a CONSTANT grouping key (the global side's gk literal) is
-    // constant-folded out of the spec, so the invariant is "every window
-    // partitions on the bucket column", not a spec arity
-    val p = plan("agg_quantile_normalize")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the within-bucket cumulative windows:\n$p")
-    val bad = wins.filterNot(_.partitionSpec.exists(_.toString.contains("bucket")))
-    assert(bad.isEmpty,
-      s"every window must partition on the bucket column — found a coarser one:\n$p")
-    // r16 (the r15 verdict's shared-cuts ask): both cumulativeCounts2
-    // passes bucket by ONE driver-derived literal cut array — the executed
-    // plan must contain NO per-call percentile aggregate at all
-    assert(!p.toString.contains("percentile_approx"),
-      s"equi-depth cuts must arrive as literals (one shared sketch), not a per-call aggregate:\n$p")
-  }
-
-  test("agg_ks_test windows only on (key, bucket) — no unpartitioned ECDF sort") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val p = plan("agg_ks_test")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the within-bucket cumulative window:\n$p")
-    val bad = wins.filterNot(_.partitionSpec.exists(_.toString.contains("bucket")))
-    assert(bad.isEmpty,
-      s"every window must partition on the bucket column:\n$p")
-  }
-
-  test("agg_mann_whitney windows only on (key, bucket) — no unpartitioned rank sort") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val p = plan("agg_mann_whitney")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the within-bucket cumulative window:\n$p")
-    val bad = wins.filterNot(_.partitionSpec.exists(_.toString.contains("bucket")))
-    assert(bad.isEmpty,
-      s"every window must partition on the bucket column:\n$p")
-  }
-
-  test("llm_vocab_growth windows only on (key, bucket) — no doc-grain global prefix sum") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the r14 form ran an unpartitioned cumulative window over DOC grain
-    // (the LLM pipeline's fact table through one reducer); the r15
-    // two-stage form may only window within (key, bucket)
-    val p = plan("llm_vocab_growth")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the within-bucket cumulative window:\n$p")
-    val bad = wins.filterNot(_.partitionSpec.exists(_.toString.contains("bucket")))
-    assert(bad.isEmpty, s"every window must partition on the bucket column:\n$p")
-  }
-
-  test("llm_auc_roc windows only on (key, bucket) — unbounded-score ECDF shape") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val p = plan("llm_auc_roc")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the within-bucket cumulative window:\n$p")
-    val bad = wins.filterNot(_.partitionSpec.exists(_.toString.contains("bucket")))
-    assert(bad.isEmpty, s"every window must partition on the bucket column:\n$p")
-  }
-
-  test("llm_lift_gains has no unpartitioned window — decile from two-stage ranks") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the r14 form was a global ntile(10) over doc grain; r15 rebuilds the
-    // identical deciles from cumulativeCounts2 ranks + a tie-group
-    // row_number (partitioned by score) + the decile-grain presentation
-    // cumulative (10 rows, partitioned is not required there — pin grain
-    // instead: every window must carry SOME partition spec except the
-    // decile-grain one, which orders on the 10-row decile column)
-    val p = plan("llm_lift_gains")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected tie-group and bucket windows:\n$p")
-    val global = wins.filter(_.partitionSpec.isEmpty)
-    // the only unpartitioned window allowed is the decile-grain cum_pos
-    // (10 input rows by construction)
-    assert(global.forall(_.orderSpec.exists(_.toString.contains("decile"))),
-      s"no doc-grain window may be unpartitioned:\n$p")
-  }
-
-  test("win_pareto_abc has no unpartitioned window — cumulative from two-stage ranks") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the r14 form was a global (rev DESC, partkey) running sum over the
-    // part dimension; r15 rebuilds the identical cumulative from
-    // cumulativeCounts2 + a tie-group row_number — every window must
-    // carry a partition spec (bucket or the tie value)
-    val p = plan("win_pareto_abc")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the bucket/tie windows:\n$p")
-    val global = wins.filter(_.partitionSpec.isEmpty)
-    assert(global.isEmpty, s"no window may be unpartitioned:\n$p")
-  }
-
-  test("win_skyline has no unpartitioned window — exclusive max from two-stage buckets") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    val p = plan("win_skyline")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the within-bucket exclusive max:\n$p")
-    val global = wins.filter(_.partitionSpec.isEmpty)
-    assert(global.isEmpty, s"no window may be unpartitioned:\n$p")
-  }
-
-  test("win_ntile_scalable has no global (single-reducer) window") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the whole point of the scalable twin: quartiles WITHOUT an
-    // unpartitioned window (the pre-r16 win_ntile shape, which moved every
-    // row to one reducer); the only windows allowed are the
-    // bucket-partitioned within-bucket cumulative sums
-    val wins = collectWithSubqueries(plan("win_ntile_scalable")) {
-      case w: WindowExec => w
+  prefixSumRiders.foreach { case (key, coarse) =>
+    test(s"$key passes the window scale rule") {
+      val p = plan(key)
+      val ws = windows(p)
+      graft.api.Caches.sweepAll(spark)
+      assert(ws.nonEmpty, s"$key: expected its prefix-sum windows:\n$p")
+      val bad = ws.filter(violates(coarse))
+      assert(bad.isEmpty,
+        s"$key: window over an unbounded coarse partition:\n${bad.mkString("\n")}")
     }
-    assert(wins.nonEmpty, "expected the within-bucket cumulative window")
-    val global = wins.filter(_.partitionSpec.isEmpty)
-    assert(global.isEmpty,
-      s"no window may be unpartitioned:\n${plan("win_ntile_scalable")}")
   }
 
-  test("agg_hhi_gini has no global window (r16) — gini ranks from two-stage cumulative") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the supplier-dimension global rank was the same shape win_ntile
-    // dropped: at 100x the dim is ~10^7 rows through one reducer; the
-    // rank now regenerates from cumulativeWeights + a tie-run row_number
-    val p = plan("agg_hhi_gini")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the bucket/tie-run windows:\n$p")
-    val global = wins.filter(_.partitionSpec.isEmpty)
-    assert(global.isEmpty, s"no window may be unpartitioned:\n$p")
+  test("agg_quantile_normalize buckets by one shared literal cut array") {
+    // both prefix-sum passes take the one equiDepthCuts array as literals: the
+    // plan holds no per-call percentile aggregate at all
+    val p = plan("agg_quantile_normalize")
+    graft.api.Caches.sweepAll(spark)
+    assert(!p.toString.contains("percentile_approx"),
+      s"equi-depth cuts must arrive as literals, not a per-call aggregate:\n$p")
   }
 
-  test("win_ntile has no global window either (r16) — positional ntile from two-stage ranks") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // through r15 this key was the repo's one deliberate single-reducer
-    // window (real ntile over the customer dim); the r16 rank-regeneration
-    // form keeps the ntile oracle bit-for-bit while every window carries a
-    // partition spec (bucket, or the tied value)
-    val p = plan("win_ntile")
-    val wins = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(wins.nonEmpty, s"expected the bucket/tie-run windows:\n$p")
-    val global = wins.filter(_.partitionSpec.isEmpty)
-    assert(global.isEmpty, s"no window may be unpartitioned:\n$p")
+  private def planted(w: WindowSpec) = graft.ops.T.lineitem(spark, sf)
+    .withColumn("cum", org.apache.spark.sql.functions.sum("l_quantity").over(w))
+
+  private val byFlag = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
+
+  private def assertReported(p: SparkPlan): Unit =
+    assert(windows(p).exists(violates(Set("l_returnflag"))),
+      s"the window scale rule missed a planted violation:\n$p")
+
+  test("the window scale rule reports a planted fact-grain window on the flag") {
+    assertReported(planted(byFlag).queryExecution.executedPlan)
+  }
+
+  test("the window scale rule reports a planted unpartitioned fact-grain window") {
+    assertReported(planted(Window.orderBy("l_extendedprice")).queryExecution.executedPlan)
+  }
+
+  test("the window scale rule reports a planted window behind Caches.cache") {
+    val p = graft.api.Caches.cache(planted(byFlag))
+      .groupBy("l_returnflag").count().queryExecution.executedPlan
+    graft.api.Caches.sweepAll(spark)
+    assert(collectWithSubqueries(p) { case w: WindowExec => w }.isEmpty,
+      s"the planted window must be reachable only through the cache:\n$p")
+    assertReported(p)
   }
 
   test("llm_char_entropy plans as pure explode + hash aggregates (no window, no join)") {
-    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec => BJ}
     // the garbage detector must stay shuffle-minimal at corpus scale: one
     // (id, char) hash agg (map-side combine collapses each partition to the
@@ -473,7 +418,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("llm_unigram_lm_ppl computes tf once and joins the model by equi-join") {
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     // tf feeds BOTH the vocab LM derivation and the per-doc score join — it
     // must come from the shared cache, not two token explodes; the only
@@ -490,7 +434,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("llm_bigram_lm_ppl computes gram tf once and joins the model by equi-join") {
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     // the cached-tf discipline of the unigram twin: one gram explode feeding
     // BOTH the LM derivation and the per-doc score join via the cache — and
@@ -534,7 +477,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("llm_chunk_stride plans with no shuffle, no join, no window") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec => BJ}
     // the chunker's whole scale claim: per-row projection + one generator
     // explode from the closed-form chunk count — a shuffle, join, or window
@@ -571,7 +513,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("llm_random_projection plans shuffle-free (pure per-row projection)") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.{BaseJoinExec => BJ}
     // the direction matrix is a compiled literal and every coordinate one
     // codegen'd vec_dot: any shuffle/join/window before the harness orderBy
@@ -629,7 +570,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("graph_pagerank reads cached edges/degrees, never a cartesian") {
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     // the iteration loop must ride the ONE cached edge list + degree frame
     // (5 reads each), not re-derive orders ⋈ lineitem per round; and every
@@ -649,7 +589,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("win_funnel plans with no window and no corpus-sized join") {
-    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.CartesianProductExec
     // the ordered-funnel semantics ride min-after-threshold aggregates —
     // a Window or cartesian anywhere means the per-user sort came back
@@ -660,20 +599,7 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"no cartesian product allowed:\n$p")
   }
 
-  test("win_interval_sweep never plans a globally-unpartitioned window") {
-    import org.apache.spark.sql.execution.window.WindowExec
-    // the whole point of the two-stage prefix sum: every WindowExec must
-    // carry partition expressions ((g, bucket)) — an empty partitionSpec
-    // is the single-reducer global running sum the operator exists to avoid
-    val p = plan("win_interval_sweep")
-    val ws = collectWithSubqueries(p) { case w: WindowExec => w }
-    assert(ws.nonEmpty, s"expected the bucketed prefix-sum window:\n$p")
-    ws.foreach(w => assert(w.partitionSpec.nonEmpty,
-      s"found a global (unpartitioned) window:\n$w"))
-  }
-
   test("win_zscore_anomaly is one user-partitioned window pass") {
-    import org.apache.spark.sql.execution.window.WindowExec
     val p = plan("win_zscore_anomaly")
     val ws = collectWithSubqueries(p) { case w: WindowExec => w }
     assert(ws.size === 1, s"expected exactly one WindowExec:\n$p")
@@ -717,7 +643,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("win_rolling_median is one user-partitioned window pass") {
-    import org.apache.spark.sql.execution.window.WindowExec
     val p = plan("win_rolling_median")
     val ws = collectWithSubqueries(p) { case w: WindowExec => w }
     assert(ws.size === 1, s"expected exactly one WindowExec:\n$p")
@@ -743,7 +668,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("win_ewma is one user-partitioned window pass, no joins") {
-    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val p = plan("win_ewma")
     val ws = collectWithSubqueries(p) { case w: WindowExec => w }
@@ -753,7 +677,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("stream_cdc_apply windows share one user_id exchange, no joins") {
-    import org.apache.spark.sql.execution.window.WindowExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val p = plan("stream_cdc_apply")
@@ -779,7 +702,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("llm_readability is shuffle-free map work before the output sort") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.window.WindowExec
     val p = plan("llm_readability")
     val ex = collectWithSubqueries(p) { case e: ShuffleExchangeExec => e }
     assert(ex.size <= 1, s"only the final orderBy may exchange:\n$p")
@@ -797,7 +719,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("llm_score_linear is shuffle-free map work before the output sort") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.window.WindowExec
     val p = plan("llm_score_linear")
     val ex = collectWithSubqueries(p) { case e: ShuffleExchangeExec => e }
     assert(ex.size <= 1, s"only the final orderBy may exchange:\n$p")
@@ -806,7 +727,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("agg_rank_movers windows partition on month; join is part+month-keyed") {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    import org.apache.spark.sql.execution.window.WindowExec
     val p = plan("agg_rank_movers")
     assert(collectWithSubqueries(p) { case c: CartesianProductExec => c }.isEmpty
       && collectWithSubqueries(p) { case j: BroadcastNestedLoopJoinExec => j }.isEmpty,
@@ -818,7 +738,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("llm_hash_split is aggregate-only plus the 1-row total") {
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
-    import org.apache.spark.sql.execution.window.WindowExec
     val p = plan("llm_hash_split")
     assert(collectWithSubqueries(p) { case c: CartesianProductExec => c }.isEmpty)
     assert(collectWithSubqueries(p) { case w: WindowExec => w }.isEmpty,
@@ -841,7 +760,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the bin-count frame is cached (four consumers); every consumer must
     // ride the InMemoryTableScan — a direct file scan outside the cache
     // build means a consumer re-derived the events aggregate
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     val p = plan("agg_drift_psi")
     assert(scans(p).isEmpty,
       s"a PSI consumer bypassed the bin-count cache:\n$p")
