@@ -1176,63 +1176,15 @@ object Graph {
   def readEdges(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame = spark.table(table)
 
-  // one writer at a time through the read-or-derive gate: concurrent
-  // first-callers (parallel test suites, racing threads in one session)
-  // would otherwise both see tableExists = false and double-write
-  private val artifactLock = new Object
-
-  /** Runs `f` holding the read-or-derive artifact lock — for callers that
-    * maintain SIDE tables beside an [[edgesOrDerive]] artifact (e.g. the
-    * co-order meta row) and need their exists-check + repair write to be
-    * atomic against racing first-callers. The lock is reentrant, so `f`
-    * may itself call [[edgesOrDerive]], which re-acquires it.
-    */
-  private[graft] def withArtifactLock[T](f: => T): T =
-    artifactLock.synchronized(f)
-
-  /** Read-or-derive accessor for a [[writeEdges]] artifact — the
-    * derive-fallback that lets every graph analytic run against the stored
-    * table when it exists and pay the derivation exactly once per session
-    * when it does not: if `table` is absent from the session catalog, the
-    * `derive` frame is computed, written via [[writeEdges]] (after clearing
-    * any warehouse directory orphaned by a previous JVM — the in-memory
-    * catalog forgets tables at JVM exit, but their files survive and would
-    * fail the CREATE), and the READ-BACK table is returned either way, so
-    * callers always consume the same bucketed artifact plan shape.
-    *
-    * CONTRACT: the table name must uniquely identify the derivation AND its
-    * source data (the `graft.ops` callers embed the fixture directory in
-    * the name) — the accessor trusts the catalog, it cannot detect a stale
-    * artifact whose source changed under the same name. Artifact lifetime
-    * is the session catalog's: a new JVM re-derives on first touch.
-    * GraphsSpec pins read-back == direct derivation row-for-row.
+  /** [[Tables.tableOrDerive]] with the [[writeEdges]] writer: every graph
+    * analytic reads the stored bucketed edge list when it exists, and the
+    * session pays the derivation once when it does not. Read-back ==
+    * direct derivation row for row (GraphsSpec pins it).
     */
   def edgesOrDerive(spark: org.apache.spark.sql.SparkSession, table: String,
       buckets: Int = 8, payload: Seq[String] = Nil)(derive: => DataFrame)
-      : DataFrame = artifactLock.synchronized {
-    if (!spark.catalog.tableExists(table)) {
-      clearDeadWarehouseDir(spark, table)
-      writeEdges(derive, table, buckets, payload)
-    }
-    readEdges(spark, table)
-  }
-
-  /** Deletes the warehouse directory of a table the CURRENT catalog does
-    * not know — the leftover of a previous JVM whose in-memory catalog died
-    * with it. Without this, a fresh session's `saveAsTable` CREATE fails on
-    * the non-empty location. No-op when the directory is absent; never call
-    * it for a table the catalog still tracks (drop that through SQL).
-    */
-  private[graft] def clearDeadWarehouseDir(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    val dir = java.nio.file.Paths.get(wh, table.toLowerCase)
-    if (java.nio.file.Files.exists(dir)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
+      : DataFrame =
+    Tables.tableOrDerive(spark, table, writeEdges(_, _, buckets, payload))(derive)
 
   /** Appends a delta edge batch to a [[writeEdges]] table — the
     * incremental-maintenance shape between full re-derivations (the

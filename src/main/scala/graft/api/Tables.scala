@@ -1,55 +1,82 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Table-maintenance primitives for snapshot-style datalake tables. */
 object Tables {
 
-  // one writer at a time through the read-or-derive gate (the
-  // Graph.edgesOrDerive discipline for plain tables)
   private val artifactLock = new Object
 
-  /** Read-or-derive accessor for a SESSION-persisted plain parquet table —
-    * the unbucketed sibling of [[Graph.edgesOrDerive]] for derived frames
-    * several analytics consume (e.g. the default-parameter n-gram Jaccard
-    * pair set six LLM keys share): if `table` is absent from the session
-    * catalog, `derive` is computed and written (`saveAsTable`, overwrite —
-    * after clearing any warehouse directory a previous JVM's dead catalog
-    * orphaned), and the READ-BACK table is returned either way.
+  private def saveParquet(df: DataFrame, table: String): Unit =
+    df.write.mode("overwrite").format("parquet").saveAsTable(table)
+
+  /** The session-artifact gate — the one read-or-derive path for every
+    * catalog table the engine writes: if `table` is absent from the session
+    * catalog, the warehouse directory a dead catalog may have left under its
+    * name is cleared, `derive` is written with `write` (plain parquet
+    * `saveAsTable` by default; bucketed edge lists pass
+    * [[Graph.writeEdges]]), and the READ-BACK table is returned either way.
     *
-    * Same identity contract as `edgesOrDerive`: the table name must
-    * uniquely determine the derivation AND its source data (callers embed
-    * the fixture directory); artifact lifetime is the session catalog's —
-    * a fresh JVM re-derives on first touch, so regenerated source data can
-    * never be read through a stale artifact. LlmSpec pins read-back ==
-    * direct derivation.
+    *  - Identity: the name determines the derivation AND its source data —
+    *    [[artifactName]] embeds the family (with any non-default
+    *    parameters) and the fixture dir's [[dirTag]]. The gate trusts the
+    *    catalog; it cannot see a stale artifact under an unchanged name.
+    *  - Lifetime: the session catalog's. A fresh JVM re-derives on first
+    *    touch, so regenerated source data is never read through an old
+    *    artifact.
+    *  - One lock: every exists-check + write, every drop and every
+    *    [[rederive]] holds it, so racing first callers derive once. It is
+    *    reentrant: a derive may pass through the gate for its own inputs.
+    *  - Dead directories: the in-memory catalog dies with its JVM but the
+    *    table directories stay, and a fresh `saveAsTable` CREATE fails on a
+    *    non-empty location — see [[clearDeadWarehouseDir]].
     */
-  def tableOrDerive(spark: org.apache.spark.sql.SparkSession, table: String)
+  def tableOrDerive(spark: SparkSession, table: String,
+      write: (DataFrame, String) => Unit = saveParquet)
       (derive: => DataFrame): DataFrame = artifactLock.synchronized {
     if (!spark.catalog.tableExists(table)) {
-      Graph.clearDeadWarehouseDir(spark, table)
-      derive.write.mode("overwrite").format("parquet").saveAsTable(table)
+      clearDeadWarehouseDir(spark, table)
+      write(derive, table)
     }
     spark.table(table)
   }
 
-  /** Canonical fixture-dir tag every artifact name embeds — ONE definition
-    * of the identity contract's dir component, so the read-or-derive
-    * callers and the GC surface below cannot disagree about which tables
-    * belong to which source directory.
-    *
-    * r15 (r14 ADVICE): the tag is HASH-QUALIFIED — sanitized dir + "_h" +
-    * first 8 hex of SHA-256 over the RAW dir string. Sanitization alone
-    * collapsed '/' and '_' to '_', so a dir whose sanitized form was a
-    * suffix of another's ("/data/sf1" vs "data/sf1", or "/testdata/sf1"
-    * vs "/root/testdata/sf1") scoped TOGETHER in [[listArtifacts]] /
-    * [[dropArtifacts]]'s suffix match. The hash is injective on the raw
-    * string, so two distinct dir strings can no longer share a tag
-    * suffix; the sanitized prefix stays for human-readable catalog
-    * listings. Callers must still pass the SAME canonical dir strings the
-    * derivations used (the edgesOrDerive identity contract — "/x" and
-    * "/x/" hash apart, deliberately: distinct strings, distinct artifact
-    * families, worst case one redundant re-derivation, never wrong data).
+  /** Drops `tables` and runs `body` under the gate's lock — the path for
+    * keys that price an artifact's construction on every build: `body`
+    * re-derives the dropped tables through [[tableOrDerive]], atomically
+    * against racing first callers.
+    */
+  private[graft] def rederive[T](spark: SparkSession, tables: String*)
+      (body: => T): T = artifactLock.synchronized {
+    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    body
+  }
+
+  /** Deletes the warehouse directory of a table the CURRENT catalog does
+    * not know — the leftover of a previous JVM's dead catalog. Spark stores
+    * a table's directory under its lowercased name. No-op when the
+    * directory is absent; never call it for a table the catalog still
+    * tracks (drop that through SQL).
+    */
+  private[graft] def clearDeadWarehouseDir(spark: SparkSession,
+      table: String): Unit = {
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    val dir = java.nio.file.Paths.get(wh, table.toLowerCase)
+    if (java.nio.file.Files.exists(dir)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.deleteIfExists(_))
+    }
+  }
+
+  /** Canonical fixture-dir tag every artifact name embeds: the sanitized,
+    * lowercased dir + "_h" + the first 8 hex of SHA-256 over the RAW dir
+    * string. The hash keeps two distinct dir strings from sharing a tag
+    * suffix (sanitizing alone maps "/data/sf1" onto a suffix of
+    * "/srv/data/sf1"), so [[listArtifacts]] / [[dropArtifacts]] scope
+    * exactly one dir; the sanitized prefix keeps catalog listings
+    * readable. Callers pass the same dir strings the derivations used —
+    * "/x" and "/x/" are distinct artifact families.
     */
   def dirTag(dir: String): String = {
     val h = java.security.MessageDigest.getInstance("SHA-256")
@@ -57,16 +84,17 @@ object Tables {
     dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase + "_h" + h
   }
 
-  /** Session-artifact name prefixes the engine derives through the
-    * read-or-derive gates: `graft_*` ([[tableOrDerive]] /
-    * [[Graph.edgesOrDerive]] callers — pair frames, graph edges/orientation,
-    * trained side tables) and `graph_edges_*` (the bench-priced persist
-    * key's full-rewrite table).
+  private val ArtifactPrefix = "graft_"
+
+  /** The one naming rule for every catalog table the engine writes:
+    * `graft_<family>_<dirTag(dir)>`, `family` naming the derivation and its
+    * non-default parameters.
     */
-  private val ArtifactPrefixes = Seq("graft_", "graph_edges_")
+  private[graft] def artifactName(family: String, dir: String): String =
+    s"$ArtifactPrefix${family}_${dirTag(dir)}"
 
   /** Enumerates the session catalog's derived artifacts — every table whose
-    * name carries an engine artifact prefix, optionally restricted to one
+    * name carries the engine's artifact prefix, optionally restricted to one
     * fixture directory's tag ([[dirTag]]). This is the admin view a
     * long-lived session uses to audit artifact growth: a PARAMETER change
     * derives a fresh table under a new parameter-embedding name (the
@@ -74,16 +102,14 @@ object Tables {
     * until swept — enumerable here, dropped by [[dropArtifacts]]. Sorted
     * for stable output.
     */
-  def listArtifacts(spark: org.apache.spark.sql.SparkSession,
+  def listArtifacts(spark: SparkSession,
       dir: Option[String] = None): Seq[String] =
     artifactLock.synchronized {
       val tagSuffix = dir.map(dirTag)
       spark.catalog.listTables().collect().toSeq
         .map(_.name)
-        .filter(n => ArtifactPrefixes.exists(n.startsWith))
-        // anchored at the artifact-family delimiter: the char before the
-        // tag must be '_' (every derive site writes s"<family>_$tag"), on
-        // top of the tag's own hash qualifier
+        .filter(_.startsWith(ArtifactPrefix))
+        // anchored at the family delimiter on top of the tag's own hash
         .filter(n => tagSuffix.forall(t => n.endsWith("_" + t)))
         .sorted
     }
@@ -91,22 +117,14 @@ object Tables {
   /** Drops every [[listArtifacts]] table (optionally dir-scoped) from the
     * session catalog AND storage, returning the dropped names — the GC half
     * of the artifact lifecycle: safe because every artifact is a derived
-    * cache (the next consumer's read-or-derive gate re-derives on first
+    * cache (the next consumer's [[tableOrDerive]] re-derives on first
     * touch), so the only cost of an over-eager sweep is re-derivation.
-    * Holds the artifact lock so a concurrent read-or-derive first-caller
-    * cannot interleave with the drops.
     */
-  def dropArtifacts(spark: org.apache.spark.sql.SparkSession,
+  def dropArtifacts(spark: SparkSession,
       dir: Option[String] = None): Seq[String] =
-    // both read-or-derive gates exist (Tables' own and Graph's); hold both
-    // locks — always in this order, nothing acquires them Graph-first-then-
-    // Tables — so no first-caller can interleave with the drops
     artifactLock.synchronized {
-      Graph.withArtifactLock {
-        val doomed = listArtifacts(spark, dir)
-        doomed.foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-        doomed
-      }
+      val doomed = listArtifacts(spark, dir)
+      rederive(spark, doomed: _*)(doomed)
     }
 
   /** Keyed upsert (MERGE): rows of `updates` replace same-keyed rows of
@@ -153,7 +171,7 @@ object Tables {
     * asserted by ApiSpec; content preservation is the oracled gate
     * (`src_compaction`).
     */
-  def compactFiles(spark: org.apache.spark.sql.SparkSession, inDir: String,
+  def compactFiles(spark: SparkSession, inDir: String,
       outDir: String, targetRowsPerFile: Long): DataFrame = {
     val in = spark.read.parquet(inDir)
     val n = in.count() // parquet metadata-only

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.api.{Caches, Graph}
+import graft.api.{Caches, Graph, Tables}
 import H.{dec6Sum, dec6SumSql, q6, q6Sql}
 
 /** SURVEY.md §2.12 — graph analytics over relationally-derived graphs.
@@ -24,11 +24,10 @@ import H.{dec6Sum, dec6SumSql, q6, q6Sql}
   * fixture edge lists, delegate, and pin the result under the oracle gate,
   * so the reusable builders and the gated keys cannot drift apart.
   *
-  * EDGE ARTIFACT (r12): the co-order family no longer re-derives its edge
-  * list per key — every consumer reads the session-persisted bucketed
-  * artifact via [[coOrderArtifact]] (derive-once-per-session through
-  * [[graft.api.Graph.edgesOrDerive]]), the amortized production shape the
-  * r11 `graph_edges_persist` key proved. The DuckDB oracles still re-derive
+  * EDGE ARTIFACT: every co-order consumer reads the session-persisted
+  * bucketed artifact via [[coOrderArtifact]] (derived once per session
+  * through the [[graft.api.Tables.tableOrDerive]] gate) instead of
+  * re-deriving its edge list per key. The DuckDB oracles still re-derive
   * from raw parquet, so artifact == derivation is gated end-to-end on every
   * key, and `graph_edges_persist` keeps pricing the one-time construction.
   *
@@ -197,82 +196,51 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct())
 
-  /** The PERSISTED co-order graph artifact (r12): the WEIGHTED capped
-    * co-order edge list `(u, v, w)` (`u < v`, `w` = number of distinct
-    * co-ordering baskets) as a [[graft.api.Graph.writeEdges]] bucketed
-    * table, derived ONCE per (session, fixture dir) through
-    * [[graft.api.Graph.edgesOrDerive]] and READ by every graph key —
-    * the amortization the r11 `graph_edges_persist` key proved out
-    * (0.4 s read-back probe vs the 2–3.4 s derivation embedded in every
-    * graph row), applied to the whole family. One artifact serves all
-    * consumers because the weighted list SUBSUMES the distinct one:
-    * `select(u, v)` IS [[coOrderEdges]]' e0 (the pair aggregate's group
-    * key), `w ≥ 3` is graph_components' support filter, and `(u, v, w)`
-    * is graph_label_prop_weighted's input — so read-back == direct
-    * derivation row-for-row on every path (GraphsSpec pins it) and the
-    * DuckDB oracles, which always re-derive from raw parquet, still gate
-    * every key end-to-end.
+  /** The PERSISTED co-order graph artifact: the WEIGHTED capped co-order
+    * edge list `(u, v, w)` (`u < v`, `w` = number of distinct co-ordering
+    * baskets) as a bucketed [[graft.api.Graph.edgesOrDerive]] table, read
+    * by every graph key. One artifact serves all consumers because the
+    * weighted list SUBSUMES the distinct one: `select(u, v)` IS
+    * [[coOrderEdges]]' e0 (the pair aggregate's group key), `w ≥ 3` is
+    * graph_components' support filter, and `(u, v, w)` is
+    * graph_label_prop_weighted's input — so read-back == direct derivation
+    * row-for-row on every path (GraphsSpec pins it) and the DuckDB oracles,
+    * which always re-derive from raw parquet, still gate every key
+    * end-to-end.
     *
-    * The 1-row basket-truncation metric persists beside it (`..._meta`):
-    * graph_triangles surfaces `n_capped_orders` from the stored artifact
-    * rather than re-running the ranking window. Table names embed the
-    * fixture dir (the [[graft.api.Graph.edgesOrDerive]] identity
-    * contract); artifact lifetime is the session catalog's — a fresh JVM
-    * re-derives on first touch, so a regenerated fixture can never be
-    * read through a stale artifact.
+    * The 1-row basket-truncation metric is its own artifact
+    * (`coorder_meta`): graph_triangles surfaces `n_capped_orders` from it
+    * rather than re-running the ranking window. Both go through the
+    * [[graft.api.Tables.tableOrDerive]] gate, so either is re-derived
+    * alone when it is missing.
     */
   private[graft] def coOrderArtifact(s: SparkSession, d: String)
-      // the WHOLE body holds the artifact lock (reentrant under
-      // edgesOrDerive's own acquire), so the meta-table repair path's
-      // exists-check + overwrite below cannot race a concurrent caller
-      // that also observed the meta table missing
-      : (DataFrame, DataFrame) = graft.api.Graph.withArtifactLock {
-    val tag = graft.api.Tables.dirTag(d)
-    val metaTbl = s"graft_coorder_meta_$tag"
-    val ew = graft.api.Graph.edgesOrDerive(s, s"graft_coorder_$tag",
+      : (DataFrame, DataFrame) = {
+    lazy val (kept, capStats) = cappedItems(T.lineitem(s, d)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+      .distinct())
+    val meta = Tables.tableOrDerive(s, Tables.artifactName("coorder_meta", d))(
+      capStats.coalesce(1))
+    val ew = Graph.edgesOrDerive(s, Tables.artifactName("coorder", d),
         payload = Seq("w")) {
-      val (kept, capStats) = cappedItems(T.lineitem(s, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct())
-      // the meta table writes EAGERLY inside the derive callback so both
-      // artifacts come from the SAME cappedItems pass and appear together
-      // (edgesOrDerive holds the artifact lock around this whole block)
-      graft.api.Graph.clearDeadWarehouseDir(s, metaTbl)
-      capStats.coalesce(1).write.mode("overwrite").format("parquet")
-        .saveAsTable(metaTbl)
       kept.as("a").join(kept.as("b"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
         .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
         .agg(count(lit(1)).as("w"))
     }
-    // repair path: edges present but meta dropped out from under it (a
-    // manual DROP mid-session) — re-derive just the 1-row metric rather
-    // than failing the whole key on a missing side table
-    if (!s.catalog.tableExists(metaTbl)) {
-      graft.api.Graph.clearDeadWarehouseDir(s, metaTbl)
-      val (_, capStats) = cappedItems(T.lineitem(s, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct())
-      capStats.coalesce(1).write.mode("overwrite").format("parquet")
-        .saveAsTable(metaTbl)
-    }
-    (ew, s.table(metaTbl))
+    (ew, meta)
   }
 
-  /** The persisted ORIENTED co-order graph artifact (r13) — the
-    * [[coOrderArtifact]] discipline extended one derivation deeper for the
-    * triangle family: `graph_triangles` and `graph_clustering_coeff` used
-    * to re-run the degree aggregate + two orientation joins over the edge
-    * artifact EVERY run (~1.3 s each at sf0.1); a production deployment
-    * orients once and stores it. Two tables per (session, fixture dir):
-    * the degree-ordered oriented edge list `(lo, hi, khi)` as a
+  /** The persisted ORIENTED co-order graph — [[coOrderArtifact]] one
+    * derivation deeper, for the triangle family. Two artifacts per fixture
+    * dir: the node-grain degree frame `(n, dg)` as a plain table, and the
+    * degree-ordered oriented edge list `(lo, hi, khi)` as a
     * [[graft.api.Graph.writeEdges]] table BUCKETED BY `lo` (so the wedge
     * self-join's both sides and the [[graft.api.Graph.wedgeProbe]]
-    * `groupBy(lo)` read co-partitioned buckets — exchange-free below the
-    * broadcast ceiling too), and the node-grain degree frame `(n, dg)`
-    * as a plain side table (written eagerly inside the same derive
-    * callback, the `coOrderArtifact` meta discipline, so both always come
-    * from ONE [[graft.api.Graph.orient]] pass).
+    * `groupBy(lo)` read co-partitioned buckets). Both come from one
+    * [[graft.api.Graph.orient]] plan, validated before either is written:
+    * a stored artifact never carries an orientation the probes would
+    * refuse live.
     *
     * Read-back == direct derivation row-for-row (GraphsSpec pins it), and
     * the DuckDB oracles still re-derive orientation from raw parquet, so
@@ -282,35 +250,22 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     * way a bad fresh derivation is.
     */
   private[graft] def coOrderOriented(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = graft.api.Graph.withArtifactLock {
-    val tag = graft.api.Tables.dirTag(d)
-    val degTbl = s"graft_coorder_deg_$tag"
-    def writeDeg(deg: DataFrame): Unit = {
-      graft.api.Graph.clearDeadWarehouseDir(s, degTbl)
-      deg.write.mode("overwrite").format("parquet").saveAsTable(degTbl)
+      : (DataFrame, DataFrame) = {
+    lazy val (deg, oriented) = {
+      val o = Graph.orient(coOrderArtifact(s, d)._1.select("u", "v"))
+      Graph.validateOrientation(o._1, "coOrderOriented")
+      o
     }
-    val ori = graft.api.Graph.edgesOrDerive(s, s"graft_coorder_oriented_$tag",
+    val degT = Tables.tableOrDerive(s, Tables.artifactName("coorder_deg", d))(deg)
+    val ori = Graph.edgesOrDerive(s, Tables.artifactName("coorder_oriented", d),
         payload = Seq("khi")) {
-      val e0 = coOrderArtifact(s, d)._1.select("u", "v")
-      val (deg, oriented) = graft.api.Graph.orient(e0)
-      // refuse BEFORE persisting: a stored artifact must never carry a
-      // mis-ordered orientation the probes would have rejected live
-      graft.api.Graph.validateOrientation(deg, "coOrderOriented")
-      writeDeg(deg)
       oriented.select(col("lo").as("u"), col("hi").as("v"), col("khi"))
     }
-    // repair path (inside the lock): oriented table present but the degree
-    // side table dropped out from under it — re-derive just the node-grain
-    // frame rather than failing both consumer keys on a missing side table
-    if (!s.catalog.tableExists(degTbl))
-      writeDeg(graft.api.Graph.orient(
-        coOrderArtifact(s, d)._1.select("u", "v"))._1)
-    (s.table(degTbl),
-      ori.select(col("u").as("lo"), col("v").as("hi"), col("khi")))
+    (degT, ori.select(col("u").as("lo"), col("v").as("hi"), col("khi")))
   }
 
-  /** The persisted customer↔supplier TRANSACTION graph artifact (r12) —
-    * the [[coOrderArtifact]] discipline applied to the PageRank family's
+  /** The persisted customer↔supplier TRANSACTION graph artifact — the
+    * [[coOrderArtifact]] discipline applied to the PageRank family's
     * edge list: one directed edge `(u = custkey, v = suppkey + SUPP_OFF)`
     * per trading pair with `w` = transaction (lineitem) multiplicity, from
     * ONE `orders ⋈ lineitem` aggregation per (session, fixture dir). The
@@ -319,9 +274,8 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     * PageRank keys need stays with the consumer (storing one direction
     * halves the artifact; the union is a projection, not a shuffle).
     */
-  private[graft] def txnArtifact(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.api.Tables.dirTag(d)
-    graft.api.Graph.edgesOrDerive(s, s"graft_txn_$tag",
+  private[graft] def txnArtifact(s: SparkSession, d: String): DataFrame =
+    Graph.edgesOrDerive(s, Tables.artifactName("txn", d),
         payload = Seq("w")) {
       T.orders(s, d)
         .join(T.lineitem(s, d), col("o_orderkey") === col("l_orderkey"))
@@ -329,16 +283,13 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
           (col("l_suppkey") + SUPP_OFF).as("v"))
         .agg(count(lit(1)).as("w"))
     }
-  }
 
   /** Forces the graph family's derive-once session artifacts (co-order
-    * edges + orientation, customer↔supplier transaction edges) — the bench
-    * harness's setup phase (r15): the r14 record billed the txn derive to
-    * `graph_pagerank_weighted`'s first cold sample (48 s cold vs 4.7 s
-    * med) although the note declares `graph_edges_persist` prices
-    * construction. Deriving everything before sampling keeps every cold
-    * split artifact-free; idempotent via each accessor's read-or-derive
-    * gate.
+    * edges + orientation, customer↔supplier transaction edges, LPA labels)
+    * — the bench harness's setup phase: `graph_edges_persist` alone prices
+    * construction, so deriving everything before sampling keeps every
+    * other key's cold split artifact-free. Idempotent through the
+    * [[graft.api.Tables.tableOrDerive]] gate.
     */
   private[graft] def deriveSessionArtifacts(s: SparkSession, d: String): Unit = {
     coOrderArtifact(s, d)
@@ -417,7 +368,7 @@ SELECT (SELECT count(*) FROM deg) AS n_nodes, (SELECT count(*) FROM e0) AS n_edg
     * argmax as a row_number window — fixture-scale DuckDB, same rows.
     */
   /** SESSION-persisted artifact of the 4-round LPA labels on the co-order
-    * graph (r15, the r14 verdict's amortization ask): BOTH
+    * graph: BOTH
     * `graph_label_prop` (emits the labels) and `graph_modularity` (scores
     * them) run the identical 4-round propagation, and each paid the full
     * round chain per run. The label frame is a deterministic pure function
@@ -429,9 +380,8 @@ SELECT (SELECT count(*) FROM deg) AS n_nodes, (SELECT count(*) FROM e0) AS n_edg
     * derivation stays gated end-to-end on each (and GraphsSpec pins
     * read-back == direct).
     */
-  private[graft] def lpaLabelsArtifact(s: SparkSession, d: String): DataFrame = {
-    val tag = graft.api.Tables.dirTag(d)
-    graft.api.Tables.tableOrDerive(s, s"graft_lpa_coorder_i4_$tag") {
+  private[graft] def lpaLabelsArtifact(s: SparkSession, d: String): DataFrame =
+    Tables.tableOrDerive(s, Tables.artifactName("lpa_coorder_i4", d)) {
       // the cache still matters inside the one derive: every LPA round
       // re-reads the edge frame, and one in-memory copy beats
       // 2×(rounds+1) parquet scans even of the bucketed artifact
@@ -441,7 +391,6 @@ SELECT (SELECT count(*) FROM deg) AS n_nodes, (SELECT count(*) FROM e0) AS n_edg
           .union(e0.select(col("v").as("src"), col("u").as("dst")))
       Graph.labelPropagation(edges, iters = 4)
     }
-  }
 
   private val graphLabelProp = Q(
     "graph_label_prop",
@@ -1192,49 +1141,32 @@ fit AS (SELECT CAST(np AS BIGINT) AS n_points,
 SELECT dg, n_nodes, n_points, slope, r2
 FROM dist, fit ORDER BY dg"""))
 
-  /** Persisted derived-graph artifact (§2.12 ext, r11) — the
-    * llm_ann_index_persist discipline applied to the co-order edge list:
-    * every other graph key re-derives the edges per run (the documented
-    * standalone-cold bench policy); a production deployment derives ONCE,
-    * stores the artifact bucketed by node
-    * ([[graft.api.Graph.writeEdges]]), and runs every later analytic
-    * against the read-back table. The probe here — the out-degree
-    * HISTOGRAM — aggregates on the bucket key, so the stored layout
-    * answers it with ZERO exchange before the u-grain partial aggregate
-    * (PlanSpec pins no shuffle under the first aggregate); the oracle
-    * reproduces the same histogram from the raw source, so read-back ==
-    * direct derivation is the gate.
+  /** Persisted derived-graph artifact — the llm_ann_index_persist
+    * discipline applied to the co-order edge list: derive once, store the
+    * artifact bucketed by node ([[graft.api.Graph.writeEdges]]), and run
+    * later analytics against the read-back table. The probe here — the
+    * out-degree HISTOGRAM — aggregates on the bucket key, so the stored
+    * layout answers it with ZERO exchange before the u-grain partial
+    * aggregate (PlanSpec pins no shuffle under the first aggregate); the
+    * oracle reproduces the same histogram from the raw source, so
+    * read-back == direct derivation is the gate.
     *
-    * Bench split: the derive+write is EAGER (saveAsTable runs inside the
-    * build), so the detail record's build/exec split prices the stored
-    * artifact's probe separately from its one-time construction — the
-    * amortized number the standalone-cold graph rows deliberately hide.
-    * The table is rewritten every run (join_bucketed's cold==median
-    * policy; warehouse dirs of dead catalog entries cleared the same way).
+    * This key PRICES construction: every build drops and re-derives its
+    * table AND the [[coOrderOriented]] pair the triangle family reads,
+    * under the gate's lock ([[graft.api.Tables.rederive]]), so the eager
+    * writes land in the build split of every run (join_bucketed's
+    * cold == median policy) and the probe prices separately.
     */
   private val graphEdgesPersist = Q(
     "graph_edges_persist",
     (s, d) => {
-      val tag = graft.api.Tables.dirTag(d)
-      val tbl = s"graph_edges_$tag"
-      if (!s.catalog.tableExists(tbl))
-        graft.api.Graph.clearDeadWarehouseDir(s, tbl)
-      val (e0, _) = coOrderEdges(s, d)
-      graft.api.Graph.writeEdges(e0, tbl)
-      // r14 (ADVICE): price the oriented artifact the triangle family
-      // ACTUALLY consumes — drop the coOrderOriented pair of tables and
-      // re-derive them eagerly, so the build split carries the real cost of
-      // maintaining both stored layouts and no never-read sibling is written
-      // (r13 wrote a parallel graph_edges_oriented_* nothing consumed).
-      // Holding the artifact lock makes drop + re-derive atomic against a
-      // racing first-caller.
-      graft.api.Graph.withArtifactLock {
-        val ltag = tag.toLowerCase
-        s.sql(s"DROP TABLE IF EXISTS graft_coorder_oriented_$ltag")
-        s.sql(s"DROP TABLE IF EXISTS graft_coorder_deg_$ltag")
+      val tbl = Tables.artifactName("graph_edges", d)
+      Tables.rederive(s, tbl, Tables.artifactName("coorder_oriented", d),
+          Tables.artifactName("coorder_deg", d)) {
+        Graph.edgesOrDerive(s, tbl)(coOrderEdges(s, d)._1)
         coOrderOriented(s, d)
       }
-      graft.api.Graph.readEdges(s, tbl)
+      Graph.readEdges(s, tbl)
         .groupBy("u").agg(count(lit(1)).as("dg"))
         .groupBy("dg").agg(count(lit(1)).as("n_nodes"))
         .select(col("dg").as("out_degree"), col("n_nodes"))

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.api.{Caches, Dedup, Text, Vectors}
+import graft.api.{Caches, Dedup, Tables, Text, Vectors}
 import H._
 
 /** SURVEY.md §2.9 + builder-prompt extensions — LLM-training-data pipeline
@@ -160,34 +160,29 @@ cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
 
   /** SESSION-persisted artifact of the DEFAULT-parameter n-gram Jaccard
     * pair set (word-3-grams, df > 50 cap, 0.6 threshold) over the fixture
-    * corpus — the [[graft.ops.Graphs.coOrderArtifact]] discipline applied
-    * to the dedup family's shared ground truth: SIX keys consume exactly
-    * this frame (llm_ngram_jaccard, the three blocking-recall metrics'
-    * truth side, llm_pipeline_e2e_ngram, llm_dedup_clusters_ngram), and
-    * each used to re-derive the inverted-index pair join per run. Derived
-    * once per (session, fixture dir) via
+    * corpus — the dedup family's shared ground truth: SIX keys consume
+    * exactly this frame (llm_ngram_jaccard, the three blocking-recall
+    * metrics' truth side, llm_pipeline_e2e_ngram,
+    * llm_dedup_clusters_ngram). Derived once per (session, fixture dir) via
     * [[graft.api.Tables.tableOrDerive]]; every DuckDB oracle still
     * re-derives from raw parquet, so artifact == derivation stays gated
     * end-to-end on all six keys (and LlmSpec pins read-back == direct).
     * Parameter-divergent consumers get parameter-NAMED sibling artifacts
-    * ([[ngramPairsUncappedArtifact]], [[ngramPairsT0Artifact]], r13) —
+    * ([[ngramPairsUncappedArtifact]], [[ngramJaccHistT0Artifact]]) —
     * never a read-through of this one.
     */
   private def ngramPairsArtifact(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.api.Tables.dirTag(d)
-    graft.api.Tables.tableOrDerive(s, s"graft_ngrampairs_$tag") {
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.tableOrDerive(s, Tables.artifactName("ngrampairs", d)) {
       Dedup.ngramJaccardPairs(T.documents(s, d), "doc_id", "text")
     }
-  }
 
   /** SESSION-persisted artifact of the DEFAULT-parameter MinHash near-dup
     * pair set (5-char shingles, 32 permutations, 4 bands × 8 rows, salt 16,
-    * exact-Jaccard verify at 0.8) over the fixture corpus — the
-    * [[ngramPairsArtifact]] discipline applied to the MinHash family (r13):
+    * exact-Jaccard verify at 0.8) over the fixture corpus:
     * `llm_minhash_neardup` emits this frame and `llm_dedup_clusters` feeds
-    * it to the CC solver, and each used to re-pay the shingle + signature +
-    * banded-pair derivation (~6.5 s/sample at sf0.1) per run. The table
+    * it to the CC solver, so the shingle + signature + banded-pair
+    * derivation is paid once per (session, fixture dir). The table
     * name embeds the fixture dir AND the signature/band/verify parameters
     * (the [[graft.api.Tables.tableOrDerive]] identity contract — a
     * parameter-divergent future caller gets its own table, never a stale
@@ -197,18 +192,14 @@ cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
     * rows, same schema, one indirection through the catalog.
     */
   private def minhashPairsArtifact(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.api.Tables.dirTag(d)
-    graft.api.Tables.tableOrDerive(s, s"graft_minhashpairs_p32b4r8t080_$tag") {
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.tableOrDerive(s, Tables.artifactName("minhashpairs_p32b4r8t080", d)) {
       Dedup.minhashPairs(T.documents(s, d), "doc_id", "text")
     }
-  }
 
   /** SESSION-persisted artifact of the UNCAPPED exact n-gram-Jaccard pair
     * set (maxDf = ∞, threshold 0.6) — [[llmNgramDfcapRecall]]'s truth side,
-    * a fixed pure function of the fixture that was recomputed per sample
-    * (the single most expensive recomputation in the r12 bench, 6.9 s).
-    * FIXTURE-BOUNDED like its consumer: the uncapped inverted index is
+    * a fixed pure function of the fixture. FIXTURE-BOUNDED like its consumer: the uncapped inverted index is
     * exactly the quadratic hot-shingle blowup the df cap exists to prevent,
     * so this artifact only ever materializes over a bounded diagnostic
     * sample — the table is the memo of a diagnostic, not a production path.
@@ -216,41 +207,32 @@ cand AS (SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
     * derivation stays gated end-to-end.
     */
   private def ngramPairsUncappedArtifact(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.api.Tables.dirTag(d)
-    graft.api.Tables.tableOrDerive(s, s"graft_ngrampairs_nodfcap_$tag") {
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.tableOrDerive(s, Tables.artifactName("ngrampairs_nodfcap", d)) {
       Dedup.ngramJaccardPairs(T.documents(s, d), "doc_id", "text",
         maxDf = Long.MaxValue)
     }
-  }
 
   /** SESSION-persisted HISTOGRAM of the THRESHOLD-0 df-capped pair frame's
     * round-4 Jaccard values — `(jaccard, cnt)`, ≤10⁴ rows by construction
     * (round(·,4) over [0,1]) — the corpus similarity-distribution input
-    * [[llmLshBandTuning]] sweeps band configurations against. r15: the r13
-    * artifact persisted the PAIR frame itself (every co-shingling pair;
-    * millions of rows at sf0.1, the biggest artifact write in the suite),
-    * so each warm sample still re-scanned pair grain for a sweep whose
-    * only per-pair input is the rounded Jaccard — the one bench row that
-    * stayed >2x its quiet baseline through two in-run resample rounds
-    * (r14 verdict #1). The distribution IS the sufficient statistic:
-    * grouping first makes the artifact KB-scale, the derive write cheap
-    * (no pair-frame materialization to parquet), and every warm sample a
-    * ≤10⁴-row scan. Still a SUPERSET input (threshold 0.0 in the name):
+    * [[llmLshBandTuning]] sweeps band configurations against. The sweep's
+    * only per-pair input is the rounded Jaccard, so the distribution IS
+    * the sufficient statistic: grouping before the write keeps the
+    * artifact KB-scale (the pair frame itself runs to millions of rows at
+    * sf0.1) and every read a ≤10⁴-row scan. Still a SUPERSET input (threshold 0.0 in the name):
     * the non-dup mass [[ngramPairsArtifact]] drops is the point. Oracle
     * re-derives pairwise from raw parquet as always — see the key's
     * scaladoc for why the grouped DECIMAL sum is bit-identical to the
     * pairwise one.
     */
   private def ngramJaccHistT0Artifact(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.api.Tables.dirTag(d)
-    graft.api.Tables.tableOrDerive(s, s"graft_ngramjacchist_t00_$tag") {
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.tableOrDerive(s, Tables.artifactName("ngramjacchist_t00", d)) {
       Dedup.ngramJaccardPairs(T.documents(s, d), "doc_id", "text",
         threshold = 0.0)
         .groupBy("jaccard").agg(count(lit(1)).as("cnt"))
     }
-  }
 
   private val llmNgramJaccard = Q(
     "llm_ngram_jaccard",
@@ -269,15 +251,13 @@ ORDER BY a_id, b_id"""))
     * fixture dir, session-catalog lifetime, oracles re-derive from raw).
     */
   private def containmentPairsArtifact(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    val tag = graft.api.Tables.dirTag(d)
-    graft.api.Tables.tableOrDerive(s, s"graft_ngramcontain_n3t080_$tag") {
+      d: String): org.apache.spark.sql.DataFrame =
+    Tables.tableOrDerive(s, Tables.artifactName("ngramcontain_n3t080", d)) {
       Dedup.ngramContainmentPairs(T.documents(s, d), "doc_id", "text")
     }
-  }
 
   /** Forces every session artifact this module derives lazily — the bench
-    * harness's setup phase (r15, the r14 verdict's cold-pricing ask): with
+    * harness's setup phase: with
     * the derivations paid BEFORE sampling, no measured key's cold sample
     * carries a one-time artifact build, so cross-round cold comparisons
     * compare query cost, not artifact-arrival order. Each accessor's

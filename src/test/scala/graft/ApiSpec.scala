@@ -2118,4 +2118,97 @@ class ApiSpec extends SparkSpec {
       Seq(tIn, tOut).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
+
+  test("artifact gate: racing first callers derive once; nested gates share one lock") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val tag = graft.api.Tables.dirTag("/tmp/graft_race_fixture")
+    val Seq(raced, plain, edges, plainInner, edgesInner) =
+      Seq("race", "plain", "edges", "plain_inner", "edges_inner")
+        .map(f => s"graft_raceprobe_${f}_$tag")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val derives = new java.util.concurrent.atomic.AtomicInteger
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val racers = (1 to 6).map(_ => Future {
+        start.await()
+        graft.api.Tables.tableOrDerive(spark, raced) {
+          derives.incrementAndGet()
+          Seq((1L, "a"), (2L, "b")).toDF("id", "s")
+        }.orderBy("id").as[(Long, String)].collect().toSeq
+      })
+      start.countDown()
+      val reads = Await.result(Future.sequence(racers), 3.minutes)
+      assert(derives.get == 1, "racing first callers must derive exactly once")
+      assert(reads.forall(_ == Seq((1L, "a"), (2L, "b"))), s"reads: $reads")
+      // each gate's derive enters the OTHER gate: with two locks taken in
+      // opposite orders this pair could deadlock; one lock cannot
+      val viaTables = Future {
+        graft.api.Tables.tableOrDerive(spark, plain) {
+          graft.api.Graph.edgesOrDerive(spark, edgesInner)(
+            Seq((1L, 2L)).toDF("u", "v")).count()
+          Seq((3L, "c")).toDF("id", "s")
+        }.count()
+      }
+      val viaGraph = Future {
+        graft.api.Graph.edgesOrDerive(spark, edges) {
+          graft.api.Tables.tableOrDerive(spark, plainInner)(
+            Seq((4L, "d")).toDF("id", "s")).count()
+          Seq((5L, 6L), (6L, 7L)).toDF("u", "v")
+        }.count()
+      }
+      assert(Await.result(viaTables.zip(viaGraph), 3.minutes) == ((1L, 2L)))
+      assert(graft.api.Tables.listArtifacts(spark,
+        Some("/tmp/graft_race_fixture")).size == 5)
+    } finally {
+      pool.shutdown()
+      Seq(raced, plain, edges, plainInner, edgesInner)
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
+  test("artifact leftovers: keys re-run over a dead catalog's warehouse dirs (mixed-case fixture path)") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // the in-memory catalog dies with its JVM but the table directories stay
+    // in the warehouse; the next session must clear them before re-creating.
+    // Spark stores a table's directory lowercased, so an uppercase letter in
+    // the fixture path is the case a case-preserving clear misses.
+    val root = Files.createTempDirectory("graft_leftover")
+    val mixed = Files.createSymbolicLink(root.resolve("Fixture_SF0_001"),
+      Paths.get(sf)).toString
+    val keys = Seq("join_bucketed", "graph_triangles", "graph_edges_persist",
+      "llm_ngram_jaccard")
+    def tables = spark.catalog.listTables().collect().map(_.name).toSet
+    def run(k: String) = {
+      val rows = SparkEntry.queries(k)(spark, mixed).collect()
+        .map(_.toSeq.mkString("|")).toSeq
+      graft.api.Caches.sweep(spark)
+      rows
+    }
+    def copyTree(from: Path, to: Path): Unit =
+      Files.walk(from).iterator().asScala.toSeq
+        .foreach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
+    val before = tables
+    try {
+      val first = keys.map(run)
+      val wrote = (tables -- before).toSeq.sorted
+      assert(wrote.nonEmpty)
+      for (t <- wrote) {
+        val loc = Paths.get(spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
+        val aside = root.resolve(s"aside_$t")
+        copyTree(loc, aside)
+        spark.sql(s"DROP TABLE `$t`")
+        copyTree(aside, loc)
+      }
+      for ((k, want) <- keys.zip(first)) assert(run(k) === want, k)
+    } finally {
+      (tables -- before).foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      Files.walk(root).iterator().asScala.toSeq.reverse
+        .foreach(Files.deleteIfExists(_))
+    }
+  }
 }

@@ -205,14 +205,8 @@ class GraphsSpec extends SparkSpec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.aggregate.HashAggregateExec
     val tbl = "graph_edges_append_spec"
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    val dir = java.nio.file.Paths.get(wh, tbl)
-    if (java.nio.file.Files.exists(dir)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    graft.api.Tables.clearDeadWarehouseDir(spark, tbl)
     val all = (for (u <- 1L to 40L; v <- u + 1 to u + 3) yield (u, v))
       .toDF("u", "v")
     val base = all.filter(col("u") % 2 === 0)
@@ -533,6 +527,24 @@ class GraphsSpec extends SparkSpec
     val a = graft.api.Graph.trianglesOriented(deg, ori).collect()(0)
     val f = graft.api.Graph.triangles(e0).collect()(0)
     assert(a.toSeq === f.toSeq)
+    graft.api.Caches.sweep(spark)
+  }
+
+  test("artifact side tables dropped mid-session are re-derived with the same rows") {
+    val tag = graft.api.Tables.dirTag(sf)
+    val sideTables = Seq(s"graft_coorder_meta_$tag", s"graft_coorder_deg_$tag")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).toSet
+    def sides() = (rows(graft.ops.Graphs.coOrderArtifact(spark, sf)._2),
+      rows(graft.ops.Graphs.coOrderOriented(spark, sf)._1))
+    val (meta0, deg0) = sides()
+    assert(meta0.size == 1 && deg0.nonEmpty)
+    sideTables.foreach(t => spark.sql(s"DROP TABLE `$t`"))
+    assert(sideTables.forall(t => !spark.catalog.tableExists(t)))
+    val (meta1, deg1) = sides()
+    assert(sideTables.forall(spark.catalog.tableExists))
+    assert(meta1 === meta0)
+    assert(deg1 === deg0)
     graft.api.Caches.sweep(spark)
   }
 
