@@ -9,7 +9,14 @@ import org.apache.spark.storage.StorageLevel
 /** Per-round lineage truncation, and the one fixed-point loop every
   * open-ended solver runs through ([[Dedup.connectedComponents]],
   * [[Graph.pagerankUntil]], [[Graph.kcoreUntil]], and the min-reach and
-  * mark loops of [[Graph.stronglyConnected]]).
+  * mark loops of [[Graph.stronglyConnected]]). Loops whose step reads more
+  * than the state call [[tracked]] and [[free]] directly:
+  * [[Text.bpeMerges]] folds the pair its probe won into each new state.
+  *
+  * The free rule: a builder whose result is driver-local (a collected
+  * merge list, a codebook) frees all of its state before it returns, so
+  * nothing it checkpointed outlives the call; only a builder that returns
+  * a frame over its final state leaves that state's blocks behind.
   *
   * An open-ended loop must truncate LOGICAL lineage every round (persist
   * alone caches data but re-analyzes the whole plan history, so driver

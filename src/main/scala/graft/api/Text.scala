@@ -724,40 +724,51 @@ object Text {
     * filtered out of the vocabulary (documented precondition: pick a
     * delimiter outside the corpus charset).
     *
-    * Each round's vocabulary re-tokenization persists via [[Caches]]
-    * (the next round's pair count reads it once) — `Caches.sweep` when
-    * done. Output: one row per merge step — (step, lhs, rhs, merged,
-    * pair_count); stops early if the vocabulary runs out of pairs.
+    * The vocabulary state lives in [[Checkpoints]]: the word-frequency
+    * table and each step's re-tokenization are one eager checkpoint each,
+    * a step frees the state it replaces once the next one is written, and
+    * the final state is freed before returning — at most two states exist,
+    * only during a fold, and nothing stays persisted after the call (the
+    * result is the driver-local merge list). The last step folds nothing,
+    * since no probe would read it. Output: one row per merge step — (step,
+    * lhs, rhs, merged, pair_count); stops early if the vocabulary runs out
+    * of pairs.
     */
   def bpeMerges(docs: DataFrame, textCol: String, steps: Int = 10): DataFrame = {
     require(steps > 0, s"steps must be positive, got $steps")
     val spark = docs.sparkSession
-    var words = Caches.cache(docs
+    var words = Checkpoints.tracked(docs
       .select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0 && !col("w").contains("|"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .withColumn("toks", split(col("w"), "")))
+      .withColumn("toks", split(col("w"), "")), None)
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, String, Long)]
     var exhausted = false
-    for (step <- 1 to steps if !exhausted) {
-      val best = words
-        .filter(size(col("toks")) >= 2)
-        .select(col("freq"), explode(expr(
-          "transform(sequence(1, size(toks) - 1), " +
-            "i -> struct(toks[i - 1] AS a, toks[i] AS b))")).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("freq")).as("c"))
-        .orderBy(col("c").desc, col("a").asc, col("b").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, c) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
-        merges += ((step, a, b, a + b, c))
-        words = Caches.cache(
-          words.withColumn("toks", bpeFoldOnce(col("toks"), a, b)))
+    try {
+      for (step <- 1 to steps if !exhausted) {
+        val best = words
+          .filter(size(col("toks")) >= 2)
+          .select(col("freq"), explode(expr(
+            "transform(sequence(1, size(toks) - 1), " +
+              "i -> struct(toks[i - 1] AS a, toks[i] AS b))")).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("c"))
+          .orderBy(col("c").desc, col("a").asc, col("b").asc)
+          .limit(1).collect()
+        if (best.isEmpty) exhausted = true
+        else {
+          val (a, b, c) = (best(0).getString(0), best(0).getString(1),
+            best(0).getLong(2))
+          merges += ((step, a, b, a + b, c))
+          if (step < steps) {
+            val next = Checkpoints.tracked(
+              words.withColumn("toks", bpeFoldOnce(col("toks"), a, b)), None)
+            Checkpoints.free(words)
+            words = next
+          }
+        }
       }
-    }
+    } finally Checkpoints.free(words)
     import spark.implicits._
     merges.toSeq.toDF("step", "lhs", "rhs", "merged", "pair_count")
   }

@@ -512,41 +512,109 @@ class ApiSpec extends SparkSpec {
       (s until s + 4).exists(i => sel.contains(i.toLong))))
   }
 
-  test("bpeMerges replays reference BPE on the classic corpus (greedy runs included)") {
-    import spark.implicits._
-    // Sennrich et al.'s example corpus plus an aaaa word to pin the greedy
-    // within-run pairing ("a a a a" under (a,a) must merge to "aa aa")
-    val docs = Seq(
-      (1L, "low low low low low lower lower newest newest"),
-      (2L, "newest newest newest newest widest widest widest aaaa aaaa")
-    ).toDF("doc_id", "text")
-    val got = Text.bpeMerges(docs, "text", steps = 6)
-      .orderBy("step")
-      .as[(Int, String, String, String, Long)].collect().toSeq
-    graft.api.Caches.sweep(spark)
+  // Sennrich et al.'s example corpus plus an aaaa word to pin the greedy
+  // within-run pairing ("a a a a" under (a,a) must merge to "aa aa")
+  private val bpeClassic = Seq(
+    (1L, "low low low low low lower lower newest newest"),
+    (2L, "newest newest newest newest widest widest widest aaaa aaaa"))
 
-    // reference: word-freq table, repeat (count pairs naively, argmax with
-    // (count desc, lhs, rhs), apply greedy left-to-right merge)
+  /** Reference BPE: word-freq table, repeat (count pairs naively, argmax
+    * with (count desc, lhs, rhs), apply greedy left-to-right merge) for
+    * `steps` steps or until no pair is left.
+    */
+  private def bpeReference(texts: Seq[String],
+      steps: Int): Seq[(Int, String, String, String, Long)] = {
     var vocab: Map[List[String], Long] =
-      ("low low low low low lower lower newest newest newest newest newest " +
-        "newest widest widest widest aaaa aaaa").split(" ")
+      texts.flatMap(_.split(" ")).filter(_.nonEmpty)
         .groupBy(identity).map { case (w, ws) =>
           (w.split("").toList, ws.length.toLong) }
-    val expected = (1 to 6).map { step =>
+    (1 to steps).iterator.map { step =>
       val counts = vocab.toSeq.flatMap { case (t, f) =>
         t.zip(t.tail).map(p => (p, f)) }
         .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
-      val ((a, b), c) = counts.minBy { case ((x, y), n) => (-n, x, y) }
-      def greedy(t: List[String]): List[String] = t match {
-        case `a` :: `b` :: rest => (a + b) :: greedy(rest)
-        case h :: rest => h :: greedy(rest)
-        case Nil => Nil
+      if (counts.isEmpty) None
+      else {
+        val ((a, b), c) = counts.minBy { case ((x, y), n) => (-n, x, y) }
+        def greedy(t: List[String]): List[String] = t match {
+          case `a` :: `b` :: rest => (a + b) :: greedy(rest)
+          case h :: rest => h :: greedy(rest)
+          case Nil => Nil
+        }
+        vocab = vocab.groupBy { case (t, _) => greedy(t) }
+          .map { case (t, m) => (t, m.values.sum) }
+        Some((step, a, b, a + b, c))
       }
-      vocab = vocab.groupBy { case (t, _) => greedy(t) }
-        .map { case (t, m) => (t, m.values.sum) }
-      (step, a, b, a + b, c)
-    }
+    }.takeWhile(_.isDefined).flatten.toList
+  }
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def collectMerges(merges: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    merges.orderBy("step").as[(Int, String, String, String, Long)].collect().toSeq
+  }
+
+  test("bpeMerges replays reference BPE on the classic corpus (greedy runs included)") {
+    import spark.implicits._
+    val got = collectMerges(Text.bpeMerges(bpeClassic.toDF("doc_id", "text"),
+      "text", steps = 6))
+    val expected = bpeReference(bpeClassic.map(_._2), 6)
+    assert(expected.length == 6)
     assert(got == expected, s"got $got\nexpected $expected")
+  }
+
+  test("bpeMerges and kmeansCodebook hold no persisted state after returning") {
+    import spark.implicits._
+    // both builders return a driver-local result, so no block of theirs may
+    // outlive the call — no Caches.sweep between the calls and the checks.
+    // Clean start: an earlier test's SQL-cache entry for an identical plan
+    // would answer the builder's persist and hide a leak.
+    graft.api.Caches.sweepAll(spark)
+    val before = persisted
+    val got = collectMerges(Text.bpeMerges(bpeClassic.toDF("doc_id", "text"),
+      "text", steps = 6))
+    assert(persisted == before,
+      s"bpeMerges left RDDs ${persisted -- before} persisted")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "bpeMerges left frames in the SQL cache")
+    assert(got == bpeReference(bpeClassic.map(_._2), 6))
+    val rnd = new scala.util.Random(17)
+    val nv = Vectors.normalized((0 until 12).map(i =>
+        (i.toLong, Array.fill(8)(rnd.nextGaussian()))).toDF("id", "vec"), "vec")
+      .select(col("id"), col("vd"), col("nrm"))
+    assert(Vectors.kmeansCodebook(nv, "id", k = 3, iters = 2).collect().length == 3)
+    assert(persisted == before,
+      s"kmeansCodebook left RDDs ${persisted -- before} persisted")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "kmeansCodebook left frames in the SQL cache")
+  }
+
+  test("bpeMerges on degenerate inputs: empty, all-null, one-char words, pairs run out") {
+    import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    val columns = Seq("step" -> IntegerType, "lhs" -> StringType,
+      "rhs" -> StringType, "merged" -> StringType, "pair_count" -> LongType)
+    graft.api.Caches.sweepAll(spark) // clean start, as above
+    def run(docs: org.apache.spark.sql.DataFrame, steps: Int) = {
+      val before = persisted
+      val merges = Text.bpeMerges(docs, "text", steps)
+      assert(merges.schema.map(f => f.name -> f.dataType) == columns)
+      val got = collectMerges(merges)
+      assert(persisted == before,
+        s"bpeMerges left RDDs ${persisted -- before} persisted")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "bpeMerges left frames in the SQL cache")
+      got
+    }
+    assert(run(Seq.empty[(Long, String)].toDF("doc_id", "text"), 6).isEmpty)
+    assert(run(Seq((1L, null: String), (2L, null: String)).toDF("doc_id", "text"),
+      6).isEmpty)
+    assert(run(Seq((1L, "a b  c a"), (2L, "b z")).toDF("doc_id", "text"), 6).isEmpty)
+    // more steps than the corpus has merges: the pairs run out first
+    val all = run(bpeClassic.toDF("doc_id", "text"), 50)
+    val expected = bpeReference(bpeClassic.map(_._2), 50)
+    assert(expected.nonEmpty && expected.length < 50)
+    assert(all == expected, s"got $all\nexpected $expected")
   }
 
   test("bpeApply matches a sequential reference application of the learned merges") {
@@ -561,7 +629,6 @@ class ApiSpec extends SparkSpec {
       .map(m => (m._2, m._3)).toSeq
     val got = Text.bpeApply(docs, "doc_id", "text", merges)
       .orderBy("id").as[(Long, Long, Long)].collect().toSeq
-    graft.api.Caches.sweep(spark)
 
     def greedy(t: List[String], a: String, b: String): List[String] = t match {
       case `a` :: `b` :: rest => (a + b) :: greedy(rest, a, b)
