@@ -610,8 +610,9 @@ object Stress {
     * MEGA-BASKET (the shape TPC-H never exhibits — its baskets cap at 7 —
     * but real market-basket data does). Claims under stress:
     * (a) the basket cap bounds every order's pair fan-out at
-    * C(64, 2) = 2016 edges — the mega-basket would emit C(1000, 2) =
-    * 499 500 rows onto one join key uncapped; the record shows the measured
+    * C(64, 2) = 2016 edges — each basket's pairs come from its capped
+    * sorted array, where the mega-basket would emit C(1000, 2) = 499 500
+    * uncapped; the record shows the measured
     * per-order maximum; (b) the truncation is SURFACED (n_capped_orders),
     * not silent; (c) end-to-end wall grows ~linearly in order count at a
     * fixed basket-size profile.

@@ -667,11 +667,9 @@ object Graph {
 
   /** The ordered wedge stream (lo, wu, wv) — every ordered out-neighbor
     * pair (by khi) of each low node — generated MAP-SIDE from per-node
-    * sorted adjacency arrays instead of the r12–r16 oriented⋈oriented
-    * self-join (guide §2.3/§2.4: the self-join shuffled/broadcast-probed
-    * the edge list to emit rows a per-node transform can emit from one
-    * grouped pass; the agg_assoc_rules basket-array rewrite measured the
-    * same shape change at 7×). One groupBy(lo) — EXCHANGE-FREE over a
+    * sorted adjacency arrays, no oriented⋈oriented self-join (the same
+    * generator shape as the co-order basket pairs,
+    * `graft.ops.Graphs.basketPairs`). One groupBy(lo) — EXCHANGE-FREE over a
     * writeEdges artifact bucketed by lo — collects each node's
     * khi-sorted out-neighbors; two chained explodes then emit the pairs:
     * the outer picks the wedge's earlier endpoint by position, the inner
@@ -1090,8 +1088,8 @@ object Graph {
     * Scale shape: the cap bounds per-center wedge fan-out at C(cap, 2)
     * regardless of hub degree — the df-cap discipline from Dedup.maxDf
     * applied to adjacency lists. The ranking window partitions on ONE
-    * node's neighbor list (the same bounded-partition class as the basket
-    * cap in ops.Graphs.capBaskets); a graph with 10⁸-degree hubs should
+    * node's neighbor list (a bounded partition, like one basket under the
+    * cap in `graft.ops.Graphs.basketArrays`); a graph with 10⁸-degree hubs should
     * pre-drop them by degree before ranking, which this builder leaves to
     * the caller because dropping changes the metric. Wedge counting and
     * the two degree joins are node-keyed hash operations — no cartesian,
@@ -1121,8 +1119,8 @@ object Graph {
     // filtered pairs. GraphsSpec pins hinted == unhinted.
     //
     // Wedge pairs are generated MAP-SIDE from per-center sorted adjacency
-    // arrays (r17, the trianglesOriented/agg_assoc_rules shape) instead
-    // of the kept⋈kept self-join: the cap bounds every array at `cap`
+    // arrays (the wedgeStream / ops.Graphs.basketPairs shape), no
+    // kept⋈kept self-join: the cap bounds every array at `cap`
     // elements and every center at C(cap, 2) pairs, the groupBy(src)
     // reuses the ranking window's src-hash partitioning (no new
     // exchange), and the chained explodes emit the identical ordered

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.api.{Caches, Graph, Tables}
 import H.{dec6Sum, dec6SumSql, q6, q6Sql}
@@ -138,70 +137,73 @@ $iter
 SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     })
 
-  /** Per-order basket cap for the co-order edge derivation. The pair
-    * self-join emits k(k−1)/2 edges per k-item order — invisible on TPC-H
-    * (baskets ≤ 7 items) but quadratic on real basket data, where a single
-    * 10³-item order would put 10⁶ pairs on one reducer key. The cap keeps
-    * the `maxBasket` LOWEST part keys of each order (deterministic
-    * truncation, the df-cap discipline from Dedup.maxDf) and SURFACES the
-    * number of truncated orders as `n_capped_orders` in graph_triangles,
-    * so the loss is an observable, not a silent bias. 64 ≫ 7 leaves every
-    * fixture order intact (n_capped_orders = 0 at all SFs); the Stress
-    * `triangles` path plants a 1000-item mega-basket to show the bound.
+  /** Per-order basket cap for the co-order derivations. A k-item basket
+    * yields k(k−1)/2 pairs — invisible on TPC-H (baskets ≤ 7 items) but
+    * quadratic on real basket data, where one 10³-item order would emit
+    * ~5·10⁵ pairs. Each basket keeps its `maxBasket` LOWEST part keys
+    * (deterministic truncation, the df-cap discipline from Dedup.maxDf)
+    * and the number of truncated baskets is SURFACED as `n_capped_orders`
+    * in graph_triangles, so the loss is an observable, not a silent bias.
+    * 64 ≫ 7 leaves every fixture order intact (n_capped_orders = 0 at all
+    * SFs); the Stress `triangles` path plants a 1000-item mega-basket to
+    * show the bound.
     */
   private[graft] val MAXBASKET = 64
 
-  /** Capped basket→co-occurrence-edge derivation over ANY distinct
-    * `(ok, pk)` item frame: one window pass ranks items within each basket
-    * (the partition is a single basket — bounded rows, never corpus-wide),
-    * the pair self-join runs on the capped baskets only, and the number of
-    * truncated baskets comes back as the 1-row `(n_capped_orders)` metric
-    * frame. The per-basket pair contribution is thus ≤ C(maxBasket, 2)
-    * regardless of input basket size — the property `graft.Stress`'s
-    * `triangles` path measures against a planted 1000-item basket.
+  /** The one capped-basket derivation every co-order consumer shares:
+    * over an `(ok, pk)` item frame, ONE `groupBy(ok)` collects each
+    * basket's sorted distinct part keys (`collect_set` deduplicates, so
+    * the input need not be distinct) and keeps the lowest `maxBasket` of
+    * them as the array `a`; `capped` flags a basket that had more. The
+    * null rule: a null `ok` or `pk` is not an item — it forms no pair,
+    * takes no cap slot and makes no basket (the oracles' `li` CTEs filter
+    * the same nulls).
+    */
+  private def basketArrays(li: DataFrame,
+      maxBasket: Int = MAXBASKET): DataFrame =
+    li.filter(col("ok").isNotNull && col("pk").isNotNull)
+      .groupBy("ok")
+      .agg(sort_array(collect_set(col("pk"))).as("all"))
+      .select(slice(col("all"), 1, maxBasket).as("a"),
+        (size(col("all")) > maxBasket).as("capped"))
+
+  /** Every ordered pair `(u, v)`, `u < v`, of each [[basketArrays]]
+    * basket — one row per basket holding both, so ≤ C(maxBasket, 2) rows
+    * per basket. Generated map-side, no join: `posexplode` picks the
+    * earlier item by position and the inner `explode` slices the strictly
+    * later ones (the [[graft.api.Graph]] wedge-stream shape), so per-row
+    * state is the basket array, never its pair array.
+    */
+  private def basketPairs(b: DataFrame): DataFrame =
+    b.select(col("a"), posexplode(col("a")).as(Seq("i", "u")))
+      .select(col("u"),
+        explode(slice(col("a"), col("i") + lit(2), size(col("a")))).as("v"))
+
+  /** The 1-row `(n_capped_orders)` frame: baskets truncated by the cap. */
+  private def cappedCount(b: DataFrame): DataFrame =
+    b.agg(count(when(col("capped"), lit(1))).as("n_capped_orders"))
+
+  /** The distinct capped co-occurrence edges `(u, v)` of any `(ok, pk)`
+    * item frame plus the 1-row truncation metric — [[basketPairs]] and
+    * [[cappedCount]] over one [[basketArrays]] derivation.
     */
   private[graft] def capBaskets(li: DataFrame,
       maxBasket: Int = MAXBASKET): (DataFrame, DataFrame) = {
-    val (kept, capStats) = cappedItems(li, maxBasket)
-    val e0 = kept.as("a").join(kept.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .select(col("a.pk").as("u"), col("b.pk").as("v"))
-      .distinct()
-    (e0, capStats)
+    val b = basketArrays(li, maxBasket)
+    (basketPairs(b).distinct(), cappedCount(b))
   }
 
-  /** The capped (ok, pk) item frame itself plus the truncation metric —
-    * the shared stage under [[capBaskets]]'s distinct edge derivation and
-    * [[graphAssocRules]]'s counted pair derivation (one definition of
-    * "which items survive the basket cap", so the graph keys and the
-    * rules key cannot disagree about it).
-    */
-  private[graft] def cappedItems(li: DataFrame,
-      maxBasket: Int = MAXBASKET): (DataFrame, DataFrame) = {
-    val rk = li.withColumn("rk",
-      row_number().over(Window.partitionBy("ok").orderBy("pk")))
-    val kept = rk.filter(col("rk") <= maxBasket).select("ok", "pk")
-    val capStats = rk.filter(col("rk") > maxBasket)
-      .agg(countDistinct(col("ok")).as("n_capped_orders"))
-    (kept, capStats)
-  }
-
-  /** The capped part co-order edge list `e0(u, v)`, `u < v`, plus the
-    * truncation metric — [[capBaskets]] over the fixture's distinct
-    * (order, part) pairs.
-    */
-  private[graft] def coOrderEdges(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) =
-    capBaskets(T.lineitem(s, d)
+  /** The fixture's `(ok, pk)` items: one row per lineitem. */
+  private def coOrderItems(s: SparkSession, d: String): DataFrame =
+    T.lineitem(s, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct())
 
   /** The PERSISTED co-order graph artifact: the WEIGHTED capped co-order
     * edge list `(u, v, w)` (`u < v`, `w` = number of distinct co-ordering
     * baskets) as a bucketed [[graft.api.Graph.edgesOrDerive]] table, read
     * by every graph key. One artifact serves all consumers because the
     * weighted list SUBSUMES the distinct one: `select(u, v)` IS
-    * [[coOrderEdges]]' e0 (the pair aggregate's group key), `w ≥ 3` is
+    * [[capBaskets]]' edge list (the pair aggregate's group key), `w ≥ 3` is
     * graph_components' support filter, and `(u, v, w)` is
     * graph_label_prop_weighted's input — so read-back == direct derivation
     * row-for-row on every path (GraphsSpec pins it) and the DuckDB oracles,
@@ -209,24 +211,21 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     * end-to-end.
     *
     * The 1-row basket-truncation metric is its own artifact
-    * (`coorder_meta`): graph_triangles surfaces `n_capped_orders` from it
-    * rather than re-running the ranking window. Both go through the
+    * (`coorder_meta`), which graph_triangles surfaces. Both go through the
     * [[graft.api.Tables.tableOrDerive]] gate, so either is re-derived
-    * alone when it is missing.
+    * alone when it is missing. A derivation builds the [[basketArrays]]
+    * frame once — one lineitem scan, no window, no join — and both tables
+    * read it; it is freed before the call returns, so nothing the
+    * derivation persisted outlives it.
     */
   private[graft] def coOrderArtifact(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = {
-    lazy val (kept, capStats) = cappedItems(T.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct())
+      : (DataFrame, DataFrame) = Caches.scoped {
+    lazy val b = Caches.cache(basketArrays(coOrderItems(s, d)))
     val meta = Tables.tableOrDerive(s, Tables.artifactName("coorder_meta", d))(
-      capStats.coalesce(1))
+      cappedCount(b).coalesce(1))
     val ew = Graph.edgesOrDerive(s, Tables.artifactName("coorder", d),
         payload = Seq("w")) {
-      kept.as("a").join(kept.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
-        .agg(count(lit(1)).as("w"))
+      basketPairs(b).groupBy("u", "v").agg(count(lit(1)).as("w"))
     }
     (ew, meta)
   }
@@ -298,11 +297,19 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     lpaLabelsArtifact(s, d)
   }
 
+  /** The oracles' co-order items: distinct `(ok, pk)`, nulls excluded
+    * (the [[basketArrays]] null rule).
+    */
+  private def coOrderLiSql: String =
+    """SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL"""
+
   /** Shared oracle CTE prefix for the capped co-order graph: li → ranked →
-    * kept → e0, mirroring [[coOrderEdges]].
+    * kept → e0 — the independent window + self-join formulation of
+    * [[capBaskets]], under the same null rule.
     */
   private def coOrderSql: String =
-    s"""li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    s"""li AS ($coOrderLiSql),
 rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
 kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
 e0 AS (SELECT DISTINCT a.pk AS u, b.pk AS v FROM kept a JOIN kept b ON a.ok = b.ok AND a.pk < b.pk)"""
@@ -326,7 +333,7 @@ e0 AS (SELECT DISTINCT a.pk AS u, b.pk AS v FROM kept a JOIN kept b ON a.ok = b.
     * closing-edge probe is an inner join against the distinct oriented edge
     * list (at most one match per wedge — no fan-out). Measured shape at
     * sf0.1: 20k nodes, 1.20M edges, 41.1M wedges, 1.88M triangles.
-    * INGESTION is bounded too: [[coOrderEdges]] caps baskets at
+    * INGESTION is bounded too: [[basketArrays]] caps baskets at
     * [[MAXBASKET]] items and this key emits the truncation count.
     */
   private val graphTriangles = Q(
@@ -363,8 +370,8 @@ SELECT (SELECT count(*) FROM deg) AS n_nodes, (SELECT count(*) FROM e0) AS n_edg
     * Scale shape: per round TWO hash aggregates (neighbor-label counts,
     * then an argmax via `max(struct(cnt, −label))` — map-side combinable,
     * no per-node window sort, so a hub's label table never funnels through
-    * one sorted partition). Rides the same capped [[coOrderEdges]]
-    * ingestion as graph_triangles. The oracle expresses the identical
+    * one sorted partition). Reads the same capped [[coOrderArtifact]]
+    * as graph_triangles. The oracle expresses the identical
     * argmax as a row_number window — fixture-scale DuckDB, same rows.
     */
   /** SESSION-persisted artifact of the 4-round LPA labels on the co-order
@@ -421,8 +428,8 @@ SELECT node, label FROM l4 ORDER BY node"""
     * label, so the rounds unroll into the oracle chain; the w = 1
     * reduction to the unweighted builder is ApiSpec-pinned bit-for-bit).
     *
-    * Scale shape: the pair-count aggregate rides the shared
-    * [[cappedItems]] stage (≤ C(64,2) pairs per basket); per round the
+    * Scale shape: the stored `w` is the [[basketPairs]] count of the
+    * [[coOrderArtifact]] (≤ C(64,2) pairs per basket); per round the
     * same two map-side-combinable hash aggregates as the unweighted key.
     */
   private val graphLabelPropWeighted = Q(
@@ -445,7 +452,7 @@ l$i AS (SELECT node, label FROM (
       row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) AS rn
     FROM c$i) WHERE rn = 1)"""
       }.mkString(",\n")
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+      s"""WITH li AS ($coOrderLiSql),
 rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
 kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
 e0 AS (SELECT a.pk AS u, b.pk AS v, count(*) AS w
@@ -538,7 +545,7 @@ FROM perc"""
     * the constant `n_capped_nodes` truncation metric. `jacc` is an
     * integer ratio — identical IEEE division in both engines, emitted RAW.
     *
-    * Scale shape: rides the capped [[coOrderEdges]] ingestion, then the
+    * Scale shape: reads the capped [[coOrderArtifact]], then the
     * builder's per-center C(cap,2) wedge bound; every join is node-keyed.
     * The jacc ≥ 0.15 comparison runs on bit-identical doubles, so the
     * filter cannot tie-split across engines.
@@ -586,8 +593,8 @@ ORDER BY jacc DESC, u ASC, v ASC"""))
     * RAW (core.scala H rules; everything here is strictly positive, no
     * signed-zero exposure).
     *
-    * Scale shape: pair counting is ONE hash aggregate over the capped
-    * self-join ([[cappedItems]] bounds it at C(64,2) pairs per basket);
+    * Scale shape: pair counting is ONE hash aggregate over the
+    * [[basketPairs]] stream (≤ C(64,2) pairs per basket, no join);
     * item supports are a part-grain aggregate joined back PART-KEYED on
     * each side (never basket×basket); the basket total is a 1-row
     * broadcast. SCALING RULE (same as Dedup.maxDf's): `minSupport = 2` is
@@ -600,26 +607,10 @@ ORDER BY jacc DESC, u ASC, v ASC"""))
   private val graphAssocRules = Q(
     "agg_assoc_rules",
     (s, d) => {
-      // basket-array derivation instead of the kept⋈kept self-join: ONE
-      // (ok)-keyed aggregate collects each basket's sorted items (the cap =
-      // slice(..., 1, 64) — identical "lowest 64 part keys" semantics as
-      // cappedItems' rank filter on the same distinct input), and the pair
-      // stream is a codegen'd nested-transform generator (≤ C(64,2) structs
-      // per basket, no join). Measured sf0.1: 14.4 s → ~2 s — the self-join
-      // form spent its time RACING the shared cache population across the
-      // three concurrent broadcast subtrees (pairs/items/total), each
-      // recomputing the window+distinct until the first writer landed.
-      val baskets = Caches.cache(T.lineitem(s, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-        .groupBy("ok")
-        .agg(slice(sort_array(collect_list(col("pk"))), 1, MAXBASKET).as("a")))
-      val pairs = baskets
-        .select(explode(expr(
-          """flatten(transform(a, (x, i) ->
-             transform(slice(a, i + 2, size(a)), y ->
-               named_struct('u', x, 'v', y))))""")).as("p"))
-        .groupBy(col("p.u").as("u"), col("p.v").as("v"))
+      // one basket frame feeds the pair counts, item supports and total
+      val baskets = Caches.cache(basketArrays(coOrderItems(s, d)))
+      val pairs = basketPairs(baskets)
+        .groupBy("u", "v")
         .agg(count(lit(1)).as("s_uv"))
         .filter(col("s_uv") >= 2)
       val items = baskets.select(explode(col("a")).as("pk"))
@@ -637,7 +628,7 @@ ORDER BY jacc DESC, u ASC, v ASC"""))
             .as("lift"))
         .orderBy("u", "v")
     },
-    Some(s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+    Some(s"""WITH li AS ($coOrderLiSql),
 rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
 kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
 pairs AS (SELECT a.pk AS u, b.pk AS v, count(*) AS s_uv
@@ -663,7 +654,7 @@ ORDER BY u, v"""))
     * distribution). Deterministic with no tie-breaks: frontier BFS assigns
     * each node its unique shortest hop.
     *
-    * Scale shape: rides the capped [[coOrderEdges]] ingestion; per round
+    * Scale shape: reads the capped [[coOrderArtifact]]; per round
     * one src-keyed join + distinct + node-keyed anti-join (builder
     * scaladoc). The oracle unrolls the identical 3 rounds as NOT-IN CTEs.
     */
@@ -849,7 +840,7 @@ GROUP BY m.node ORDER BY m.node"""))
     * the prefix semantics in the builder scaladoc), sf0.01 stabilizes at
     * 2000 → 1972 → 1971.
     *
-    * Scale shape: rides the capped [[coOrderEdges]] ingestion; per round
+    * Scale shape: reads the capped [[coOrderArtifact]]; per round
     * two node-keyed joins + one hash aggregate over a shrinking node set
     * (builder scaladoc). The oracle unrolls the identical 5 rounds.
     */
@@ -944,11 +935,11 @@ FROM m"""))
     * different algorithm), so a hash match verifies the solver, not its
     * input.
     *
-    * Scale shape: the pair aggregate rides the shared [[cappedItems]]
-    * stage (≤ C(64,2) pairs per basket, hash-keyed count — map-side
-    * combinable; the support-≥3 filter prunes BEFORE the solver sees an
-    * edge); the CC solver is O(log n) pointer-doubling rounds with
-    * per-round localCheckpoint (the llm_dedup_clusters shape).
+    * Scale shape: the support count is the stored `w` of the
+    * [[coOrderArtifact]] ([[basketPairs]], ≤ C(64,2) pairs per basket;
+    * the support-≥3 filter prunes BEFORE the solver sees an edge); the
+    * CC solver is O(log n) pointer-doubling rounds with per-round
+    * localCheckpoint (the llm_dedup_clusters shape).
     */
   private val graphComponents = Q(
     "graph_components",
@@ -964,7 +955,7 @@ FROM m"""))
         .orderBy("component")
     },
     Some(s"""WITH RECURSIVE
-li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+li AS ($coOrderLiSql),
 rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
 kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
 p2 AS (SELECT a.pk AS u, b.pk AS v FROM kept a JOIN kept b
@@ -1163,7 +1154,7 @@ FROM dist, fit ORDER BY dg"""))
       val tbl = Tables.artifactName("graph_edges", d)
       Tables.rederive(s, tbl, Tables.artifactName("coorder_oriented", d),
           Tables.artifactName("coorder_deg", d)) {
-        Graph.edgesOrDerive(s, tbl)(coOrderEdges(s, d)._1)
+        Graph.edgesOrDerive(s, tbl)(capBaskets(coOrderItems(s, d))._1)
         coOrderOriented(s, d)
       }
       Graph.readEdges(s, tbl)

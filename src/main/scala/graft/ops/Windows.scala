@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import H._
@@ -412,7 +412,8 @@ ORDER BY user_id, em, event_id"""))
     * (window partitioned by (type, value) — reducer input is one tie run,
     * the win_pareto_abc shape); first/last_value are the per-type min/max
     * (the frame is ordered by value first, so the unbounded frame's
-    * first/last ARE the extremes), broadcast back from a 5-row aggregate.
+    * first/last ARE the extremes; a null value, sorting first, makes
+    * first_value null), broadcast back from a 5-row aggregate.
     *
     * Float discipline: event_id is unique (fixture contract the original
     * window's determinism already relied on), so rank == row_number over
@@ -423,32 +424,9 @@ ORDER BY user_id, em, event_id"""))
     */
   private val winFirstLastPctrank = Q(
     "win_first_last_pctrank",
-    (s, d) => {
-      val e = T.events(s, d)
-        .select(col("event_type"), col("event_id"), col("value"))
-      // per-type stats come from ONE map-side fact aggregate (5 rows), NOT
-      // from the prefix-sum output: reading them off `cc` would make cc a
-      // two-consumer frame that must be cache-materialized (measured: the
-      // cached two-consumer form ran ~2x this one) — this way cc streams
-      // straight into its single join consumer with no materialization
-      val stats = e.groupBy("event_type").agg(count(lit(1)).as("n"),
-        min(col("value")).as("first_value"),
-        max(col("value")).as("last_value"))
-      val cc = graft.api.Fts.cumulativeCounts2(
-          e, "event_type", "value", lit(1L), lit(0L))
-        .select(col("event_type"), col("value"), col("c1"), col("cum1"))
-      val wTie = Window.partitionBy("event_type", "value").orderBy("event_id")
-      e.join(cc, Seq("event_type", "value"))
-        .withColumn("rk", col("cum1") - col("c1") + row_number().over(wTie))
-        .join(broadcast(stats), "event_type")
-        .select(col("event_type"), col("event_id"), col("value"),
-          col("first_value"), col("last_value"),
-          when(col("n") === 1, lit(0.0))
-            .otherwise((col("rk") - 1).cast("double")
-              / (col("n") - 1).cast("double")).as("pct_rank"),
-          (col("rk").cast("double") / col("n").cast("double")).as("cume"))
-        .orderBy("event_type", "value", "event_id")
-    },
+    (s, d) => firstLastPctrank(T.events(s, d)
+        .select(col("event_type"), col("event_id"), col("value")))
+      .orderBy("event_type", "value", "event_id"),
     Some("""SELECT event_type, event_id, value,
 first_value(value) OVER wf AS first_value,
 last_value(value) OVER wf AS last_value,
@@ -459,6 +437,36 @@ WINDOW wo AS (PARTITION BY event_type ORDER BY value, event_id),
        wf AS (PARTITION BY event_type ORDER BY value, event_id
               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
 ORDER BY event_type, value, event_id"""))
+
+  /** [[winFirstLastPctrank]]'s plan over `e(event_type, event_id, value)`:
+    * the rows of Spark's window over `ORDER BY value, event_id`. A null
+    * value is a row like any other: it sorts first, joins its prefix-sum
+    * row null-safely and makes its type's `first_value` null (DuckDB sorts
+    * nulls last; the fixtures hold no null `value`).
+    */
+  private[graft] def firstLastPctrank(e: DataFrame): DataFrame = {
+    // per-type stats from one map-side fact aggregate, not off `cc`: a
+    // second consumer would force cc into a cache (measured ~2x slower)
+    val stats = e.groupBy("event_type").agg(count(lit(1)).as("n"),
+      when(count(col("value")) === count(lit(1)), min(col("value")))
+        .as("first_value"),
+      max(col("value")).as("last_value"))
+    val cc = graft.api.Fts.cumulativeCounts2(
+        e, "event_type", "value", lit(1L), lit(0L))
+      .select(col("event_type").as("cc_type"), col("value").as("cc_value"),
+        col("c1"), col("cum1"))
+    val wTie = Window.partitionBy("event_type", "value").orderBy("event_id")
+    e.join(cc, col("event_type") === col("cc_type") &&
+        col("value") <=> col("cc_value"))
+      .withColumn("rk", col("cum1") - col("c1") + row_number().over(wTie))
+      .join(broadcast(stats), "event_type")
+      .select(col("event_type"), col("event_id"), col("value"),
+        col("first_value"), col("last_value"),
+        when(col("n") === 1, lit(0.0))
+          .otherwise((col("rk") - 1).cast("double")
+            / (col("n") - 1).cast("double")).as("pct_rank"),
+        (col("rk").cast("double") / col("n").cast("double")).as("cume"))
+  }
 
   /** Ordered conversion funnel view → click → purchase per user: a stage
     * counts only when its FIRST qualifying event happens at-or-after the

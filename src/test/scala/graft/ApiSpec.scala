@@ -2125,6 +2125,31 @@ class ApiSpec extends SparkSpec {
     graft.api.Caches.sweep(spark)
   }
 
+  test("win_first_last_pctrank keeps null values and equals Spark's window over (value, event_id)") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // type a mixes a null into ties, b is all null, c has one row; every
+    // row must survive, nulls ranked first (Spark's ascending order)
+    val e = Seq[(String, Long, Option[Double])](("a", 1L, Some(2.0)),
+      ("a", 2L, None), ("a", 3L, Some(1.0)), ("a", 4L, Some(2.0)),
+      ("a", 5L, None), ("b", 6L, None), ("b", 7L, None), ("c", 8L, Some(5.0)))
+      .toDF("event_type", "event_id", "value")
+    val wo = Window.partitionBy("event_type").orderBy("value", "event_id")
+    val wf = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val want = e.select(col("event_type"), col("event_id"), col("value"),
+      first(col("value")).over(wf).as("first_value"),
+      last(col("value")).over(wf).as("last_value"),
+      percent_rank().over(wo).as("pct_rank"), cume_dist().over(wo).as("cume"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long]).toSeq
+    val got = rows(graft.ops.Windows.firstLastPctrank(e))
+    assert(got.length === 8)
+    assert(got === rows(want))
+    // a's null rows rank first: event 2 then 5, and a's first_value is null
+    assert(got(1) === Seq("a", 2L, null, null, 2.0, 0.0, 0.2))
+    graft.api.Caches.sweep(spark)
+  }
+
   test("artifact GC: a parameter change leaves an enumerable stale sibling; dropArtifacts sweeps it") {
     import spark.implicits._
     val dirA = "/tmp/graft_gc_fixture_a"

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Semantic checks for ops/Graphs.scala + the funnel, independent of the
@@ -10,6 +12,63 @@ import org.apache.spark.sql.functions._
   */
 class GraphsSpec extends SparkSpec
     with org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+
+  /** The window + self-join formulation of the capped co-order
+    * derivation — the DuckDB oracles' shape, kept as the independent
+    * reference for the basket-array derivation: distinct non-null items
+    * ranked within each basket, the lowest MAXBASKET kept, pairs from a
+    * kept⋈kept self-join. Returns the weighted `(u, v, w)` edges and the
+    * 1-row `n_capped_orders` frame.
+    */
+  private def windowReference(items: DataFrame): (DataFrame, DataFrame) = {
+    val li = items.filter(col("ok").isNotNull && col("pk").isNotNull)
+      .select("ok", "pk").distinct()
+    val rk = li.withColumn("rk",
+      row_number().over(Window.partitionBy("ok").orderBy("pk")))
+    val kept = rk.filter(col("rk") <= graft.ops.Graphs.MAXBASKET)
+      .select("ok", "pk")
+    val weighted = kept.as("a").join(kept.as("b"),
+        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+      .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
+      .agg(count(lit(1)).as("w"))
+    val meta = rk.filter(col("rk") > graft.ops.Graphs.MAXBASKET)
+      .agg(countDistinct(col("ok")).as("n_capped_orders"))
+    (weighted, meta)
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverse
+      .foreach(java.nio.file.Files.deleteIfExists(_))
+  }
+
+  private def rowSet(df: DataFrame): Set[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSet
+
+  /** The fixture's `(ok, pk)` lineitem projection. */
+  private def fixtureItems: DataFrame =
+    graft.ops.T.lineitem(spark, sf)
+      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
+
+  /** Runs `body` over a fresh fixture dir holding only a `lineitem.parquet`
+    * of the given `(ok, pk)` rows (so every artifact derives under a new
+    * tag), then drops that dir's artifacts and deletes it.
+    */
+  private def withLineitem[A](rows: Seq[(Option[Long], Option[Long])])(
+      body: String => A): A = {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_coorder")
+    val dir = root.toString
+    try {
+      rows.toDF("l_orderkey", "l_partkey").coalesce(1)
+        .write.parquet(s"$dir/lineitem.parquet")
+      body(dir)
+    } finally {
+      graft.api.Tables.dropArtifacts(spark, Some(dir))
+      graft.api.Caches.sweep(spark)
+      deleteTree(root)
+    }
+  }
 
   test("graph_pagerank conserves total rank mass on the symmetric graph") {
     // Each iteration redistributes every node's full rank across its edges
@@ -129,7 +188,7 @@ class GraphsSpec extends SparkSpec
     val items = spark.read.parquet(s"$sf/lineitem.parquet")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .distinct().as[(Long, Long)].collect()
-    // cap baskets at 64 lowest part keys, like Graphs.cappedItems
+    // cap baskets at 64 lowest part keys, like Graphs.basketArrays
     val kept = items.groupBy(_._1).toSeq.flatMap { case (ok, g) =>
       g.map(_._2).sorted.take(64).map(pk => (ok, pk))
     }
@@ -311,14 +370,7 @@ class GraphsSpec extends SparkSpec
     // the emitted representative — label and rep must coincide
     assert(comp.filter(col("component") =!= col("rep_part")).count() == 0)
     // components partition the node set of the support-3 pair graph
-    val (kept, _) = graft.ops.Graphs.cappedItems(
-      graft.ops.T.lineitem(spark, sf)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct())
-    val pairs = kept.as("a").join(kept.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
-      .agg(count(lit(1)).as("w")).filter(col("w") >= 3)
+    val pairs = windowReference(fixtureItems)._1.filter(col("w") >= 3)
     val nNodes = pairs.select(col("u").as("n"))
       .union(pairs.select(col("v").as("n"))).distinct().count()
     val covered = comp.agg(sum("n_parts")).as[Long].first()
@@ -426,34 +478,144 @@ class GraphsSpec extends SparkSpec
   test("co-order artifact read-back equals the direct derivation (r12)") {
     // the contract every artifact-consuming graph key rests on: the stored
     // bucketed (u, v, w) table IS the capped weighted co-order derivation,
-    // row for row — so select(u, v) is coOrderEdges' e0, w >= 3 is the
+    // row for row — so select(u, v) is capBaskets' edge list, w >= 3 is the
     // components support filter, and the meta row is the truncation metric
+    // — checked against the window + self-join formulation, w and the meta
+    // row included
     val (ew, meta) = graft.ops.Graphs.coOrderArtifact(spark, sf)
-    val li = spark.read.parquet(s"$sf/lineitem.parquet")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-    val direct = graft.ops.Graphs.capBaskets(li)._1 // distinct (u, v)
-    // the weighted reference must come from the CAPPED kept frame — the
-    // artifact's actual derivation — not the raw pairs: on this fixture
-    // the two coincide (n_capped_orders == 0, asserted below), but a
-    // fixture that ever engaged MAXBASKET would otherwise compare the
-    // artifact against the wrong reference instead of catching divergence
-    val kept = graft.ops.Graphs.cappedItems(li)._1
-    val directW = kept.as("a").join(kept.as("b"),
-        col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-      .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
-      .agg(count(lit(1)).as("w"))
-    def keySet(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.mkString("|")).toSet
-    assert(keySet(ew.select("u", "v")) === keySet(direct))
-    assert(keySet(ew) === keySet(directW))
+    val (refW, refMeta) = windowReference(fixtureItems)
+    val direct = graft.ops.Graphs.capBaskets(fixtureItems)._1 // distinct (u, v)
+    assert(rowSet(ew.select("u", "v")) === rowSet(direct))
+    assert(rowSet(ew) === rowSet(refW))
+    assert(rowSet(meta) === rowSet(refMeta))
     // second touch READS (derive-fallback not re-entered): catalog knows it
     assert(spark.catalog.tableExists(
       s"graft_coorder_${graft.api.Tables.dirTag(sf)}"))
     val (ew2, _) = graft.ops.Graphs.coOrderArtifact(spark, sf)
-    assert(keySet(ew2) === keySet(ew))
+    assert(rowSet(ew2) === rowSet(ew))
     assert(meta.collect()(0).getAs[Long]("n_capped_orders") === 0L)
     graft.api.Caches.sweep(spark)
+  }
+
+  test("co-order artifact on a planted 1000-item basket equals the window + self-join reference") {
+    // one mega-basket (parts 1..1000) beside small baskets that share some
+    // of its lowest parts: the cap keeps parts 1..64 of the big basket, so
+    // it contributes C(64, 2) = 2016 pairs and is the one capped order
+    val small = (1L to 40L).map(ok =>
+      ok -> (0L until 2L + ok % 5).map(j => 1L + (ok * 7 + j * 13) % 120))
+    val rows = (1L to 1000L).map(pk => (Some(0L), Some(pk))) ++
+      small.flatMap { case (ok, ps) => ps.map(pk => (Some(ok), Some(pk))) }
+    withLineitem(rows) { dir =>
+      val (ew, meta) = graft.ops.Graphs.coOrderArtifact(spark, dir)
+      val (refW, refMeta) = windowReference(graft.ops.T.lineitem(spark, dir)
+        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")))
+      assert(rowSet(ew) === rowSet(refW))
+      assert(rowSet(meta) === rowSet(refMeta))
+      assert(meta.head().getAs[Long]("n_capped_orders") === 1L)
+      val smallPairs = small.map { case (_, ps) =>
+        val k = ps.distinct.size.toLong
+        k * (k - 1) / 2
+      }.sum
+      assert(ew.agg(sum("w")).head().getLong(0) === 2016L + smallPairs)
+    }
+  }
+
+  test("co-order null rule: null keys are not items in capBaskets, the artifact and agg_assoc_rules") {
+    // a null order key or part key is not an item: no pair, no cap slot,
+    // no basket. Basket 1 holds 65 parts plus a null part (capped: parts
+    // 1..64 kept); basket 2 holds exactly 64 parts plus a null (not
+    // capped); basket 3 repeats an (ok, pk) row; basket 4 holds only a
+    // null part (no basket); the null-ok rows belong to no basket
+    val raw: Seq[(Option[Long], Option[Long])] =
+      (1L to 65L).map(pk => (Some(1L), Some(pk))) ++ Seq((Some(1L), None)) ++
+      (101L to 164L).map(pk => (Some(2L), Some(pk))) ++ Seq((Some(2L), None)) ++
+      Seq((Some(3L), Some(1L)), (Some(3L), Some(1L)), (Some(3L), Some(2L)),
+        (Some(3L), Some(200L)), (Some(4L), None), (None, Some(1L)),
+        (None, Some(2L)), (None, None), (Some(5L), Some(101L)),
+        (Some(5L), Some(102L)))
+    // driver-side reference
+    val baskets = raw.collect { case (Some(ok), Some(pk)) => (ok, pk) }
+      .distinct.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+    val kept = baskets.view.mapValues(_.take(graft.ops.Graphs.MAXBASKET)).toMap
+    val nCapped = baskets.count(_._2.size > graft.ops.Graphs.MAXBASKET).toLong
+    val pairW = kept.values.toSeq.flatMap(ps =>
+        for (i <- ps.indices; j <- (i + 1) until ps.size) yield (ps(i), ps(j)))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val itemSup = kept.values.toSeq.flatten
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val nb = kept.size.toLong
+    assert(nCapped === 1L && nb === 4L)
+    assert(pairW.contains((63L, 64L)) && !pairW.contains((64L, 65L)))
+    import spark.implicits._
+    val items = raw.toDF("ok", "pk")
+    val (e0, capStats) = graft.ops.Graphs.capBaskets(items)
+    assert(rowSet(e0) === pairW.keySet.map { case (u, v) => s"$u|$v" })
+    assert(capStats.head().getLong(0) === nCapped)
+    withLineitem(raw) { dir =>
+      val (ew, meta) = graft.ops.Graphs.coOrderArtifact(spark, dir)
+      assert(rowSet(ew) === pairW.map { case ((u, v), w) => s"$u|$v|$w" }.toSet)
+      assert(meta.head().getAs[Long]("n_capped_orders") === nCapped)
+      val rules = SparkEntry.queries("agg_assoc_rules")(spark, dir).collect()
+        .map(r => (r.getAs[Long]("u"), r.getAs[Long]("v")) ->
+          (r.getAs[Long]("s_uv"), r.getAs[Long]("s_u"), r.getAs[Long]("s_v"),
+            r.getAs[Double]("lift"))).toMap
+      val want = pairW.filter(_._2 >= 2L).map { case ((u, v), suv) =>
+        (u, v) -> ((suv, itemSup(u), itemSup(v),
+          (suv.toDouble * nb.toDouble) / (itemSup(u).toDouble * itemSup(v).toDouble)))
+      }
+      assert(want.keySet === Set((1L, 2L), (101L, 102L)))
+      assert(rules === want)
+    }
+  }
+
+  test("co-order artifact derivation: one lineitem scan, no window or join, nothing left persisted") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    // a fresh tag over the real fixture, so the derivation runs; from a
+    // Caches.sweepAll clean start, an earlier test's SQL-cache entry for an
+    // identical plan cannot answer the derivation's persist
+    val root = java.nio.file.Files.createTempDirectory("graft_coorder_hygiene")
+    val dir = java.nio.file.Files.createSymbolicLink(root.resolve("fixture"),
+      java.nio.file.Paths.get(sf)).toString
+    graft.api.Caches.sweepAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => plans.add(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (ew, meta) = graft.ops.Graphs.coOrderArtifact(spark, dir)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      assert(spark.sparkContext.getPersistentRDDs.keySet === before,
+        "the derivation left RDDs persisted")
+      assert(spark.sharedState.cacheManager.isEmpty,
+        "the derivation left an SQL cache entry")
+      def nodes(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+        p +: p.children.flatMap(nodes)
+      val all = plans.toArray(Array.empty[SparkPlanInfo]).toSeq.flatMap(nodes)
+      assert(all.nonEmpty, "no executed plan was seen")
+      val banned = all.map(_.nodeName).filter(n => n.contains("Window") ||
+        n.contains("Join") || n.contains("CartesianProduct")).distinct
+      assert(banned.isEmpty, s"window or join in the derivation: $banned")
+      // one physical scan: every plan that shows a lineitem scan shows the
+      // same node (the cached basket frame's), identified by its metrics
+      val scans = all.filter(n => n.nodeName.startsWith("Scan") &&
+          n.metadata.get("Location").exists(_.contains("lineitem.parquet")))
+        .map(_.metrics.map(_.accumulatorId).toSet).distinct
+      assert(scans.size === 1, s"lineitem scanned ${scans.size} times")
+      assert(meta.head().getAs[Long]("n_capped_orders") === 0L)
+      assert(ew.count() === graft.ops.Graphs.coOrderArtifact(spark, sf)._1.count())
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      graft.api.Tables.dropArtifacts(spark, Some(dir))
+      deleteTree(root)
+    }
   }
 
   test("txn artifact read-back equals the direct derivation (r12)") {
