@@ -35,8 +35,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Harness surfaces (Verify/Bench/GoldenSpec) call [[sweepAll]] between
   * queries.
-  * Checkpointed solver state is not registered here: the solvers and
-  * [[Text.bpeMerges]] free their superseded rounds through [[Checkpoints]]
+  * Checkpointed solver state is not registered here: the solvers free
+  * their superseded rounds through [[Checkpoints]]
   * (frames a round's step caches are freed with the round). A builder
   * whose result is driver-local frees all of its state before it returns
   * and registers nothing here; only the blocks backing a solver's RETURNED

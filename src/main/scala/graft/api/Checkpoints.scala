@@ -10,12 +10,13 @@ import org.apache.spark.storage.StorageLevel
   * open-ended solver runs through ([[Dedup.connectedComponents]],
   * [[Graph.pagerankUntil]], [[Graph.kcoreUntil]], and the min-reach and
   * mark loops of [[Graph.stronglyConnected]]). Loops whose step reads more
-  * than the state call [[tracked]] and [[free]] directly:
-  * [[Text.bpeMerges]] folds the pair its probe won into each new state.
+  * than the state call [[tracked]] and [[free]] directly for the rest:
+  * [[Dedup.connectedComponents]] checkpoints the edge frame every round
+  * reads and frees it once the loop ends.
   *
-  * The free rule: a builder whose result is driver-local (a collected
-  * merge list, a codebook) frees all of its state before it returns, so
-  * nothing it checkpointed outlives the call; only a builder that returns
+  * The free rule: a builder whose result is driver-local (a k-means
+  * codebook) frees all of its state before it returns, so nothing it
+  * checkpointed outlives the call; only a builder that returns
   * a frame over its final state leaves that state's blocks behind.
   *
   * An open-ended loop must truncate LOGICAL lineage every round (persist

@@ -578,7 +578,9 @@ object Dedup {
     * of corpus dedup (near-dup is transitive only through clustering: A~B,
     * B~C must collapse to ONE survivor even when A!~C directly). Output:
     * (id, component) with component = min id of the cluster; isolated ids
-    * never enter the input and are implicitly their own component.
+    * never enter the input and are implicitly their own component. A pair
+    * with a null endpoint is not an edge (the co-order baskets' rule): it
+    * is dropped, so its other endpoint joins no component through it.
     *
     * Algorithm: Shiloach–Vishkin-style hook + pointer-jump. Each round
     *  1. HOOK: every node takes the minimum of its own label and its
@@ -617,9 +619,10 @@ object Dedup {
     */
   def connectedComponentsWithRounds(pairs: DataFrame, maxIter: Int = 50,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
+    val real = pairs.filter(col("a_id").isNotNull && col("b_id").isNotNull)
     val edges = Checkpoints.tracked(
-      pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst"))),
+      real.select(col("a_id").as("src"), col("b_id").as("dst"))
+        .unionAll(real.select(col("b_id").as("src"), col("a_id").as("dst"))),
       checkpointDir)
     val (comp, rounds, converged) = Checkpoints.fixedPoint(
         edges.select(col("src").as("id")).distinct()

@@ -209,7 +209,7 @@ object Fts {
     val cuts = pre.groupBy(col(keyCol))
       .agg(percentile_approx(col(valueCol).cast("double"),
         typedLit(fracs), lit(1000)).as("cuts"))
-    pre.join(broadcast(cuts), Seq(keyCol))
+    joinKeys(pre, cuts, Seq(keyCol))
       .withColumn("bucket", bucketOf(col(valueCol), col("cuts")))
       .drop("cuts")
   }
@@ -345,7 +345,8 @@ object Fts {
     *   - the exclusive offsets: ONE window over that aggregate,
     *     partitioned on the key alone but bounded by construction (its
     *     input never holds more than `buckets` rows per key);
-    *   - the offsets broadcast back onto the bucketed rows;
+    *   - the offsets broadcast back onto the bucketed rows, null-safe
+    *     on the key ([[joinKeys]]);
     *   - the within-bucket running sums, all over ONE
     *     (key, bucket)-partitioned window spec (one WindowExec, one sort).
     * Exact for LONG sums and for integer-valued double sums (≪2^53) in
@@ -363,10 +364,20 @@ object Fts {
       case (s, _) => coalesce(sum(col(s"b_$s")).over(wOff), lit(0)).as(s"off_$s")
     }: _*)
     val w = Window.partitionBy(col(keyCol), col("bucket")).orderBy(valueCol)
-    sums.foldLeft(bucketed.join(broadcast(offsets), Seq(keyCol, "bucket"))) {
+    sums.foldLeft(joinKeys(bucketed, offsets, Seq(keyCol, "bucket"))) {
       case (df, (s, cum)) =>
         df.withColumn(cum, col(s"off_$s") + sum(col(s)).over(w))
     }
+  }
+
+  /** `df` joined on `keys` to the small per-key frame `side`, broadcast
+    * and null-safe (`<=>`): a null key is a group like any other, so its
+    * rows keep their side row instead of vanishing at an inner equi-join.
+    */
+  private def joinKeys(df: DataFrame, side: DataFrame, keys: Seq[String]): DataFrame = {
+    val r = side.toDF(side.columns.toSeq.map(c => if (keys.contains(c)) s"r_$c" else c): _*)
+    df.join(broadcast(r), keys.map(k => col(k) <=> col(s"r_$k")).reduce(_ && _))
+      .drop(keys.map(k => s"r_$k"): _*)
   }
 
   /** The shared core of the weighted-percentile / rank-cutoff family: one
@@ -393,8 +404,8 @@ object Fts {
     val pre = Caches.cache(df.groupBy(col(keyCol), col(valueCol))
       .agg(sum(col(weightCol)).as("w")))
     val stats = pre.groupBy(keyCol).agg(sum(col("w")).as("tw"))
-    val bucketed = equiDepthBucketed(pre, keyCol, valueCol, buckets)
-      .join(broadcast(stats), Seq(keyCol))
+    val bucketed = joinKeys(equiDepthBucketed(pre, keyCol, valueCol, buckets),
+      stats, Seq(keyCol))
     prefixSums(bucketed, keyCol, valueCol, Seq("w" -> "cw"))
       .select(col(keyCol), col(valueCol), col("w"), col("tw"), col("cw"))
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Parameterized text-analysis toolkit over any frame with an id column and
   * a text column — quality scoring, TF-IDF, language ID, token counting.
@@ -706,112 +707,91 @@ object Text {
           .as("contamination"))
   }
 
-  /** Byte-pair-encoding merge training (Sennrich et al. 2016) as it runs at
-    * corpus scale: the working set is the WORD-FREQUENCY table (vocab-sized
-    * — Zipf keeps it orders of magnitude below the corpus even at 100 TB),
-    * each merge step is one pair-count aggregate over it plus a 1-row
-    * driver probe of the winning pair (count desc, then lexicographic —
-    * fully deterministic), and the merge applies as a greedy left-to-right
-    * fold inside the engine (`functions.aggregate`, codegen'd — no UDF).
+  /** Byte-pair-encoding merge training (Sennrich et al. 2016). The merge
+    * loop is sequential over a vocabulary-sized state, so it runs the way
+    * the reference trainer, HF tokenizers, SentencePiece and MLlib's
+    * CountVectorizer/Word2Vec run theirs: ONE Spark aggregate builds the
+    * word-frequency table ([[bpeVocabulary]] — Zipf keeps it orders of
+    * magnitude below the corpus) and collects it, and the merges run in
+    * driver memory over each word's (tokens, freq). A step sums pair counts
+    * by word frequency, picks the winner by (count desc, lhs, rhs) in
+    * Spark's string order (UTF-8 binary, `UTF8String.binaryCompare`, which
+    * sorts a supplementary character above U+FF61 where
+    * `String.compareTo` sorts it below) and applies it with [[bpeFold]].
     *
-    * The fold rides a '|'-delimited string accumulator (engine-portable:
-    * DuckDB's `list_reduce` seeds from the first ELEMENT, so an array
-    * accumulator can't cross engines — the string form runs bit-identically
-    * in both): merge (a, b) fires when the next token is `b` and the
-    * accumulator's LAST token is `a`, consuming greedily left-to-right —
-    * exactly BPE's within-run pairing ("a a a" under (a,a) → "aa a", never
-    * "a aa"). Tokens containing '|' would corrupt the encoding and are
-    * filtered out of the vocabulary (documented precondition: pick a
-    * delimiter outside the corpus charset).
-    *
-    * The vocabulary state lives in [[Checkpoints]]: the word-frequency
-    * table and each step's re-tokenization are one eager checkpoint each,
-    * a step frees the state it replaces once the next one is written, and
-    * the final state is freed before returning — at most two states exist,
-    * only during a fold, and nothing stays persisted after the call (the
-    * result is the driver-local merge list). The last step folds nothing,
-    * since no probe would read it. Output: one row per merge step — (step,
-    * lhs, rhs, merged, pair_count); stops early if the vocabulary runs out
-    * of pairs.
+    * Bounds: driver memory is O(vocabulary tokens) and driver work is
+    * O(steps × vocabulary tokens); nothing is persisted. Output: one row
+    * per merge step — (step, lhs, rhs, merged, pair_count); stops early
+    * once the vocabulary has no pair left.
     */
   def bpeMerges(docs: DataFrame, textCol: String, steps: Int = 10): DataFrame = {
     require(steps > 0, s"steps must be positive, got $steps")
-    val spark = docs.sparkSession
-    var words = Checkpoints.tracked(docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) > 0 && !col("w").contains("|"))
-      .groupBy("w").agg(count(lit(1)).as("freq"))
-      .withColumn("toks", split(col("w"), "")), None)
-    val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, String, Long)]
-    var exhausted = false
-    try {
-      for (step <- 1 to steps if !exhausted) {
-        val best = words
-          .filter(size(col("toks")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(1, size(toks) - 1), " +
-              "i -> struct(toks[i - 1] AS a, toks[i] AS b))")).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("freq")).as("c"))
-          .orderBy(col("c").desc, col("a").asc, col("b").asc)
-          .limit(1).collect()
-        if (best.isEmpty) exhausted = true
-        else {
-          val (a, b, c) = (best(0).getString(0), best(0).getString(1),
-            best(0).getLong(2))
-          merges += ((step, a, b, a + b, c))
-          if (step < steps) {
-            val next = Checkpoints.tracked(
-              words.withColumn("toks", bpeFoldOnce(col("toks"), a, b)), None)
-            Checkpoints.free(words)
-            words = next
-          }
+    val byRank = Ordering.Tuple3(Ordering.Long.reverse, sparkStringOrder, sparkStringOrder)
+    var vocab = bpeVocabulary(docs, textCol).map { case (_, toks, freq) => (toks, freq) }
+    val merges = (1 to steps).iterator.map { step =>
+      val counts = scala.collection.mutable.HashMap.empty[(String, String), Long]
+        .withDefaultValue(0L)
+      for ((toks, freq) <- vocab; i <- 1 until toks.length)
+        counts((toks(i - 1), toks(i))) += freq
+      counts.iterator.map { case ((a, b), c) => (c, a, b) }.minOption(byRank)
+        .map { case (c, a, b) =>
+          vocab = vocab.map { case (toks, freq) => (bpeFold(toks, a, b), freq) }
+          (step, a, b, a + b, c)
         }
-      }
-    } finally Checkpoints.free(words)
-    import spark.implicits._
-    merges.toSeq.toDF("step", "lhs", "rhs", "merged", "pair_count")
+    }.takeWhile(_.isDefined).flatten.toList
+    docs.sparkSession.createDataFrame(merges).toDF("step", "lhs", "rhs", "merged", "pair_count")
   }
 
-  /** One greedy left-to-right merge pass of pair (a, b) over a token array
-    * — the '|'-string fold [[bpeMerges]] documents, shared with
-    * [[bpeApply]] so training and application cannot drift.
+  private val sparkStringOrder: Ordering[String] = (x, y) =>
+    UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+
+  /** The (word, characters, frequency) table BPE trains and applies over,
+    * collected: words are the space-split, non-empty words of `textCol`,
+    * and a word's initial tokens are its characters (`split(w, "")`,
+    * one per code point). Words containing '|' are left out — the
+    * DuckDB twin folds on a '|'-delimited string.
     */
-  private def bpeFoldOnce(toks: Column, a: String, b: String): Column =
-    split(
-      aggregate(
-        slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-        element_at(toks, 1),
-        (acc, x) =>
-          when(x === lit(b) &&
-              (acc === lit(a) || acc.endsWith(concat(lit("|"), lit(a)))),
-            concat(acc.substr(lit(1), length(acc) - lit(a.length)),
-              lit(a + b)))
-            .otherwise(concat(acc, lit("|"), x))),
-      "\\|")
+  private def bpeVocabulary(docs: DataFrame,
+      textCol: String): Array[(String, Array[String], Long)] =
+    bpeWords(docs, textCol).groupBy("w").agg(count(lit(1)).as("freq"))
+      .select(col("w"), split(col("w"), ""), col("freq"))
+      .collect().map(r => (r.getString(0), r.getSeq[String](1).toArray, r.getLong(2)))
+
+  /** `docs`' columns with one row per BPE word `w` of `textCol`. */
+  private def bpeWords(docs: DataFrame, textCol: String): DataFrame =
+    docs.withColumn("w", explode(split(col(textCol), " ")))
+      .filter(length(col("w")) > 0 && !col("w").contains("|"))
+
+  /** One greedy left-to-right merge pass of pair (a, b) over a word's
+    * tokens — BPE's within-run pairing: "a a a" under (a, a) becomes
+    * "aa a", never "a aa". Training and [[bpeApply]] share it.
+    */
+  private def bpeFold(toks: Array[String], a: String, b: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var i = 0
+    while (i < toks.length) {
+      if (i + 1 < toks.length && toks(i) == a && toks(i + 1) == b) {
+        out += a + b; i += 2
+      } else { out += toks(i); i += 1 }
+    }
+    out.result()
+  }
 
   /** Applies a learned merge list ([[bpeMerges]] output order) to
-    * re-tokenize a corpus: the folds run over the DISTINCT word table
-    * (vocab-sized work — each merge is one codegen'd pass, never touching
-    * the corpus), and only the final per-word token COUNT joins back to
-    * the corpus word stream (a vocab-sized side AQE is free to broadcast;
-    * no hint, same discipline as the LM model joins). Output per doc:
-    * (id, n_words, n_bpe_toks) — the compression a tokenizer buyer cares
-    * about, computed without materializing a single tokenized document.
+    * re-tokenize a corpus: the merges fold over the collected distinct
+    * word table on the driver ([[bpeFold]], training's fold), and only the
+    * per-word token COUNT joins back to the corpus word stream as a small
+    * local frame (no hint — AQE decides whether to broadcast it). Output
+    * per doc: (id, n_words, n_bpe_toks) — the compression a tokenizer
+    * buyer cares about, computed without materializing a single tokenized
+    * document. Bounds as [[bpeMerges]], with steps = `merges.length`.
     */
   def bpeApply(docs: DataFrame, idCol: String, textCol: String,
       merges: Seq[(String, String)]): DataFrame = {
-    val words0 = docs
-      .select(explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) > 0 && !col("w").contains("|"))
-      .distinct()
-      .withColumn("toks", split(col("w"), ""))
-    val folded = merges.foldLeft(words0) { case (df, (a, b)) =>
-      df.withColumn("toks", bpeFoldOnce(col("toks"), a, b))
-    }
-    val wtoks = folded.select(col("w"), size(col("toks")).as("n_bpe"))
-    docs.select(col(idCol).as("id"), explode(split(col(textCol), " ")).as("w"))
-      .filter(length(col("w")) > 0 && !col("w").contains("|"))
+    val wtoks = docs.sparkSession.createDataFrame(bpeVocabulary(docs, textCol).toSeq.map {
+      case (w, toks, _) => (w, merges.foldLeft(toks) { case (t, (a, b)) => bpeFold(t, a, b) }.length)
+    }).toDF("w", "n_bpe")
+    bpeWords(docs.select(col(idCol).as("id"), col(textCol)), textCol)
       .join(wtoks, Seq("w"))
       .groupBy("id")
       .agg(count(lit(1)).as("n_words"), sum(col("n_bpe")).as("n_bpe_toks"))

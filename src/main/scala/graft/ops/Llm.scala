@@ -1883,11 +1883,12 @@ GROUP BY lang ORDER BY lang"""))
 
   /** BPE merge training — [[graft.api.Text.bpeMerges]]: 10 deterministic
     * most-frequent-pair merges over the corpus word-frequency table
-    * (Sennrich et al. 2016), tie-broken lexicographically. The oracle
+    * (Sennrich et al. 2016), tie-broken lexicographically. The engine
+    * merges on the driver over the collected vocabulary; the oracle
     * unrolls the identical 10 rounds as chained CTEs (the `kmeansSql`
-    * discipline), each applying the engine-portable '|'-string greedy fold
-    * through DuckDB's `list_reduce` — both engines derive bit-identical
-    * merge tables, pair counts included.
+    * discipline), each applying a '|'-string greedy fold through DuckDB's
+    * `list_reduce` — both derive bit-identical merge tables, pair counts
+    * included.
     */
   private val llmBpeTrain = Q(
     "llm_bpe_train",
@@ -1930,8 +1931,8 @@ w$i AS (SELECT w, freq, string_split(list_reduce(toks, (acc, x) ->
     * learned by [[llmBpeTrain]]'s 10 steps: per-word folds over the
     * DISTINCT vocabulary only, token counts joined back to the corpus word
     * stream (vocab-sized side, no hint — AQE decides), per-doc whitespace
-    * vs BPE token counts out. Train and apply share one fold definition
-    * (`bpeFoldOnce`), so the oracle re-deriving both from the same CTE
+    * vs BPE token counts out. Train and apply share one driver fold
+    * (`Text.bpeFold`), so the oracle re-deriving both from the same CTE
     * chain pins the full train→apply loop cross-engine.
     */
   private val llmBpeApply = Q(

@@ -218,6 +218,17 @@ class ApiSpec extends SparkSpec {
     assert(comp == Map((m - 1) -> (m - 3), (m - 2) -> (m - 3), (m - 3) -> (m - 3)))
   }
 
+  test("connectedComponents: a pair with a null endpoint is not an edge") {
+    import spark.implicits._
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(2L), Some(3L)), (None, Some(4L)),
+      (Some(5L), None), (Some(7L), Some(8L)), (None, None)).toDF("a_id", "b_id")
+    val comp = Dedup.connectedComponents(pairs)
+      .as[(Option[Long], Option[Long])].collect().toSet
+    assert(comp == Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L)
+      .map { case (i, c) => (Option(i), Option(c)) }, s"got $comp")
+  }
+
   test("open-ended graph solvers free every superseded round") {
     import spark.implicits._
     import graft.api.{Caches, Graph}
@@ -527,7 +538,7 @@ class ApiSpec extends SparkSpec {
     var vocab: Map[List[String], Long] =
       texts.flatMap(_.split(" ")).filter(_.nonEmpty)
         .groupBy(identity).map { case (w, ws) =>
-          (w.split("").toList, ws.length.toLong) }
+          (codePoints(w), ws.length.toLong) }
     (1 to steps).iterator.map { step =>
       val counts = vocab.toSeq.flatMap { case (t, f) =>
         t.zip(t.tail).map(p => (p, f)) }
@@ -545,6 +556,30 @@ class ApiSpec extends SparkSpec {
         Some((step, a, b, a + b, c))
       }
     }.takeWhile(_.isDefined).flatten.toList
+  }
+
+  /** A word's initial BPE tokens as Spark's `split(w, "")` yields them, one
+    * per code point (Java's `split("")` cuts a surrogate pair in two).
+    */
+  private def codePoints(w: String): List[String] =
+    w.codePoints.toArray.toList.map(cp => new String(Character.toChars(cp)))
+
+  /** Sequential reference application: per doc, (id, words, tokens after
+    * folding `merges` greedily over each word in order).
+    */
+  private def bpeApplyReference(docs: Seq[(Long, String)],
+      merges: Seq[(String, String)]): Seq[(Long, Long, Long)] = {
+    def greedy(t: List[String], a: String, b: String): List[String] = t match {
+      case `a` :: `b` :: rest => (a + b) :: greedy(rest, a, b)
+      case h :: rest => h :: greedy(rest, a, b)
+      case Nil => Nil
+    }
+    def applyAll(w: String): Int =
+      merges.foldLeft(codePoints(w)) { case (t, (a, b)) => greedy(t, a, b) }.length
+    docs.map { case (id, text) =>
+      val ws = text.split(" ").toSeq.filter(_.nonEmpty)
+      (id, ws.length.toLong, ws.map(applyAll).sum.toLong)
+    }
   }
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -619,35 +654,66 @@ class ApiSpec extends SparkSpec {
 
   test("bpeApply matches a sequential reference application of the learned merges") {
     import spark.implicits._
-    val docs = Seq(
+    val texts = Seq(
       (1L, "low low low lower newest newest"),
-      (2L, "newest newest widest aaaa aaaa")
-    ).toDF("doc_id", "text")
-    val merges = Text.bpeMerges(docs, "text", steps = 4)
-      .orderBy("step")
-      .as[(Int, String, String, String, Long)].collect()
-      .map(m => (m._2, m._3)).toSeq
+      (2L, "newest newest widest aaaa aaaa"))
+    val docs = texts.toDF("doc_id", "text")
+    val merges = collectMerges(Text.bpeMerges(docs, "text", steps = 4))
+      .map(m => (m._2, m._3))
     val got = Text.bpeApply(docs, "doc_id", "text", merges)
       .orderBy("id").as[(Long, Long, Long)].collect().toSeq
-
-    def greedy(t: List[String], a: String, b: String): List[String] = t match {
-      case `a` :: `b` :: rest => (a + b) :: greedy(rest, a, b)
-      case h :: rest => h :: greedy(rest, a, b)
-      case Nil => Nil
-    }
-    def applyAll(w: String): Int =
-      merges.foldLeft(w.split("").toList) { case (t, (a, b)) =>
-        greedy(t, a, b) }.length
-    val expected = Seq(
-      (1L, "low low low lower newest newest"),
-      (2L, "newest newest widest aaaa aaaa")
-    ).map { case (id, text) =>
-      val ws = text.split(" ").toSeq
-      (id, ws.length.toLong, ws.map(applyAll).sum.toLong)
-    }
+    val expected = bpeApplyReference(texts, merges)
     assert(got == expected, s"got $got\nexpected $expected")
     // merges actually compress: fewer BPE tokens than characters
     assert(got.forall { case (_, _, bpe) => bpe > 0 })
+  }
+
+  test("bpeMerges and bpeApply keep a supplementary-character token whole") {
+    import spark.implicits._
+    // U+1F600 is one character but two UTF-16 units: under the merge
+    // (e, x), "c e x" must become [c, ex], the c left standing
+    val e = "\uD83D\uDE00"
+    val texts = Seq((1L, s"c${e}x c${e}x ${e}x ${e}x ${e}x"),
+      (2L, s"$e${e}x ab ab ${e}x"))
+    val docs = texts.toDF("doc_id", "text")
+    val got = collectMerges(Text.bpeMerges(docs, "text", steps = 5))
+    val expected = bpeReference(texts.map(_._2), 5)
+    assert(expected.map(m => (m._2, m._3, m._5)) ==
+      Seq((e, "x", 7L), ("a", "b", 2L), ("c", e + "x", 2L), (e, e + "x", 1L)))
+    assert(got == expected, s"got $got\nexpected $expected")
+    val merges = got.map(m => (m._2, m._3))
+    val applied = Text.bpeApply(docs, "doc_id", "text", merges)
+      .orderBy("id").as[(Long, Long, Long)].collect().toSeq
+    assert(applied == Seq((1L, 5L, 5L), (2L, 4L, 4L)))
+    assert(applied == bpeApplyReference(texts, merges))
+  }
+
+  test("bpeMerges breaks count ties in Spark's string order (UTF-8, not UTF-16)") {
+    import spark.implicits._
+    // U+FF61 sorts below U+1F600 in UTF-8 and above it in UTF-16, so each
+    // corpus below ties two pairs whose order the two string orders flip
+    val (h, e) = ("\uFF61", "\uD83D\uDE00")
+    assert(e.compareTo(h) < 0)
+    // the pair-count probe over the same word-frequency table, in Spark
+    def sparkWinner(docs: org.apache.spark.sql.DataFrame) =
+      docs.select(explode(split(col("text"), " ")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("freq"))
+        .select(col("freq"), split(col("w"), "").as("t"))
+        .filter(size(col("t")) >= 2)
+        .select(col("freq"), explode(expr("transform(sequence(1, size(t) - 1), " +
+          "i -> struct(t[i - 1] AS a, t[i] AS b))")).as("p"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum(col("freq")).as("c"))
+        .orderBy(col("c").desc, col("a"), col("b"))
+        .as[(String, String, Long)].head()
+    for ((text, winner) <- Seq(s"${e}a ${h}a ${e}a ${h}a" -> (h, "a"),
+        s"a$e a$h" -> ("a", h))) {
+      val docs = Seq((1L, text)).toDF("doc_id", "text")
+      val got = collectMerges(Text.bpeMerges(docs, "text", steps = 1))
+      val probe = sparkWinner(docs)
+      assert((probe._1, probe._2) == winner, s"Spark's probe picked $probe")
+      assert(got.map(m => (m._2, m._3, m._5)) == Seq(probe), s"got $got")
+    }
   }
 
   test("winnowCandidates never misses a pair sharing a window+kGram-1 token run") {
@@ -2122,6 +2188,48 @@ class ApiSpec extends SparkSpec {
     val tw = Fts.weightedPercentiles(weighted, "k", "v", "w")
       .filter(col("k") === "b").select("total_weight").as[Double].collect().toSeq
     assert(tw == Seq(2.0), s"weightedPercentiles for b: $tw")
+    graft.api.Caches.sweep(spark)
+  }
+
+  test("null keys keep their rows on every prefix-sum path") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // a null key is a group like any other: every result equals Spark's
+    // window over partitionBy(k).orderBy(v), its null-key rows included
+    val rows = Seq[(Option[String], Option[Long], Long)](
+      (None, Some(4L), 2L), (None, Some(1L), 1L), (None, Some(4L), 3L),
+      (None, None, 4L), (Some("a"), Some(2L), 5L), (Some("a"), Some(9L), 1L),
+      (Some("a"), None, 2L)).toDF("k", "v", "m")
+    val w = Window.partitionBy("k").orderBy("v")
+    def counts(df: org.apache.spark.sql.DataFrame) = df.orderBy("k", "v")
+      .select("k", "v", "c1", "c2", "cum1", "cum2")
+      .as[(Option[String], Option[Long], Long, Long, Long, Long)].collect().toSeq
+    val wantCounts = counts(rows.groupBy("k", "v")
+      .agg(sum(lit(1L)).as("c1"), sum(col("m")).as("c2"))
+      .withColumn("cum1", sum("c1").over(w))
+      .withColumn("cum2", sum("c2").over(w)))
+    assert(wantCounts.count(_._1.isEmpty) == 3, wantCounts)
+    assert(counts(Fts.cumulativeCounts2(rows, "k", "v", lit(1L), col("m"))) ==
+      wantCounts)
+    assert(counts(Fts.cumulativeCounts2(rows, "k", "v", lit(1L), col("m"), 32,
+      Some(Fts.equiDepthCuts(rows, "v")))) == wantCounts)
+    val weighted = rows.withColumn("wt", col("m").cast("double"))
+    val wantW = weighted.groupBy("k", "v").agg(sum(col("wt")).as("w"))
+      .withColumn("tw", sum("w").over(Window.partitionBy("k")))
+      .withColumn("cw", sum("w").over(w))
+    def cum(df: org.apache.spark.sql.DataFrame) = df.orderBy("k", "v")
+      .select("k", "v", "w", "tw", "cw")
+      .as[(Option[String], Option[Long], Double, Double, Double)].collect().toSeq
+    assert(cum(Fts.cumulativeWeights(weighted, "k", "v", "wt")) == cum(wantW))
+    def pct(df: org.apache.spark.sql.DataFrame) = df.orderBy("k")
+      .select("k", "wp50", "wp90", "total_weight")
+      .as[(Option[String], Option[Long], Option[Long], Double)].collect().toSeq
+    val wantPct = pct(wantW.groupBy("k").agg(
+      min(when(col("cw") * 2 >= col("tw"), col("v"))).as("wp50"),
+      min(when(col("cw") * 10 >= col("tw") * 9, col("v"))).as("wp90"),
+      sum(col("w")).as("total_weight")))
+    assert(wantPct.length == 2, wantPct)
+    assert(pct(Fts.weightedPercentiles(weighted, "k", "v", "wt")) == wantPct)
     graft.api.Caches.sweep(spark)
   }
 
