@@ -1201,7 +1201,9 @@ object Stress {
     }
 
     // worst-case label-chain shape: a single 4096-link chain — pointer
-    // doubling must close it in ~log2(4096)=12 rounds (+probe granularity)
+    // doubling must close it in ~log2(4096)=12 rounds, plus the one round
+    // whose unchanged label sum stops the loop (the initial state is
+    // already the first hook)
     import spark.implicits._
     val chain = (0L until 4096L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val ((chainRounds, chainComps), chainSec) = timed {

@@ -36,8 +36,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Harness surfaces (Verify/Bench/GoldenSpec) call [[sweepAll]] between
   * queries.
   * Checkpointed solver state is not registered here: the solvers free
-  * their superseded rounds through [[Checkpoints]]
-  * (frames a round's step caches are freed with the round). A builder
+  * their superseded rounds through [[Checkpoints]], and a round caches
+  * nothing besides its checkpoint. A builder
   * whose result is driver-local frees all of its state before it returns
   * and registers nothing here; only the blocks backing a solver's RETURNED
   * frame outlive the call — freeing those would destroy the result.

@@ -2,8 +2,6 @@ package graft.api
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
-import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
 
 /** Per-round lineage truncation, and the one fixed-point loop every
@@ -12,7 +10,9 @@ import org.apache.spark.storage.StorageLevel
   * mark loops of [[Graph.stronglyConnected]]). Loops whose step reads more
   * than the state call [[tracked]] and [[free]] directly for the rest:
   * [[Dedup.connectedComponents]] checkpoints the edge frame every round
-  * reads and frees it once the loop ends.
+  * reads and frees it once the loop ends. A round persists nothing but its
+  * checkpoint, and its probe ([[exactSum]], [[exactCount]]) reads that
+  * checkpoint in one stage.
   *
   * The free rule: a builder whose result is driver-local (a k-means
   * codebook) frees all of its state before it returns, so nothing it
@@ -97,13 +97,13 @@ private[api] object Checkpoints {
     * stopping at the cap means.
     *
     * A round issues one checkpoint and one probe: each state is probed
-    * once and its value carried into the next round's test. `converged`
-    * runs before the replaced state is freed, so a probe may return the
-    * state frame itself for a test that reads both rounds. Frames a step
-    * persists through [[Caches.cache]] live for that round only — the
-    * eager checkpoint has materialized everything the new state reads.
-    * The final state's blocks back the returned frame; the caller frees
-    * it, if ever, with [[free]].
+    * once and its value carried into the next round's test. The probes
+    * ([[exactSum]], [[exactCount]]) read the checkpointed rows in one
+    * stage. `converged` runs before the replaced state is freed, so a
+    * probe may return the state frame itself for a test that reads both
+    * rounds. A step caches nothing: a subplan it reads twice is planned
+    * once and AQE reuses its shuffle stages. The final state's blocks back
+    * the returned frame; the caller frees it, if ever, with [[free]].
     */
   def fixedPoint[P](init: DataFrame, maxRounds: Int, dir: Option[String])(
       probe: DataFrame => P)(converged: (P, P) => Boolean)(
@@ -113,7 +113,7 @@ private[api] object Checkpoints {
     var rounds = 0
     var done = false
     while (!done && rounds < maxRounds) {
-      val next = Caches.scoped(tracked(step(state), dir))
+      val next = tracked(step(state), dir)
       val q = probe(next)
       done = converged(p, q)
       free(state)
@@ -124,13 +124,24 @@ private[api] object Checkpoints {
     (state, rounds, done)
   }
 
-  /** Exact sum of a long column, 0 on an empty frame — the probe of the
-    * min-label loops: labels only ever decrease, so an unchanged sum means
-    * no label moved. DECIMAL(38,0) keeps it exact where a Long sum would
-    * fail on overflow under ANSI mode (ids near `Long.MaxValue`, such as
-    * 64-bit hashes) or, without ANSI, wrap and alias two distinct states.
+  /** Exact sum of a non-null long column, 0 on an empty frame — the
+    * probe of the min-label loops: labels only ever decrease, so an
+    * unchanged sum means no label moved. The sum is a `BigInt`, so it stays
+    * exact where a Long sum would fail on overflow under ANSI mode (ids
+    * near `Long.MaxValue`, such as 64-bit hashes) or, without ANSI, wrap
+    * and alias two distinct states. One job of one stage over the
+    * checkpointed rows: a DataFrame aggregate is a map-stage job plus a
+    * result job under AQE.
     */
-  def exactSum(c: String)(df: DataFrame): BigDecimal =
-    BigDecimal(df.agg(coalesce(sum(col(c).cast(DecimalType(38, 0))),
-      lit(0).cast(DecimalType(38, 0)))).head().getDecimal(0))
+  def exactSum(c: String)(df: DataFrame): BigInt = {
+    val i = df.schema.fieldIndex(c)
+    df.queryExecution.toRdd.map(r => BigInt(r.getLong(i))).fold(BigInt(0))(_ + _)
+  }
+
+  /** Row count in one job of one stage over the checkpointed rows — the
+    * probe of the loops whose state only grows or only shrinks (SCC marks,
+    * the k-core peel), so an unchanged count means no row moved; the SCC
+    * trim counts its checkpointed node frames with it too.
+    */
+  def exactCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
 }

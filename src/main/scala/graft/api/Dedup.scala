@@ -582,14 +582,18 @@ object Dedup {
     * with a null endpoint is not an edge (the co-order baskets' rule): it
     * is dropped, so its other endpoint joins no component through it.
     *
-    * Algorithm: Shiloach–Vishkin-style hook + pointer-jump. Each round
+    * Algorithm: Shiloach–Vishkin-style hook + pointer-jump. The initial
+    * state is already the first hook: one aggregate over the symmetrized
+    * edge frame labels every node with the minimum of its own id and its
+    * neighbors' ids. Each round then
     *  1. HOOK: every node takes the minimum of its own label and its
     *     neighbors' labels (one shuffle join + min-aggregate over the
     *     symmetrized edge frame), then
     *  2. JUMP: every node follows its label's own label (one self-join of
-    *     the label frame), halving the remaining label-chain depth.
+    *     the hooked frame, whose two sides share the hook's shuffle
+    *     stages), halving the remaining label-chain depth.
     * The jump is what makes this O(log n) rounds instead of O(diameter):
-    * a 1000-node chain converges in ~12 rounds where pure min-label
+    * a 1000-node chain converges in ~10 rounds where pure min-label
     * propagation needs ~1000 (each a full distributed job wave — the
     * difference between seconds and a blown iteration cap at scale).
     *
@@ -603,7 +607,7 @@ object Dedup {
     *
     * Convergence is an exact label-sum fixed point ([[Checkpoints.exactSum]]:
     * labels only ever decrease, so an unchanged sum means no label moved),
-    * probed once per round — one small aggregate over the checkpointed
+    * probed once per round — one single-stage fold over the checkpointed
     * label frame, far cheaper than the two joins and the aggregate over
     * the edge frame a round costs. Hitting `maxIter` throws rather than
     * return split clusters.
@@ -624,20 +628,23 @@ object Dedup {
       real.select(col("a_id").as("src"), col("b_id").as("dst"))
         .unionAll(real.select(col("b_id").as("src"), col("a_id").as("dst"))),
       checkpointDir)
+    // the first hook is the initial state: every node is a src of the
+    // symmetrised edges, and its label starts at min(itself, neighbors)
     val (comp, rounds, converged) = Checkpoints.fixedPoint(
-        edges.select(col("src").as("id")).distinct()
-          .withColumn("component", col("id")),
+        edges.groupBy(col("src"))
+          .agg(least(col("src"), min(col("dst"))).as("component"))
+          .select(col("src").as("id"), col("component")),
         maxIter, checkpointDir)(Checkpoints.exactSum("component"))(_ == _) { comp =>
       val nbrMin = edges
         .join(comp.select(col("id").as("dst"), col("component").as("nc")), "dst")
         .groupBy("src").agg(min(col("nc")).as("nbr_min"))
-      // the jump self-joins this frame; cache it for the round so the
-      // hook subplan (join + aggregate) computes once, not once per side
-      val hooked = Caches.cache(comp
+      // both sides of the jump read this one subplan, so AQE reuses its
+      // shuffle stages: the hook computes once per round without a cache
+      val hooked = comp
         .join(nbrMin.withColumnRenamed("src", "id"), Seq("id"), "left")
         .select(col("id"),
           least(col("component"), coalesce(col("nbr_min"), col("component")))
-            .as("component")))
+            .as("component"))
       // labels are always ids of nodes in the same component, so the jump
       // stays within the component and only ever decreases labels
       hooked

@@ -334,7 +334,7 @@ object Graph {
       edges = restEdges
     }
     val assigned = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    var remaining = nodes.count()
+    var remaining = Checkpoints.exactCount(nodes)
     var phase = 0
     while (remaining > 0) {
       // 0. TRIM: every current source/sink is a singleton SCC — assign in
@@ -352,7 +352,7 @@ object Graph {
             .unionByName(
               nodes.join(edges.select(col("src").as("id")), Seq("id"), "left_anti"))
             .distinct())
-        val nTrivial = trivial.count()
+        val nTrivial = Checkpoints.exactCount(trivial)
         if (nTrivial == 0) { trimming = false; Checkpoints.free(trivial) }
         else {
           statTrim += 1
@@ -386,7 +386,7 @@ object Graph {
         // round's new marks are anti-joined against the old ones
         val (marks, markRounds, marked) = Checkpoints.fixedPoint(
             f.filter(col("f") === col("id")), maxRounds, checkpointDir)(
-            _.count())(_ == _) { marks =>
+            Checkpoints.exactCount)(_ == _) { marks =>
           marks.unionByName(edges
             .join(marks.select(col("id").as("src"), col("f").as("mf")), "src")
             .select(col("dst").as("id"), col("mf"))
@@ -403,7 +403,7 @@ object Graph {
         // 3. drop the assigned nodes and their edges; next phase
         dropAssigned(marks.select("id"))
         Checkpoints.free(f)
-        remaining = nodes.count()
+        remaining = Checkpoints.exactCount(nodes)
       }
     }
     Checkpoints.free(nodes); Checkpoints.free(edges)
@@ -1066,7 +1066,7 @@ object Graph {
     val hinted = nodeHint(edges, broadcastMaxNodes)
     val (alive, rounds, _) = Checkpoints.fixedPoint(
         edges.select(col("src").as("node")).distinct(), maxRounds,
-        checkpointDir)(_.count())(_ == _)(peelRound(edges, hinted, k))
+        checkpointDir)(Checkpoints.exactCount)(_ == _)(peelRound(edges, hinted, k))
     (aliveDegrees(edges, hinted, alive), rounds)
   }
 

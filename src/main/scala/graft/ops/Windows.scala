@@ -442,7 +442,8 @@ ORDER BY event_type, value, event_id"""))
     * the rows of Spark's window over `ORDER BY value, event_id`. A null
     * value is a row like any other: it sorts first, joins its prefix-sum
     * row null-safely and makes its type's `first_value` null (DuckDB sorts
-    * nulls last; the fixtures hold no null `value`).
+    * nulls last; the fixtures hold no null `value`). A null `event_type` is
+    * one more partition: both joins on it are null-safe.
     */
   private[graft] def firstLastPctrank(e: DataFrame): DataFrame = {
     // per-type stats from one map-side fact aggregate, not off `cc`: a
@@ -456,10 +457,11 @@ ORDER BY event_type, value, event_id"""))
       .select(col("event_type").as("cc_type"), col("value").as("cc_value"),
         col("c1"), col("cum1"))
     val wTie = Window.partitionBy("event_type", "value").orderBy("event_id")
-    e.join(cc, col("event_type") === col("cc_type") &&
+    e.join(cc, col("event_type") <=> col("cc_type") &&
         col("value") <=> col("cc_value"))
       .withColumn("rk", col("cum1") - col("c1") + row_number().over(wTie))
-      .join(broadcast(stats), "event_type")
+      .join(broadcast(stats.withColumnRenamed("event_type", "st_type")),
+        col("event_type") <=> col("st_type"))
       .select(col("event_type"), col("event_id"), col("value"),
         col("first_value"), col("last_value"),
         when(col("n") === 1, lit(0.0))

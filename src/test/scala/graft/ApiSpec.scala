@@ -145,6 +145,33 @@ class ApiSpec extends SparkSpec {
     assert(Dedup.connectedComponents(noPairs).count() == 0)
   }
 
+  /** Runs `body` and counts the Spark jobs it starts. Listener events
+    * arrive on the bus thread, and there is no public listener-bus drain
+    * API: count atomically (JMM visibility) and poll until the count, and
+    * `alsoSettled` (another listener's progress), stop moving.
+    */
+  private def countingJobs[A](alsoSettled: => Int = 0)(body: => A): (A, Int) = {
+    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobCounter.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      var prev = (-1, -1)
+      var stable = 0
+      var attempts = 0
+      while (stable < 3 && attempts < 20) { // <=2 s; counts plateau fast
+        Thread.sleep(100)
+        attempts += 1
+        val now = (jobCounter.get(), alsoSettled)
+        if (now == prev) stable += 1 else { stable = 0; prev = now }
+      }
+      (out, jobCounter.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("connectedComponents collapses transitive near-dup chains") {
     import spark.implicits._
     // chain 1-2-3 (1!~3 directly), pair 4-5, and a 1000-node chain
@@ -158,31 +185,10 @@ class ApiSpec extends SparkSpec {
     // only this builder's blocks, not earlier tests' caches
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    // listener events arrive on the bus thread: count atomically (JMM
-    // visibility) and poll until the count stabilizes before asserting,
-    // since there is no public listener-bus drain API
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
+    val ((comp, rounds), jobs) = countingJobs() {
+      val (compDf, r) = Dedup.connectedComponentsWithRounds(pairs)
+      (compDf.as[(Long, Long)].collect().toMap, r)
     }
-    spark.sparkContext.addSparkListener(listener)
-    val (comp, rounds) =
-      try {
-        val (compDf, r) = Dedup.connectedComponentsWithRounds(pairs)
-        val m = compDf.as[(Long, Long)].collect().toMap
-        var prev = -1
-        var stable = 0
-        var attempts = 0
-        while (stable < 3 && attempts < 20) { // <=2 s; counts plateau fast
-          Thread.sleep(100)
-          attempts += 1
-          val now = jobCounter.get()
-          if (now == prev) stable += 1 else { stable = 0; prev = now }
-        }
-        (m, r)
-      } finally spark.sparkContext.removeSparkListener(listener)
-    val jobs = jobCounter.get()
     // the direct observable behind the job-count proxy below: pointer
     // doubling halves the label-chain depth per round, so the 1000-link
     // chain closes in ~log2(1000)=10 rounds + the one round that finds no
@@ -192,8 +198,8 @@ class ApiSpec extends SparkSpec {
     assert(Seq(4L, 5L).forall(comp(_) == 4L))
     assert((1000L to 2000L).forall(comp(_) == 1000L))
     assert(comp.size == 1006)
-    // O(log n) rounds (~12 for the 1000-chain; AQE splits each round's
-    // checkpoint into per-shuffle-stage jobs, measured ~126 total) —
+    // O(log n) rounds (~10 for the 1000-chain; AQE splits each round's
+    // checkpoint into per-shuffle-stage jobs, measured ~75 total) —
     // O(diameter) min-label propagation would need ~1000 rounds here, i.e.
     // an order of magnitude more jobs and a blown iteration cap
     assert(jobs < 200, s"expected O(log n) job count, saw $jobs")
@@ -227,6 +233,52 @@ class ApiSpec extends SparkSpec {
       .as[(Option[Long], Option[Long])].collect().toSet
     assert(comp == Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L)
       .map { case (i, c) => (Option(i), Option(c)) }, s"got $comp")
+  }
+
+  test("connectedComponents on two edges: <= 16 jobs; the jump reuses the hook's shuffle") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{SparkPlan, joins}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // the graph_components solver input at sf0.1: two edges, two components
+    val pairs = Seq((1L, 2L), (3L, 4L)).toDF("a_id", "b_id")
+    graft.api.Caches.sweepAll(spark)
+    // every round's state is written by one eager localCheckpoint action
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val plans = new QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpoints.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(plans)
+    val ((compDf, rounds), jobs) =
+      try countingJobs(checkpoints.size)(Dedup.connectedComponentsWithRounds(pairs))
+      finally spark.listenerManager.unregister(plans)
+    assert(compDf.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
+    // edges + initial state + one round, each checkpointed once, and two
+    // single-stage probes: measured 10 (a cached hook, a separate first
+    // hook round and two-job aggregate probes made it 23)
+    assert(jobs <= 16, s"CC on two edges ran $jobs jobs")
+    // the initial state is already the first hook, so the one round finds
+    // no change
+    assert(rounds == 1, s"ran $rounds rounds")
+    object aqe extends AdaptiveSparkPlanHelper
+    import scala.jdk.CollectionConverters._
+    val roundPlans = checkpoints.asScala.toSeq.filter(p => aqe.collect(p) {
+      case j: joins.BaseJoinExec => j }.nonEmpty)
+    assert(roundPlans.size == 1, s"expected one round's checkpoint, got ${checkpoints.size} plans")
+    roundPlans.foreach { p =>
+      assert(aqe.collect(p) { case r: ReusedExchangeExec => r }.nonEmpty,
+        s"the jump's second side must reuse the hook's exchange:\n$p")
+      assert(aqe.collect(p) { case m: InMemoryTableScanExec => m }.isEmpty,
+        s"a round must not persist its hook:\n$p")
+    }
+    graft.api.Caches.sweepAll(spark)
   }
 
   test("open-ended graph solvers free every superseded round") {
@@ -2233,15 +2285,11 @@ class ApiSpec extends SparkSpec {
     graft.api.Caches.sweep(spark)
   }
 
-  test("win_first_last_pctrank keeps null values and equals Spark's window over (value, event_id)") {
-    import spark.implicits._
+  /** `firstLastPctrank(e)` and Spark's own window over `(value, event_id)`
+    * per `event_type`, each as rows in `event_id` order.
+    */
+  private def pctrankAndReference(e: org.apache.spark.sql.DataFrame) = {
     import org.apache.spark.sql.expressions.Window
-    // type a mixes a null into ties, b is all null, c has one row; every
-    // row must survive, nulls ranked first (Spark's ascending order)
-    val e = Seq[(String, Long, Option[Double])](("a", 1L, Some(2.0)),
-      ("a", 2L, None), ("a", 3L, Some(1.0)), ("a", 4L, Some(2.0)),
-      ("a", 5L, None), ("b", 6L, None), ("b", 7L, None), ("c", 8L, Some(5.0)))
-      .toDF("event_type", "event_id", "value")
     val wo = Window.partitionBy("event_type").orderBy("value", "event_id")
     val wf = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val want = e.select(col("event_type"), col("event_id"), col("value"),
@@ -2250,11 +2298,39 @@ class ApiSpec extends SparkSpec {
       percent_rank().over(wo).as("pct_rank"), cume_dist().over(wo).as("cume"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long]).toSeq
-    val got = rows(graft.ops.Windows.firstLastPctrank(e))
+    (rows(graft.ops.Windows.firstLastPctrank(e)), rows(want))
+  }
+
+  test("win_first_last_pctrank keeps null values and equals Spark's window over (value, event_id)") {
+    import spark.implicits._
+    // type a mixes a null into ties, b is all null, c has one row; every
+    // row must survive, nulls ranked first (Spark's ascending order)
+    val e = Seq[(String, Long, Option[Double])](("a", 1L, Some(2.0)),
+      ("a", 2L, None), ("a", 3L, Some(1.0)), ("a", 4L, Some(2.0)),
+      ("a", 5L, None), ("b", 6L, None), ("b", 7L, None), ("c", 8L, Some(5.0)))
+      .toDF("event_type", "event_id", "value")
+    val (got, want) = pctrankAndReference(e)
     assert(got.length === 8)
-    assert(got === rows(want))
+    assert(got === want)
     // a's null rows rank first: event 2 then 5, and a's first_value is null
     assert(got(1) === Seq("a", 2L, null, null, 2.0, 0.0, 0.2))
+    graft.api.Caches.sweep(spark)
+  }
+
+  test("win_first_last_pctrank keeps null event_type rows, as Spark's window does") {
+    import spark.implicits._
+    // a null event_type is one more partition: its rows must rank among
+    // themselves, not vanish at the prefix-sum or the stats join
+    val e = Seq[(Option[String], Long, Option[Double])](
+      (Some("a"), 1L, Some(2.0)), (None, 2L, Some(3.0)), (Some("a"), 3L, Some(1.0)),
+      (None, 4L, Some(1.0)), (None, 5L, None), (None, 6L, Some(3.0)),
+      (Some("b"), 7L, Some(4.0)))
+      .toDF("event_type", "event_id", "value")
+    val (got, want) = pctrankAndReference(e)
+    assert(got.length === 7)
+    assert(got === want)
+    // the null type's rows: value null first (event 5), then 1.0, 3.0, 3.0
+    assert(got(4) === Seq(null, 5L, null, null, 3.0, 0.0, 0.25))
     graft.api.Caches.sweep(spark)
   }
 

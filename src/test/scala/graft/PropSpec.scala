@@ -216,6 +216,44 @@ class PropSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents equals driver union-find on random pair lists (loops, repeats, nulls, near-max ids)") {
+    import spark.implicits._
+    import Prop.propBoolean
+    // endpoints from a small pool, so pairs collide into shared components;
+    // a third of them sit near Long.MaxValue, where a Long label sum wraps
+    val id: Gen[Option[Long]] = Gen.frequency(
+      1 -> Gen.const(None),
+      6 -> Gen.choose(0L, 15L).map(Some(_)),
+      3 -> Gen.choose(0L, 5L).map(d => Some(Long.MaxValue - d)))
+    val pairLists = for {
+      base <- Gen.choose(1, 20).flatMap(Gen.listOfN(_, Gen.zip(id, id)))
+      again <- Gen.someOf(base)
+      flipped <- Gen.someOf(base)
+      loops <- Gen.someOf(base)
+    } yield base ++ again ++ flipped.map(_.swap) ++ loops.map(p => (p._1, p._1))
+    check(Prop.forAll(pairLists) { pairs =>
+      val got = graft.api.Dedup.connectedComponents(pairs.toDF("a_id", "b_id"))
+        .as[(Long, Long)].collect()
+      // reference: union-find over the pairs with two endpoints, the
+      // smaller root winning, so a root is its component's min id
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach {
+        case (Some(a), Some(b)) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+        case _ =>
+      }
+      val expected = parent.keys.toSeq.map(x => x -> find(x)).toMap
+      graft.api.Caches.sweepAll(spark)
+      (got.length == expected.size && got.toMap == expected) :|
+        s"pairs=$pairs got=${got.toSeq.sorted} expected=${expected.toSeq.sorted}"
+    }, n = 12)
+  }
+
   test("md5 MinHash-LSH recovers high-similarity planted pairs (batched corpora)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
