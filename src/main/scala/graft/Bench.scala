@@ -8,91 +8,52 @@ import scala.jdk.CollectionConverters._
   * short summary JSON line (total/failures/top-5) that survives tail
   * truncation of the captured stdout.
   *
-  * Queries run in sorted-name order (deterministic run order across rounds,
-  * so positional effects like JIT/code-cache drift are comparable). Each
-  * query runs THREE times (fresh plan each run, caches swept between) and
-  * records the MEDIAN over all samples; a query whose max sample exceeds
-  * 2x its min (the data-visible signature of transiently inflated samples
-  * — contention or JIT warm-up) takes up to TWO extra samples first, so
-  * the 5-sample median settles on the dominant regime — self-correction,
-  * not just self-diagnosis (the r8 record shipped a 9.45 s agg_global
-  * median that a quiet host runs in 1.20 s). Loadavg is deliberately NOT
-  * used to trigger or select samples — mid-suite 1-min loadavg is
-  * dominated by the harness's own local[32] work (see the inline note) —
-  * it stays in detail as diagnosis; `contended` = the spread still
-  * exceeds the fastest sample after re-sampling (a wobbly median, read
-  * with care). The per-query "detail" map keeps the first
-  * (cold) run's build/plan/exec split plus the median, min-max spread,
-  * sample count, and the contended flag. A UNIFORMLY loaded host defeats
-  * the spread trigger (every sample equally slow — the r9 fn_variant
-  * 35.9 s shape), so each key's median is additionally compared against
-  * its own committed quiet-host history (bench_baseline.json). Since r14
-  * that comparison SELF-CORRECTS too (the r13 verdict ask — six >2x
-  * driver rows in untouched code burned a judge round): a median >1.4x
-  * its baseline (r16: was 2x — the r15 record shipped two contended rows
-  * at 1.53x/1.72x the 2x trigger never touched, and the judge's weak gate
-  * starts at 1.5x) re-quiesces (bounded wait for loadavg decay, shared
-  * 10-min run budget) and re-measures up to twice, adopting the fresh round's
-  * median when lower (measured at lower load ⇒ the number comparable to
-  * the quiet-host history) — med_first/resample_rounds in detail record
-  * the history. A median still CONTENDED after that (r16, the r15
-  * verdict's zero-contended-rows ask) gets up to two more clearing
-  * rounds, adopting a TIGHT fresh round (spread ≤ its min) that is not
-  * >10% slower — clear_rounds in detail counts them. A final median
-  * still >3x baseline (+1 s floor) marks
-  * `suspect_load`: re-quiescing didn't help, so it is either genuinely
-  * persistent load (host-level fix) or a real regression (bisect).
-  * Failures are recorded as NEGATIVE
-  * seconds plus a "failed" list — a broken query cannot masquerade as a
-  * fast one. Keys whose committed baseline is < 0.5 s get ONE unrecorded
-  * warm-up execution before sampling (r17: sub-second keys' quiet-host
-  * spread was >= their median — pure JIT noise — which false-triggered
-  * the 1.4x recert gate; `warmed` in detail marks them), and every key's
-  * detail row carries `loadavg_max` — the max 1-min loadavg observed
-  * across its own runs — so a flagged row is load-attributable from the
-  * record alone (r17, the r16 verdict's ask: a 4.0x suspect row's
-  * mid-run load spike was visible only in a different key's row).
+  * Sampling rule. Queries run in sorted-name order, so positional effects
+  * (JIT, code-cache drift) are comparable between runs. Each query runs
+  * three times, with a fresh plan each time and caches swept between runs;
+  * when the two warm samples spread wider than max(their min, 0.25 s), two
+  * more samples are taken. The recorded number is the median of all
+  * samples. The first (cold) run is also reported with its build/plan/exec
+  * split: a driver-side planning regression and an executor-side data
+  * regression need different fixes. Failures are recorded as NEGATIVE
+  * seconds plus a "failed" list, so a broken query cannot pass for a fast
+  * one.
   *
-  * DESIGN NOTE (also emitted as "note" in the detail record): because
-  * caches are swept between the three samples, every sample — medians
-  * included — pays its builder's cache population (CC checkpoints,
-  * bucketed-table writes). That is deliberate: each sample measures the
-  * STANDALONE-cold query, the same policy join_bucketed documents for its
-  * table rewrites. ONE deliberate exception (r12): SESSION-persisted
-  * artifacts — the graph family's derive-once edge tables
-  * (ops.Graphs.coOrderArtifact/txnArtifact) and any trained-model memo —
-  * survive the sweep because their production lifetime IS longer than a
-  * query (the r11 verdict's amortization ask); the first touching sample
-  * pays the derivation (visible in its build split), later samples and
-  * keys read the stored table, and graph_edges_persist keeps pricing the
-  * one-time construction explicitly. Reading a graph key's median as
-  * "derivation + analytics" therefore UNDERstates cold-start by the
-  * artifact build; the edges_persist row carries that number.
+  * Contention evidence. Each detail row carries `other_cpu_share`, the
+  * share of host CPU that other processes used while the key's samples ran
+  * ([[HostCpu]]), and is `contended` when that share exceeds
+  * [[ContendedShare]]; the summary carries the share over the whole
+  * measured phase. A key's median is also compared against its committed
+  * quiet-host history (`bench_baseline.json`): a median > 3× its baseline
+  * and > 1 s above it marks `suspect_load`, which reads "host load" when
+  * the row is contended and "regression, bisect" when it is not.
   *
-  * The JSON record carries its own diagnostics: the system load average at
-  * run start/end (host contention from OUTSIDE the harness inflates totals
-  * 2-4×, so a contended record must be self-identifying — totals are only
-  * comparable between runs at similar load) and a per-query
-  * build/plan/exec/gc split (a driver-side planning regression and an
-  * executor-side data regression need different fixes; one aggregate number
-  * hides which one moved). Stderr additionally tracks JIT code-cache usage
-  * to make late-run JVM degradation visible.
+  * Caches are swept between samples, so every sample pays its builder's
+  * cache population (CC checkpoints, bucketed-table writes): each sample
+  * measures the standalone-cold query. The one exception is the session
+  * artifacts (the graph family's derive-once edge tables, trained-model
+  * memos), whose production lifetime is longer than a query. A full-suite
+  * run derives them all in an unrecorded setup phase before sampling;
+  * `graph_edges_persist` prices that construction through its own
+  * per-sample rewrite.
   */
 object Bench {
+  /** The other-process CPU share above which a row is `contended`. Calm
+    * benchmark runs on a 4-vCPU host read at most 0.015, and runs beside a
+    * busy neighbour 0.08–0.22.
+    */
+  private val ContendedShare = 0.05
+
   /** One measured key's record — the fields behind its BENCH_DETAIL row. */
   private case class Row(name: String, med: Double, build: Double,
-    plan: Double, gc: Double, run1: Double, spread: Double, qLoad: Double,
-    n: Int, contended: Boolean, suspect: Boolean, medFirst: Double,
-    resampleRounds: Int, clearRounds: Int, loadMax: Double, warmed: Boolean)
+    plan: Double, gc: Double, run1: Double, spread: Double, n: Int,
+    otherCpu: Double, suspect: Boolean)
   private def codeCacheMB: Double =
     java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getName.contains("CodeHeap")).map(_.getUsage.getUsed / 1e6).sum
   private def gcMs: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
       .map(_.getCollectionTime).sum
-  private def loadAvg: Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .getSystemLoadAverage
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -115,47 +76,12 @@ object Bench {
     // so it isn't billed to whichever query happens to run first
     spark.range(100000).selectExpr("count(DISTINCT id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    // Wait — bounded — for the 1-min loadavg to decay below target before the
-    // first measured query (the Stress r5 lesson): loadavg is a LAGGING
-    // average, and a host that was busy minutes before this JVM started can
-    // poison the first alphabetical queries 10-20x while the late-alphabet
-    // keys measure clean (the r5 committed record's exact failure shape:
-    // agg_global 25.3 s contended vs 1.24 s quiet). The harness is idle while
-    // waiting, so a loadavg that stays high past the deadline means genuinely
-    // external load — recorded via quiesce_timeout so a contention-poisoned
-    // record is self-identifying rather than silently trusted.
-    val quiesceDeadline = System.nanoTime() + 240 * 1e9.toLong
-    while (loadAvg > 2.0 && System.nanoTime() < quiesceDeadline)
-      Thread.sleep(5000)
-    val quiesceTimedOut = loadAvg > 2.0
-    val loadStart = loadAvg
     val failed = mutable.ListBuffer.empty[String]
-    // dev-loop subset (comma-separated key names); the driver sets no env →
-    // full suite, and the emitted record still reports n_queries so a
-    // subset run can never masquerade as a full one. Every requested key
-    // must exist: a misspelled key would otherwise silently filter the
-    // suite down (worst case to zero) and emit an empty-but-valid record.
-    // previous-round per-key medians (committed bench_baseline.json, a flat
-    // {"key": seconds} map refreshed after quiet-host runs): spread-based
-    // re-sampling cannot see a UNIFORMLY loaded host (every sample equally
-    // slow — the r9 fn_variant 35.9 s shape, quiet-host 1.0 s), but a jump
-    // against the key's own committed history can. Since r14 a >2x jump
-    // triggers the bounded re-quiesce + re-sample policy (see the loop
-    // below); a FINAL median still >3x marks suspect_load — at that point
-    // persistent external load needs a host-level fix, not more waiting.
-    // real JSON parse restricted to the TOP-LEVEL map (r10 advisory: the
-    // previous regex harvested any "word": number pair anywhere in the
-    // file, and a malformed file silently degraded to an empty map) —
-    // Jackson ships with Spark, so no new dependency. Non-numeric
-    // top-level fields (future metadata) are skipped; a present-but-empty
-    // or unparseable baseline logs loudly instead of silently disabling
-    // the suspect_load detector.
+    // committed per-key quiet-host medians, a flat {"key": seconds} map;
+    // only top-level numeric fields are read. A requested baseline that is
+    // missing, unreadable or empty says so, since it disables suspect_load.
     val baseline: Map[String, Double] = {
       val envPath = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
-      // an EXPLICITLY requested baseline that doesn't exist must complain
-      // like an unparseable one does — the .filter below would otherwise
-      // silently disable suspect_load detection, the exact degradation the
-      // r10 parser hardening set out to eliminate (r11 ADVICE)
       envPath.filterNot(p => new java.io.File(p).isFile).foreach(p =>
         System.err.println(s"[bench] baseline $p (SPARK_GRAFT_BENCH_BASELINE)" +
           " does not exist — suspect_load detection disabled this run"))
@@ -180,21 +106,10 @@ object Bench {
         }
       }.getOrElse(Map.empty)
     }
-    // auto-recertification budget (r13 verdict ask): a median far above the
-    // key's committed quiet-host history gets re-quiesced + re-measured
-    // BEFORE the record is written, instead of shipping a phantom 7x row a
-    // judge round has to dismiss. The budget bounds the total time the run
-    // may spend idling for loadavg decay (the re-sample jobs themselves are
-    // cheap; the waiting is what could run away on a persistently loaded
-    // host — where no amount of waiting helps and quiesce_timeout already
-    // marks the record).
-    var requiesceBudgetNs: Long = 600L * 1000000000L
-    def requiesce(maxWaitNs: Long): Unit = {
-      val start = System.nanoTime()
-      val deadline = start + math.min(maxWaitNs, requiesceBudgetNs)
-      while (loadAvg > 2.0 && System.nanoTime() < deadline) Thread.sleep(5000)
-      requiesceBudgetNs -= (System.nanoTime() - start)
-    }
+    // dev-loop subset (comma-separated key names); with no env the full
+    // suite runs, and n_queries shows a subset for what it is. Every
+    // requested key must exist: a misspelled key would otherwise filter
+    // the suite down silently.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).toSet)
     only.foreach { req =>
@@ -203,15 +118,10 @@ object Bench {
         s"SPARK_GRAFT_BENCH_ONLY names unregistered queries: " +
           unknown.toSeq.sorted.mkString(", "))
     }
-    // SETUP PHASE (r15, the r14 verdict's cold-pricing ask): derive every
-    // session artifact BEFORE sampling, so no measured key's first cold
-    // sample carries a one-time derive (the r14 record billed the 47 s txn
-    // derive to graph_pagerank_weighted's cold split) — cold numbers then
-    // compare query cost across rounds, not artifact-arrival order.
-    // graph_edges_persist still prices construction explicitly: its key
-    // performs its OWN full rewrite every sample by design. Full-suite
-    // runs only — a dev-loop subset shouldn't pay ~30 s of derives for
-    // keys it isn't measuring (its colds may carry derives, as before r15).
+    // setup phase: derive every session artifact before sampling, so no
+    // key's cold sample carries a one-time derive. Full-suite runs only — a
+    // subset does not pay for derives of keys it does not measure, and its
+    // colds may carry them.
     val setupSec: Double = if (only.isEmpty) {
       val t = System.nanoTime()
       graft.ops.Llm.deriveSessionArtifacts(spark, sfDir)
@@ -224,46 +134,12 @@ object Bench {
       System.err.println(f"[bench] setup: session artifacts derived in $sec%.1f s (unrecorded in per-key numbers)")
       sec
     } else 0.0
+    val runStart = HostCpu.sample()
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => only.forall(_.contains(kv._1)))
       .map { case (name, fn) =>
-      // JIT/noise-floor hardening (r17, the r16 verdict's ask #2): keys
-      // whose committed quiet baseline is < 0.5 s live BELOW the harness's
-      // own cold-JIT jitter — the r16 record's agg_approx_percentiles /
-      // agg_approx_topk rows showed quiet-host spread >= their median,
-      // false-triggering the 1.4x recert gate and burning two driver
-      // resample rounds on untouched code. One UNRECORDED warm-up
-      // execution absorbs the per-key codegen+JIT transient before any
-      // sample is taken; the measured first run still rebuilds fn() from
-      // scratch (its build/plan split stays meaningful) and still pays
-      // cache population after the sweep — only JVM-level warm-up is
-      // excluded, which is exactly the component that is pure noise at
-      // this magnitude. Keys without a baseline entry (new keys) skip the
-      // warm-up: their first round SHOULD record the true cold shape.
-      val warmed = baseline.get(name).exists(_ < 0.5)
-      if (warmed) {
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => () } // measured runs will report it
-        Caches.sweepAll(spark)
-      }
       val gc0 = gcMs
-      // per-query loadavg sample: a contention spike MID-run (the quiesce
-      // gate only protects the start) shows up against the specific keys it
-      // inflated instead of smearing suspicion over the whole record
-      val qLoad = loadAvg
-      // loadavg_max (r17, the r16 verdict's ask #4): the r16 record
-      // shipped a 4.0x suspect row whose cause — a mid-run loadavg spike
-      // to 11.3 — was visible only in ANOTHER key's row, so clearing it
-      // cost a judge re-measure. Sampling loadavg after every run of THIS
-      // key and recording the max makes a flagged row load-attributable
-      // from the record alone: suspect/contended + loadavg_max >> cores'
-      // idle share reads "host load", while a flagged row with a quiet
-      // loadavg_max reads "regression — bisect". (The 1-min average lags
-      // and includes the harness's own local[32] work, so the ABSOLUTE
-      // value is only meaningful relative to other keys in the same run —
-      // see the sample-selection note above; this stays diagnosis-only.)
-      var loadMax = qLoad
-      def sampleLoad(): Unit = loadMax = math.max(loadMax, loadAvg)
+      val cpu0 = HostCpu.sample()
       val t0 = System.nanoTime()
       var buildSec = 0.0
       var planSec = 0.0
@@ -283,262 +159,100 @@ object Bench {
           true
         } catch { case _: Throwable => failed += name; false }
       val run1 = (System.nanoTime() - t0) / 1e9
-      sampleLoad()
       val gcSec = (gcMs - gc0) / 1000.0
       Caches.sweepAll(spark)
-      // two more full fn()+execute samples (fresh plan each — re-running
-      // the SAME QueryExecution's RDD would reuse its shuffle map outputs
-      // and time only the final stage), caches swept between samples so
-      // each is cold w.r.t. builder-persisted frames. The MEDIAN is the
-      // recorded number: a single contended sample (outside-host noise
-      // inflates cold runs 2-4x) no longer defines the round's record.
-      def runOnce(): Option[(Double, Double)] = {
-        val ld = loadAvg
+      // each further sample is a fresh fn() + execute: re-running the SAME
+      // QueryExecution's RDD would reuse its shuffle map outputs and time
+      // only the final stage
+      def runOnce(): Option[Double] = {
         val t = System.nanoTime()
         val r =
           try {
             fn(spark, sfDir).queryExecution.toRdd.count()
-            Some(((System.nanoTime() - t) / 1e9, ld))
+            Some((System.nanoTime() - t) / 1e9)
           } catch { case _: Throwable => failed += name; ok = false; None }
-        sampleLoad()
         Caches.sweepAll(spark)
         r
       }
-      val base = (run1, qLoad) +:
-        (if (ok) (1 to 2).flatMap(_ => runOnce()) else Seq.empty)
+      // the spread rule reads the warm samples only: a key's structural
+      // cold/warm gap is reported as cold vs med, not re-sampled
+      def wide(xs: Seq[Double]): Boolean =
+        xs.size > 1 && xs.max - xs.min > math.max(xs.min, 0.25)
+      val base = run1 +: (if (ok) (1 to 2).flatMap(_ => runOnce()) else Seq.empty)
+      val samples =
+        if (ok && wide(base.drop(1))) base ++ (1 to 2).flatMap(_ => runOnce())
+        else base
+      val otherCpu = HostCpu.otherShare(cpu0, HostCpu.sample())
       // true median: with an even sample count (reachable when an extra run
       // fails) average the two middle samples instead of taking the upper one
-      def medOf(xs: Seq[Double]): Double = {
-        val s = xs.sorted
+      val med = {
+        val s = samples.sorted
         if (s.size % 2 == 1) s(s.size / 2)
         else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
       }
-      // contention self-CORRECTION (the r8 record's failure shape: quiesce
-      // passed at loadavg 1.97, load climbed mid-run, and agg_global
-      // recorded 9.45 s where a quiet host runs 1.20 s). The re-sample
-      // trigger is max > 2x min (spread exceeds the fastest sample) — the
-      // data-visible signature of a transiently inflated sample, whether
-      // the inflated ones are the minority ([9.4, 9.5, 1.2]: the r8 shape,
-      // median still poisoned without correction) or the majority; two
-      // extra samples then let the 5-sample median settle on the dominant
-      // regime. Deliberately NOT a loadavg trigger and NOT a quiet-loadavg
-      // sample filter: mid-suite 1-min loadavg is dominated by the
-      // harness's OWN local[32] work (measured on the r9 build: p50
-      // per-query loadavg 5.3 on an otherwise-idle host, 184/194 keys
-      // false-flagged, one median BIASED UP by the filter), so loadavg
-      // cannot select samples here — it stays in detail as diagnosis.
-      // A PERSISTENT external load inflates every sample alike (small
-      // spread), which no in-process policy can detect or undo; the
-      // run-level quiesce gate and loadavg_start/end bracket that case.
-      // `contended` in detail = the spread still exceeds the fastest
-      // sample AFTER re-sampling: this median is wobbly, read with care.
-      // the 0.25 s absolute floor (r16) aligns the flag with the gates'
-      // materiality floors: a centisecond key's 0.1-0.3 s scheduler jitter
-      // is 100%+ relative spread but cannot mislead any cross-round diff
-      // whose triggers all carry 0.25 s floors — flagging it burned
-      // clearing rounds and shipped a "contended" row (agg_ab_test, 0.22 s
-      // med, 0.27 s spread) that no reader should have had to dismiss. The
-      // r8 motivating case (agg_global 9.45 vs 1.20 s) is far above it.
-      def wide(xs: Seq[Double]): Boolean =
-        xs.size > 1 && xs.max - xs.min > math.max(xs.min, 0.25)
-      // the initial widen trigger evaluates the WARM subset (drop the cold
-      // run1), consistent with the clearing loop and the contended flag
-      // below (r16 ADVICE: evaluating spread INCLUDING cold meant a key
-      // whose structural cold/warm gap exceeds max(warm_min, 0.25 s)
-      // burned the two extra samples on every run of a quiet host — the
-      // exact pattern the warmSamples policy was introduced to stop)
-      val all = if (ok && wide(base.map(_._1).drop(1)))
-                  base ++ (1 to 2).flatMap(_ => runOnce())
-                else base
-      val medFirst = medOf(all.map(_._1))
-      // auto-recertification (r14, the r13 verdict's ask): when the median
-      // reads far above the key's own committed quiet-host history (the
-      // uniform-load shape the spread trigger cannot see — every sample
-      // equally slow), re-quiesce (bounded wait for loadavg decay; zero
-      // wait on an already-quiet host) and take a fresh 3-sample round.
-      // The fresh round's median is ADOPTED when it comes in lower — by
-      // construction it was measured at lower load, so it is the number
-      // comparable to the quiet-host baseline; the contended first median
-      // stays in detail as med_first with resample_rounds > 0. The >2x
-      // trigger matches the judge's weak-row gate; the 0.1 s floor keeps
-      // centisecond keys from burning quiesce budget on scheduler noise.
-      var samples = all.map(_._1)
-      // true while samples still lead with run1 (cold, build+plan
-      // included) — the clearing trigger and the contended flag evaluate
-      // spread over the WARM subset (r16 review: a key whose structural
-      // cold/warm gap exceeds max(warm, 0.25 s) would otherwise fire a
-      // requiesce + clearing round on every run of a quiet host; the
-      // cold/warm gap is already reported as cold vs med)
-      var samplesIncludeCold = true
-      def warmSamples: Seq[Double] =
-        if (samplesIncludeCold) samples.drop(1) else samples
-      var med = medFirst
-      var resampleRounds = 0
-      // resample runs are DIAGNOSTIC: a transient failure here must not
-      // flip a key whose real samples succeeded into the failed list —
-      // it just ends the recertification attempt with the medians we have
-      def runQuietly(): Option[Double] =
-        try {
-          val t = System.nanoTime()
-          fn(spark, sfDir).queryExecution.toRdd.count()
-          val r = (System.nanoTime() - t) / 1e9
-          sampleLoad()
-          Caches.sweepAll(spark)
-          Some(r)
-        } catch { case _: Throwable => sampleLoad(); Caches.sweepAll(spark); None }
-      // the WHOLE round — wait AND samples — charges the shared budget
-      // (r14 review: a change that legitimately regresses many keys >2x
-      // would otherwise multiply quiet-host bench time without bound,
-      // since an idle host makes the wait free and the samples were
-      // uncharged; the r9 motivating key ran 35.9 s PER SAMPLE)
-      // trigger at >1.4x (was >2x through r15): the r15 record carried two
-      // contended rows at 1.53x/1.72x that the 2x trigger never touched —
-      // the judge's weak gate starts at 1.5x, so the recertifier must fire
-      // below it; the 0.25 s floor keeps sub-second keys from burning
-      // quiesce budget on scheduler noise
-      while (ok && resampleRounds < 2 && requiesceBudgetNs > 0 &&
-          baseline.get(name).exists(b => med > 1.4 * b && med - b > 0.25)) {
-        requiesce(90L * 1000000000L) // deducts its own wait internally
-        val sampleStart = System.nanoTime()
-        val fresh = (1 to 3).flatMap(_ => runQuietly())
-        requiesceBudgetNs -= (System.nanoTime() - sampleStart)
-        // adoption needs >=2 surviving fresh samples (r14 ADVICE): with
-        // failures swallowed, a round where 2 of 3 samples died could
-        // otherwise commit a 1-sample "median" as the key's record.
-        // SEMANTIC ASYMMETRY, deliberate and recorded: the original median
-        // includes the COLD first run (build+plan) while every resample is
-        // warm, so an adopted median is a warm-only statistic — med_first
-        // keeps the cold-inclusive one, and resample_rounds > 0 marks
-        // which regime the recorded med came from.
-        if (fresh.size >= 2 && medOf(fresh) < med) {
-          med = medOf(fresh)
-          samples = fresh
-          samplesIncludeCold = false
-        }
-        resampleRounds += 1
-      }
-      // contended-row CLEARING (r16, the r15 verdict's ask #1: a certified
-      // record should carry ZERO wobbly medians — five r15 rows shipped
-      // contended). When the spread still exceeds the fastest sample after
-      // the passes above, re-quiesce and take fresh 3-sample rounds,
-      // adopting a TIGHT round (spread ≤ its own min) whose median is not
-      // slower than the current one by >10% — tight-and-equal beats
-      // wobbly; a tight-but-slower round means uniform load arrived and
-      // adopting it would inflate the record. Shares the budget; a key
-      // that stays wide keeps its contended flag (the honest outcome on a
-      // persistently noisy host).
-      var clearRounds = 0
-      while (ok && wide(warmSamples) && clearRounds < 2 && requiesceBudgetNs > 0) {
-        requiesce(90L * 1000000000L)
-        val sampleStart = System.nanoTime()
-        val fresh = (1 to 3).flatMap(_ => runQuietly())
-        requiesceBudgetNs -= (System.nanoTime() - sampleStart)
-        if (fresh.size >= 2 && !wide(fresh) && medOf(fresh) <= med * 1.1) {
-          med = medOf(fresh)
-          samples = fresh
-          samplesIncludeCold = false
-        }
-        clearRounds += 1
-      }
       val spread = samples.max - samples.min
-      val contended = ok && wide(warmSamples)
-      // uniform-load detection survivor flag: the FINAL median vs the key's
-      // committed history; the absolute floor keeps sub-second keys from
-      // flagging on scheduler noise. After the resample policy above, a
-      // surviving flag means re-quiescing did not help — genuinely
-      // persistent load (or a real regression), not a transient.
       val suspect = ok && baseline.get(name)
         .exists(b => med > 3 * b && med - b > 1.0)
       System.err.println(
-        f"[bench] $name%-28s $med%8.2f s  (±$spread%5.2f over ${samples.size} runs${if (resampleRounds > 0) s", RESAMPLED x$resampleRounds" else ""}${if (contended) ", CONTENDED" else ""}${if (suspect) ", SUSPECT_LOAD" else ""}, build $buildSec%6.2f, plan $planSec%6.2f, gc +$gcSec%5.2f s, loadMax $loadMax%4.1f, codeCache $codeCacheMB%5.0f MB${if (ok) "" else ", FAILED"})")
+        f"[bench] $name%-28s $med%8.2f s  (±$spread%5.2f over ${samples.size} runs${if (otherCpu > ContendedShare) ", CONTENDED" else ""}${if (suspect) ", SUSPECT_LOAD" else ""}, build $buildSec%6.2f, plan $planSec%6.2f, gc +$gcSec%5.2f s, other cpu $otherCpu%5.3f, codeCache $codeCacheMB%5.0f MB${if (ok) "" else ", FAILED"})")
       Row(name, if (ok) med else -med, buildSec, planSec, gcSec, run1,
-        spread, qLoad, samples.size, contended, suspect, medFirst,
-        resampleRounds, clearRounds, loadMax, warmed)
+        spread, samples.size, otherCpu, suspect)
     }
     def r3(v: Double): Double = math.rint(v * 1000) / 1000
+    val runOtherCpu = r3(HostCpu.otherShare(runStart, HostCpu.sample()))
     val qs = results.map(r => "\"" + r.name + "\":" + r.med)
       .mkString("{", ",", "}")
     val detail = results.map { r =>
       val e = r3(r.run1 - r.build - r.plan)
       s""""${r.name}":{"build":${r3(r.build)},"plan":${r3(r.plan)},"exec":$e,"gc":${r3(r.gc)},""" +
         s""""cold":${r3(r.run1)},"med":${r3(math.abs(r.med))},"spread":${r3(r.spread)},""" +
-        s""""loadavg":${r3(r.qLoad)},"loadavg_max":${r3(r.loadMax)},"warmed":${r.warmed},""" +
-        s""""samples":${r.n},"contended":${r.contended},"suspect_load":${r.suspect},""" +
-        s""""med_first":${r3(r.medFirst)},"resample_rounds":${r.resampleRounds},"clear_rounds":${r.clearRounds}}"""
+        s""""samples":${r.n},"other_cpu_share":${r3(r.otherCpu)},""" +
+        s""""contended":${r.otherCpu > ContendedShare},"suspect_load":${r.suspect}}"""
     }.mkString("{", ",", "}")
     val fl = failed.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // total_sec IS the median-sum (each query contributes its 3-run median)
-    // and total_med_sec is its explicit alias — emitted so a reader never
-    // has to consult this source to learn which statistic the headline is;
-    // total_cold_sec (sum of each query's first run) is the diagnostic twin:
-    // cold-vs-median divergence quantifies how much plan/JIT/contention the
-    // steady-state number excludes
+    // total_sec IS the median-sum and total_med_sec its explicit alias, so
+    // a reader never has to consult this source to learn which statistic
+    // the headline is; total_cold_sec (sum of each query's first run) is the
+    // diagnostic twin: cold-vs-median divergence quantifies how much
+    // plan/JIT the steady-state number excludes
     val total = r3(results.map(r => math.abs(r.med)).sum)
     val totalCold = r3(results.map(_.run1).sum)
     val suspects = results.filter(_.suspect).map("\"" + _.name + "\"")
       .mkString("[", ",", "]")
-    // Two lines, detail first: the committed record keeps only the LAST 2000
-    // chars of stdout, so rounds 1-4's single line (headline total at the
-    // head, detail at the tail) lost its total to truncation. The final line
-    // is a short, complete JSON object — whatever window the recorder keeps,
-    // the headline number and the slowest queries survive as parseable JSON.
-    // Only the summary line carries "metric":"total" (a grep-oriented consumer
-    // matching on the metric name must find exactly one total per run); the
-    // detail line identifies itself as "detail" with no value field.
+    // Two lines, detail first: a recorder that keeps only the tail of
+    // stdout still gets the short, complete summary line. Only the summary
+    // carries "metric":"total", so a consumer matching on the metric name
+    // finds exactly one total per run.
     val note = "medians are standalone-cold (caches swept between samples) " +
       "EXCEPT session-persisted artifacts, ALL derived in an unrecorded " +
-      "setup phase before sampling (r15) — no key's cold carries a " +
-      "one-time derive; graph_edges_persist prices construction via its " +
-      "own per-sample rewrite. A med adopted by resampling " +
-      "(resample_rounds>0) is warm-only; med_first keeps the " +
-      "cold-inclusive median"
-    val detailLine = s"""{"metric":"detail","note":"$note","setup_sec":${r3(setupSec)},"queries":$qs,"detail":$detail,"loadavg_start":$loadStart,"loadavg":$loadAvg,"quiesce_timeout":$quiesceTimedOut,"failed":$fl,"suspect_load":$suspects,"runs_per_query":3,"sf":"$sfDir","unit":"sec","total_sec":$total,"total_med_sec":$total,"total_cold_sec":$totalCold}"""
+      "setup phase before sampling — no key's cold carries a one-time " +
+      "derive; graph_edges_persist prices construction via its own " +
+      "per-sample rewrite. contended = other processes used more than " +
+      s"$ContendedShare of host CPU while the key's samples ran"
+    val detailLine = s"""{"metric":"detail","note":"$note","setup_sec":${r3(setupSec)},"queries":$qs,"detail":$detail,"other_cpu_share":$runOtherCpu,"failed":$fl,"suspect_load":$suspects,"runs_per_query":3,"sf":"$sfDir","unit":"sec","total_sec":$total,"total_med_sec":$total,"total_cold_sec":$totalCold}"""
     println(detailLine)
-    // persist the FULL detail record to a file (r10 judge: the driver's
-    // tail capture truncates the detail stdout line, so per-key
-    // cross-round regression diffs depended on manual baseline refreshes).
-    // Full-suite runs only — a subset run would overwrite the round's
-    // record with a partial map (the STRESS.json caveat).
-    val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
-      "BENCH_DETAIL.json")
-    if (only.isEmpty) {
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(detailPath),
-        (detailLine + "\n").getBytes("UTF-8"))
-      catch { case ex: Exception => System.err.println(
-        s"[bench] could not persist detail to $detailPath: ${ex.getMessage}") }
-    } else System.err.println(
-      s"[bench] subset run — $detailPath left untouched")
+    // both records are also written to files (stdout capture may truncate
+    // the detail line or prefix it). Full-suite runs only: a subset run
+    // would overwrite the record with a partial map.
+    def persist(path: String, line: String): Unit =
+      if (only.isEmpty) {
+        try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+          (line + "\n").getBytes("UTF-8"))
+        catch { case ex: Exception => System.err.println(
+          s"[bench] could not persist to $path: ${ex.getMessage}") }
+      } else System.err.println(s"[bench] subset run — $path left untouched")
+    persist(sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "BENCH_DETAIL.json"),
+      detailLine)
     val top5 = results.sortBy(r => -math.abs(r.med))
       .take(5).map(r => "\"" + r.name + "\":" + r3(math.abs(r.med)))
       .mkString("{", ",", "}")
-    val summaryLine = s"""{"metric":"total","value":$total,"unit":"sec","total_med_sec":$total,"total_cold_sec":$totalCold,"n_queries":${results.size},"n_failed":${failed.distinct.size},"failed":$fl,"suspect_load":$suspects,"top5_sec":$top5,"runs_per_query":3,"loadavg_start":$loadStart,"loadavg":$loadAvg,"quiesce_timeout":$quiesceTimedOut,"sf":"$sfDir"}"""
+    val summaryLine = s"""{"metric":"total","value":$total,"unit":"sec","total_med_sec":$total,"total_cold_sec":$totalCold,"n_queries":${results.size},"n_failed":${failed.distinct.size},"failed":$fl,"suspect_load":$suspects,"top5_sec":$top5,"runs_per_query":3,"other_cpu_share":$runOtherCpu,"sf":"$sfDir"}"""
     println(summaryLine)
-    // persist the one-line summary to a file as well (r18, the r17
-    // verdict's ask #2): the driver captures this program's stdout THROUGH
-    // sbt, whose logger prefixes every line with "[info] " and appends its
-    // own "[success] Total time ..." trailer — so in 17 rounds of records
-    // the summary JSON was never the last clean stdout line and the
-    // driver's PERF comparison parsed nothing (BENCH_r01–r17 all carry
-    // "parsed": null). A sibling file beside BENCH_DETAIL.json gives any
-    // consumer a prefix-free copy; like the detail record it is
-    // full-suite-only so a dev subset run cannot overwrite the round's
-    // summary with a partial total. Additions only — nothing about the
-    // timing or the stdout lines above changes.
-    val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY",
-      "BENCH_SUMMARY.json")
-    if (only.isEmpty) {
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(summaryPath),
-        (summaryLine + "\n").getBytes("UTF-8"))
-      catch { case ex: Exception => System.err.println(
-        s"[bench] could not persist summary to $summaryPath: ${ex.getMessage}") }
-    }
+    persist(sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY", "BENCH_SUMMARY.json"),
+      summaryLine)
     spark.stop()
-    // re-print the summary as the program's absolute last stdout line —
-    // AFTER spark.stop(), so no Spark shutdown chatter can land below it
-    // (the other half of the r17 ask; sbt's own trailer is outside this
-    // process's control, which is why the file above exists too)
+    // the summary is also the program's last stdout line: printed again
+    // after spark.stop(), so no Spark shutdown output can land below it
     println(summaryLine)
   }
 }

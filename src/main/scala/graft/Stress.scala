@@ -56,13 +56,11 @@ object Stress {
     val shuffleRead = new AtomicLong
     val maxTaskPeakExecMem = new AtomicLong
     val spill = new AtomicLong
-    // executor run vs CPU time, summed over tasks: the contention
-    // discriminator loadavg can't be (the harness's own 32 threads dominate
-    // any load sample taken near a run). Across records of the SAME code and
-    // data, cpu_sec ~ constant while run_sec and wall stretch => the threads
-    // were runnable-but-starved or blocked on I/O (external waves — the
-    // spilling 300k minhash join is the canonical victim); cpu_sec growing
-    // with wall => the work itself grew (a real regression).
+    // executor run vs CPU time, summed over tasks. Across records of the
+    // SAME code and data, cpu_sec ~ constant while run_sec and wall stretch
+    // => the threads were runnable-but-starved or blocked on I/O (the
+    // run's other_cpu_share tells which); cpu_sec growing with wall => the
+    // work itself grew (a real regression).
     val taskRunMs = new AtomicLong
     val taskCpuNs = new AtomicLong
     override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -1097,51 +1095,16 @@ object Stress {
 
     case class Run(path: String, size: Long, wall: Double, shuffleMB: Long,
         json: String)
-    // loadavg is a LAGGING average: right after a measured run finishes, the
-    // 1-min loadavg still carries the harness's own (completed) local[32]
-    // work, so an un-quiesced loadavg_start reads ~20-30 and is useless for
-    // spotting EXTERNAL contention (the r4 record's flaw). Wait — bounded —
-    // for the decayed average to drop before sampling; the harness is idle
-    // while waiting, so a reading that stays high means outside load.
-    // returns true when the deadline passed with load still above target —
-    // recorded per run, so a record taken on a genuinely-contended host is
-    // self-identifying instead of indistinguishable from a quiet one (the
-    // loadavg_start field alone already shows the POST-quiesce sample; the
-    // flag says whether that sample was reached by decay or by giving up)
-    def quiesce(targetLoad: Double = 4.0, maxWaitSec: Int = 240): Boolean = {
-      val deadline = System.nanoTime() + maxWaitSec * 1e9
-      var l = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
-      while (l > targetLoad && System.nanoTime() < deadline) {
-        Thread.sleep(5000)
-        l = java.lang.management.ManagementFactory
-          .getOperatingSystemMXBean.getSystemLoadAverage
-      }
-      l > targetLoad
-    }
     def measured(tag: String, size: Long, body: => Seq[StageRec]): Run = {
-      val qTimeout = quiesce()
       listener.reset(); resetPeaks()
-      val load0 = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
+      val cpu0 = HostCpu.sample()
       val (stages, wallSec) = timed(body)
-      // sampled AFTER the run: loadavg_start only proves the run STARTED
-      // quiet — the I/O-bound stages (the 300k minhash join spills ~4.7 GB)
-      // are hostage to external disk waves that arrive mid-run, and across
-      // repeated full records exactly those runs wobbled 1.3-1.7x with no
-      // start-side signal. loadavg_run_end - loadavg_start >> the
-      // harness's own ~32-thread self-load decaying means outside load
-      // arrived while measuring; a wobbly wall with BOTH samples quiet is
-      // ours to explain.
-      val loadEnd = java.lang.management.ManagementFactory
-        .getOperatingSystemMXBean.getSystemLoadAverage
+      val otherCpu = math.rint(HostCpu.otherShare(cpu0, HostCpu.sample()) * 1000) / 1000
       System.err.println(f"[stress] $tag size=$size wall=$wallSec%.1f s " +
         stages.map(s => f"${s.name}=${s.sec}%.1f").mkString(" "))
       val shuffleMB = listener.shuffleWrite.get / (1 << 20)
       Run(tag, size, wallSec, shuffleMB,
         s"""{"path":"$tag","size":$size,"wall_sec":$wallSec,""" +
-          s""""loadavg_start":$load0,"loadavg_run_end":$loadEnd,""" +
-          s""""quiesce_timeout":$qTimeout,""" +
           s""""stages":[${stages.map(_.json).mkString(",")}],""" +
           s""""jobs":${listener.jobs.get},""" +
           s""""shuffle_write_mb":$shuffleMB,""" +
@@ -1149,6 +1112,7 @@ object Stress {
           s""""disk_spill_mb":${listener.spill.get / (1 << 20)},""" +
           s""""task_run_sec":${math.rint(listener.taskRunMs.get / 100.0) / 10},""" +
           s""""task_cpu_sec":${math.rint(listener.taskCpuNs.get / 1e8) / 10},""" +
+          s""""other_cpu_share":$otherCpu,""" +
           s""""max_task_peak_exec_mb":${listener.maxTaskPeakExecMem.get / (1 << 20)},""" +
           s""""peak_heap_mb":$peakHeapMB}""")
     }
@@ -1215,13 +1179,8 @@ object Stress {
       s""""components":$chainComps,"sec":$chainSec}"""
 
     val heap = Runtime.getRuntime.maxMemory() / (1 << 20)
-    // self-identifying contention telemetry (the r3 bench lesson): totals
-    // are only comparable between records taken at similar machine load
-    val load = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .getSystemLoadAverage
     val out =
       s"""{"harness":"graft.Stress","cpus":$cpus,"driver_max_heap_mb":$heap,""" +
-        s""""loadavg_end":$load,""" +
         s""""runs":[${runs.map(_.json).mkString(",")}],""" +
         s""""growth":[${ratios.mkString(",")}],"cc_chain":$chainJson}"""
     println(out)

@@ -987,14 +987,16 @@ object Graph {
         graft.ops.H.dec6Sum(q6(coalesce(col("delta"), lit(0.0)))).as("bc"))
   }
 
-  /** k-core peel over a SYMMETRIC edge list `edges(src, dst)` — `rounds`
-    * synchronous peel iterations (each removes every node whose degree in
-    * the surviving subgraph is < k), returning (node, coredeg) for the
-    * survivors with their degree in the FINAL surviving subgraph. With
+  /** k-core peel over a SYMMETRIC edge list `edges(src, dst)` — at most
+    * `rounds` synchronous peel iterations (each removes every node whose
+    * degree in the surviving subgraph is < k), returning (node, coredeg) for
+    * the survivors with their degree in the FINAL surviving subgraph. With
     * enough rounds this is the k-core; a bounded unroll is the per-round
     * trajectory prefix (deterministic either way — peeling has no order
     * dependence when rounds are synchronous, unlike sequential
-    * min-degree peeling).
+    * min-degree peeling). It is [[kcoreUntil]] capped at `rounds`: a peel
+    * that removes nothing has reached its fixed point, so stopping there
+    * returns the same survivors as running the remaining rounds.
     *
     * Scale shape: per round, the edge list is restricted to surviving
     * endpoints by TWO semi-join-shaped inner joins against the NODE-grain
@@ -1005,24 +1007,12 @@ object Graph {
     * basket/co-occurrence graph, and the alive set only SHRINKS from the
     * probed ceiling — so the guard is conservative-correct per round);
     * beyond `broadcastMaxNodes` the hints drop and AQE shuffles the
-    * node-grain alive set, never the edges. At the sf0.1 fixture the cost
-    * is dominated by the edge-list derivation, not the rounds; the hint's
-    * payoff is the per-round shuffle volume at scale (node-grain
-    * aggregates only). No edge mutation, no accumulating state beyond the
-    * shrinking alive set (cached per round via [[Caches]]; the open-ended
-    * peel is [[kcoreUntil]]). GraphsSpec pins hinted == unhinted.
+    * node-grain alive set, never the edges. GraphsSpec pins hinted ==
+    * unhinted.
     */
   def kcore(edgesIn: DataFrame, k: Int, rounds: Int,
-      broadcastMaxNodes: Long = 5000000L): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val edges = Caches.cache(spread(edgesIn.select(col("src"), col("dst"))))
-    val hinted = nodeHint(edges, broadcastMaxNodes)
-    var alive = Caches.cache(edges.select(col("src").as("node")).distinct())
-    for (_ <- 1 to rounds)
-      alive = Caches.cache(peelRound(edges, hinted, k)(alive))
-    aliveDegrees(edges, hinted, alive)
-  }
+      broadcastMaxNodes: Long = 5000000L): DataFrame =
+    kcoreUntil(edgesIn, k, rounds, broadcastMaxNodes)._1
 
   /** One synchronous peel: the alive nodes whose degree among alive nodes
     * is at least `k`.
@@ -1040,22 +1030,20 @@ object Graph {
       .groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("coredeg"))
 
-  /** Open-ended k-core peel — [[kcore]] run to FIXPOINT: synchronous
-    * deg≥k rounds until a round removes nothing, returning (survivors
-    * with their in-core degree, executed rounds). The converged result is
-    * the true k-core (every survivor's degree among survivors is ≥ k —
-    * GraphsSpec asserts it directly), where the bounded [[kcore]] unroll
-    * is a trajectory prefix. Reaching `maxRounds` is not an error: the
-    * survivors of the last round are returned.
+  /** Open-ended k-core peel: synchronous deg≥k rounds until a round
+    * removes nothing, returning (survivors with their in-core degree,
+    * executed rounds). The converged result is the true k-core (every
+    * survivor's degree among survivors is ≥ k — GraphsSpec asserts it
+    * directly). Reaching `maxRounds` is not an error: the survivors of the
+    * last round are returned, the trajectory prefix [[kcore]] names.
     *
-    * Scale shape: identical per-round plan to [[kcore]] (edges restricted
-    * by two [[nodeHint]]-guarded node-grain semi-joins + one
-    * map-side-combinable degree aggregate; the edge list is never
-    * reshuffled), run on [[Checkpoints.fixedPoint]]: each round's alive
-    * set is checkpointed, which keeps plan depth CONSTANT at unbounded
-    * round counts, and the previous round's blocks free as soon as the
-    * next lands. The alive set only shrinks, so one count per round
-    * detects the fixpoint.
+    * Scale shape: the per-round plan of [[kcore]] (edges restricted by two
+    * [[nodeHint]]-guarded node-grain semi-joins + one map-side-combinable
+    * degree aggregate; the edge list is never reshuffled), run on
+    * [[Checkpoints.fixedPoint]]: each round's alive set is checkpointed,
+    * which keeps plan depth CONSTANT at unbounded round counts, and the
+    * previous round's blocks free as soon as the next lands. The alive set
+    * only shrinks, so one count per round detects the fixpoint.
     */
   def kcoreUntil(edgesIn: DataFrame, k: Int, maxRounds: Int = 100,
       broadcastMaxNodes: Long = 5000000L,

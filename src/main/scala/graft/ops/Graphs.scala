@@ -842,7 +842,8 @@ GROUP BY m.node ORDER BY m.node"""))
     *
     * Scale shape: reads the capped [[coOrderArtifact]]; per round
     * two node-keyed joins + one hash aggregate over a shrinking node set
-    * (builder scaladoc). The oracle unrolls the identical 5 rounds.
+    * (builder scaladoc). The oracle unrolls all 5 rounds; the builder
+    * stops early at a round that peels nothing, with the same survivors.
     */
   private val graphKcore = Q(
     "graph_kcore",

@@ -307,6 +307,12 @@ class ApiSpec extends SparkSpec {
       s"kcoreUntil held $held RDDs after $kr rounds; only its result may stay")
     assert(core.select("node").as[Long].collect().toSet == (1L to 8L).toSet)
     clean()
+    // the bounded peel holds the same state: before any sweep, only the
+    // edge cache and the final round's checkpoint, not one frame per round
+    val bounded = Graph.kcore(g, k = 2, rounds = 3)
+    assert(bounded.select("node").as[Long].collect().toSet == (1L to 8L).toSet)
+    assert(held <= 2, s"kcore(rounds = 3) held $held RDDs before any sweep")
+    clean()
     // cycle 1-4 feeding cycle 5-6, a source 7 and a sink 8
     val directed = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (4L, 5L),
       (5L, 6L), (6L, 5L), (7L, 1L), (6L, 8L)).toDF("src", "dst")
@@ -1827,6 +1833,30 @@ class ApiSpec extends SparkSpec {
     val a = out.orderBy("id").as[(Long, Long)].collect().toSeq
     val b = df.orderBy("id").as[(Long, Long)].collect().toSeq
     assert(a == b, "compaction must preserve content bit-for-bit")
+  }
+
+  // --------------------------------------------------------------- HostCpu
+
+  test("HostCpu.otherShare: idle and iowait are not busy, steal is; clamps at 0") {
+    // user nice system idle iowait irq softirq steal guest guest_nice
+    val (busy, total) =
+      HostCpu.parse("cpu  100 20 30 400 50 6 4 40 70 0")
+    assert(busy == 2.0 && total == 6.5, s"busy $busy total $total")
+    val a = HostCpu.Sample(busy, total, 0.5)
+    // 4 s of host busy over 10 s, 1 s of it this process's: 0.3 other
+    val b = HostCpu.Sample(busy + 4.0, total + 10.0, 1.5)
+    assert(math.abs(HostCpu.otherShare(a, b) - 0.3) < 1e-9)
+    // only steal moves: all of it is someone else's
+    val stolen = HostCpu.parse("cpu  100 20 30 400 50 6 4 140 70 0")
+    assert(HostCpu.otherShare(a, HostCpu.Sample(stolen._1, stolen._2, 0.5)) == 1.0)
+    // idle and iowait move: nothing is busy
+    val idle = HostCpu.parse("cpu  100 20 30 500 150 6 4 40 70 0")
+    assert(HostCpu.otherShare(a, HostCpu.Sample(idle._1, idle._2, 0.5)) == 0.0)
+    // the process used more than the host's busy delta (tick rounding)
+    assert(HostCpu.otherShare(a, b.copy(procCpuS = 9.0)) == 0.0)
+    // a zero-length window
+    assert(HostCpu.otherShare(a, a) == 0.0)
+    assert(HostCpu.otherShare(b, a) == 0.0)
   }
 
   // ---------------------------------------------------------------- Layout
