@@ -27,6 +27,11 @@ import scala.jdk.CollectionConverters._
   * quiet-host history (`bench_baseline.json`): a median > 3× its baseline
   * and > 1 s above it marks `suspect_load`, which reads "host load" when
   * the row is contended and "regression, bisect" when it is not.
+  * Write-heavy keys read above [[ContendedShare]] on an idle host: in two
+  * calm full sf0.1 runs (run-level share 0.009 and 0.008) `src_compaction`
+  * read 0.106 and 0.108 and `agg_hll_sketch_table` 0.057–0.075. A
+  * `contended` flag on those rows alone is therefore no evidence of host
+  * load; why they read high is not established.
   *
   * Caches are swept between samples, so every sample pays its builder's
   * cache population (CC checkpoints, bucketed-table writes): each sample

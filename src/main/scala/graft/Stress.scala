@@ -679,16 +679,14 @@ object Stress {
     // drift in the builders shows in the stress record too.
     val (nCore, coreSec) = timed {
       val (e0, _) = graft.ops.Graphs.capBaskets(items)
-      val adj = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
+      val adj = graft.api.Graph.symmetric(e0)
       graft.api.Graph.kcore(adj, k = 30, rounds = 3).count()
     }
     recs += StageRec("kcore_k30_r3", coreSec, nCore)
     graft.api.Caches.sweep(spark)
     val (nReach, bfsSec) = timed {
       val (e0, _) = graft.ops.Graphs.capBaskets(items)
-      val adj = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
+      val adj = graft.api.Graph.symmetric(e0)
       graft.api.Graph.bfsHops(adj, source = 0L, maxHops = 3).count()
     }
     recs += StageRec("bfs_3hops", bfsSec, nReach)
@@ -767,8 +765,7 @@ object Stress {
     recs += StageRec("gen_baskets", genSec, nItems)
     val ((edges, nEdges), edgeSec) = timed {
       val (e0, _) = graft.ops.Graphs.capBaskets(items)
-      val adj = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
+      val adj = graft.api.Graph.symmetric(e0)
         .persist()
       (adj, adj.count())
     }

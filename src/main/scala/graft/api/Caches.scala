@@ -2,7 +2,7 @@ package graft.api
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped lifecycle registry for the frames the api builders persist
+/** Per-session lifecycle registry for the frames the api builders persist
   * internally.
   *
   * Builders like [[Dedup.minhashPairs]] persist interior frames (signature
@@ -18,23 +18,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   Caches.sweep(spark)               // free every builder-cached block
   * }}}
   *
-  * [[sweep]] frees the GLOBAL registry — correct for the one-consumer-
-  * at-a-time shape (the harness sweeps between queries). When several
-  * consumers build and consume concurrently in one SparkContext, a global
-  * sweep from one would evict another's still-unconsumed interior frames;
-  * those callers wrap each build+consume in [[scoped]], which binds a
-  * private per-call registry to the calling thread (builders run on the
-  * caller's thread) and frees exactly its own frames on exit:
-  *
-  * {{{
-  *   Caches.scoped {                   // frames cached in here are scoped
-  *     val pairs = Dedup.minhashPairs(docs, "id", "text")
-  *     pairs.write.parquet(out)
-  *   }                                 // scope's frames freed; others untouched
-  * }}}
-  *
-  * Harness surfaces (Verify/Bench/GoldenSpec) call [[sweepAll]] between
-  * queries.
+  * [[sweep]] frees the whole registry of a session — correct for the
+  * one-consumer-at-a-time shape (the harness sweeps between queries); a
+  * sweep from one of several concurrent consumers would also evict the
+  * others' still-unconsumed interior frames. Harness surfaces
+  * (Verify/Bench/GoldenSpec) call [[sweepAll]] between queries.
   * Checkpointed solver state is not registered here: the solvers free
   * their superseded rounds through [[Checkpoints]], and a round caches
   * nothing besides its checkpoint. A builder
@@ -44,9 +32,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Caches {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  // a non-null binding routes this thread's cache() calls to a private
-  // per-scope buffer instead of the global registry
-  private val scope = new ThreadLocal[scala.collection.mutable.ArrayBuffer[DataFrame]]
 
   // entries whose SparkContext has stopped can never be swept (unpersist
   // would throw) and would otherwise pin their analyzed plans for the JVM
@@ -54,16 +39,13 @@ object Caches {
   private def purgeStopped(): Unit =
     frames.filterInPlace(f => !f.sparkSession.sparkContext.isStopped)
 
-  /** Persist `df` and register it for a later [[sweep]] (or, inside
-    * [[scoped]], for that scope's exit). Public: composed operators outside
-    * `graft.api` (e.g. the `graft.ops` registry queries) persist interior
-    * frames under the same lifecycle discipline.
+  /** Persist `df` and register it for a later [[sweep]]. Public: composed
+    * operators outside `graft.api` (e.g. the `graft.ops` registry queries)
+    * persist interior frames under the same lifecycle discipline.
     */
   def cache(df: DataFrame): DataFrame = {
     val out = df.persist()
-    val s = scope.get
-    if (s != null) { s += out }
-    else synchronized { purgeStopped(); frames += out }
+    synchronized { purgeStopped(); frames += out }
     out
   }
 
@@ -78,29 +60,9 @@ object Caches {
       }
     }
 
-  /** Run `body` with builder-persisted frames registered to a private
-    * scope bound to the CALLING THREAD, freed when `body` finishes (frames
-    * an unpersist transiently fails for fall back to the global registry so
-    * a later [[sweep]] retries them). Concurrent consumers on other threads
-    * — scoped or global — are untouched. Builders invoked from `body` must
-    * run on this thread (they do: api builders are plain synchronous calls).
-    */
-  def scoped[A](body: => A): A = {
-    val mine = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val prev = scope.get
-    scope.set(mine)
-    try body
-    finally {
-      if (prev == null) scope.remove() else scope.set(prev)
-      val stuck = mine.filter(unpersistOrKeep)
-      if (stuck.nonEmpty) synchronized { frames ++= stuck }
-    }
-  }
-
-  /** Unpersist every GLOBALLY-registered builder-cached frame belonging to
-    * `spark`'s session (frames inside a live [[scoped]] block are not
-    * touched). Blocking, so `sparkContext.getPersistentRDDs` is clean on
-    * return; idempotent (a second sweep, or one after a harness-side
+  /** Unpersist every registered builder-cached frame belonging to
+    * `spark`'s session. Blocking, so `sparkContext.getPersistentRDDs` is
+    * clean on return; idempotent (a second sweep, or one after a harness-side
     * unpersist, is a no-op). A TRANSIENT unpersist failure on a live session
     * keeps the entry registered (logged; the next sweep retries) — dropping
     * the handle would turn a recoverable error into a permanent block leak.

@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.DecimalType
   * (BigDecimal.valueOf) while DuckDB rounds the EXACT binary value, so a
   * quotient whose shortest repr crosses a .5e-6 boundary its exact value
   * does not (e.g. ...6499999999997 printing as ...65) quantizes
-  * differently per engine — 29 such hits surfaced on the weighted fixture
-  * graph in r8. The floor form is identical IEEE ops on identical bits in
+  * differently per engine (the weighted fixture graph has 29 such
+  * quotients). The floor form is identical IEEE ops on identical bits in
   * both engines; the subsequent cast of a k/1e6-valued double to
   * DECIMAL(28,6) is unambiguous (< ulp from the boundary). The decimal
   * SUM over the quantized grain stays order-independent exact.
@@ -48,12 +48,12 @@ object Graph {
     * measured sizes, shuffling at most node-grain frames, never the edges.
     * A forced `broadcast()` is obeyed regardless of measured size — on a
     * node set beyond executor memory it OOMs by construction — so NO graph
-    * builder here hints unguarded (the r10 bfsHops discipline, applied
-    * uniformly in r11). The guard is a plan knob, never a semantics knob:
-    * either path produces the identical result (GraphsSpec pins hinted ==
-    * unhinted per builder by forcing `broadcastMaxNodes = 0`).
+    * builder here hints unguarded. The guard is a plan knob, never a
+    * semantics knob: either path produces the identical result (GraphsSpec
+    * pins hinted == unhinted per builder by forcing
+    * `broadcastMaxNodes = 0`).
     *
-    * MARGIN (r12): the probe is an ESTIMATE (±~5 % at the default rsd) and
+    * MARGIN: the probe is an ESTIMATE (±~5 % at the default rsd) and
     * the comparison protects against an OOM, so the estimate is derated by
     * [[NodeHintMargin]] (0.8 — covers a 2-sigma estimator miss with room to
     * spare) before the ceiling check: a set probing just under the ceiling
@@ -68,10 +68,10 @@ object Graph {
   private[graft] val NodeHintMargin = 0.8
 
   /** Scale-ADAPTIVE parallelism guard for the iterative builders' cached
-    * edge frames (r17, guide §2 "make partitioning scale-adaptive"): an
-    * edge list read off a few-bucket artifact (8 buckets locally; its
-    * symmetric union inherits 16 partitions) under-parallelizes every
-    * round's map work on a wider executor fleet — and NO round ever
+    * edge frames: an edge list read off a few-bucket artifact (8 buckets
+    * locally; its symmetric union inherits 16 partitions)
+    * under-parallelizes every round's map work on a wider executor fleet —
+    * and NO round ever
     * re-spreads it, because broadcast-hinted joins and map-side partial
     * aggregates preserve the input partitioning. Hash-repartition ON THE
     * JOIN KEY (src — no round-robin, so no sort-before-repartition pass
@@ -98,102 +98,105 @@ object Graph {
     }
   }
 
-  /** PageRank over a SYMMETRIC directed edge list `edges(src, dst)` —
-    * damped (d = 0.85), `iters` fixed iterations from a uniform rank of 1.
-    * Returns (node, rank). The caller guarantees symmetry (every node then
-    * has outdeg ≥ 1, so no dangling-mass correction is needed).
+  /** The SYMMETRIC directed edge list of an undirected one: every
+    * `(u, v[, payload])` row becomes `(src = u, dst = v[, payload])` and
+    * `(src = v, dst = u[, payload])` — the input shape of every builder
+    * here that names a SYMMETRIC edge list. A projection union, no shuffle.
+    */
+  def symmetric(e0: DataFrame, payload: Seq[String] = Nil): DataFrame = {
+    def dir(a: String, b: String) =
+      e0.select(col(a).as("src") +: col(b).as("dst") +: payload.map(col): _*)
+    dir("u", "v").union(dir("v", "u"))
+  }
+
+  /** PageRank over a SYMMETRIC edge list `edges(src, dst[, w])` — damped
+    * (d = 0.85), `iters` fixed rounds of `rank ← 0.15 + 0.85·Σ incoming
+    * rank·w/wsum(src)` from a uniform rank of 1. Returns (node, rank). A
+    * missing `w` column means uniform weights (w = 1, wsum = out-degree).
+    * The caller guarantees symmetry (every node then has outdeg ≥ 1, so no
+    * dangling-mass correction is needed).
     *
-    * Scale shape: the edge list and degree frame persist via [[Caches]]
-    * (read `iters`× each — `Caches.sweep` when done); each iteration is ONE
-    * src-keyed equi-join (rank ⋈ deg is node-grain) + ONE dst-keyed hash
-    * aggregate. Bounded-iteration unroll keeps plan depth fixed; the
-    * open-ended solver is [[pagerankUntil]], which checkpoints every round
-    * on [[Checkpoints.fixedPoint]].
+    * Scale shape: [[rankEdges]] persists the edge list with its out-mass
+    * attached via [[Caches]] (`Caches.sweep` when done); each round is ONE
+    * src-keyed equi-join + ONE dst-keyed hash aggregate ([[rankRound]]).
+    * The rounds fold lazily into one plan of `iters`-bounded depth; the
+    * open-ended solver is [[pagerankUntil]], which runs the same round on
+    * [[Checkpoints.fixedPoint]].
     */
   def pagerank(edgesIn: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be positive, got $iters")
-    val edges = Caches.cache(spread(edgesIn.select(col("src"), col("dst"))))
-    val deg = Caches.cache(edges.groupBy("src")
-      .agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg")))
-    // out-degree is per-round-CONSTANT node state: attach it to the cached
-    // edge list ONCE instead of re-joining rank⋈deg every round (the
-    // quotient rank/deg is spelled identically, so the pagerankUntil
-    // uniform-weight equality stays bit-exact)
-    val edgesDeg = Caches.cache(spread(edges
-      .join(deg.select(col("node").as("src"), col("deg")), "src")))
-    var rank = deg.select(col("node"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      rank = edgesDeg
-        .join(rank, col("src") === col("node"))
-        .select(col("dst"),
-          q6(col("rank") / col("deg")).cast(DecimalType(28, 6)).as("w"))
-        .groupBy(col("dst").as("node"))
-        .agg((lit(0.15) + lit(0.85) * sum(col("w")).cast("double"))
-          .as("rank"))
-    }
-    rank.select(col("node"), col("rank"))
+    val (edges, rank0, w) = rankEdges(edgesIn)
+    (1 to iters).foldLeft(rank0)((rank, _) => rankRound(edges, w)(rank))
   }
 
-  /** Until-convergence, optionally WEIGHTED PageRank over a symmetric edge
-    * list `edges(src, dst[, w])` — iterates `rank ← 0.15 + 0.85·Σ incoming
-    * rank·w/wsum(src)` until `max |Δrank| < eps` or `maxIters`, returning
-    * (ranks(node, rank), roundsRun). A missing `w` column means uniform
-    * weights, where the per-round arithmetic is BIT-IDENTICAL to
-    * [[pagerank]] (the quotient divides by the same decimal out-mass), so
-    * the bounded-unroll oracle key doubles as this solver's gate.
+  /** Until-convergence PageRank over the [[pagerank]] input: iterates the
+    * same round until `max |Δrank| < eps` or `maxIters`, returning
+    * (ranks(node, rank), roundsRun). With `eps = 0` it runs exactly
+    * `maxIters` rounds and returns the bits of `pagerank(edges, maxIters)`
+    * (ApiSpec pins the equality, weighted and unweighted).
     *
-    * Weighted edges are the transaction-multiplicity case the fixed-unroll
-    * key discards: derive `w` as the edge's transaction count and rank mass
-    * follows trade volume, not mere adjacency.
+    * Weighted edges are the transaction-multiplicity case: derive `w` as
+    * the edge's transaction count and rank mass follows trade volume, not
+    * mere adjacency.
     *
-    * Scale shape: per round ONE src-keyed equi-join + ONE dst-keyed hash
-    * aggregate (the [[pagerank]] step) on [[Checkpoints.fixedPoint]]: the
+    * Scale shape: the [[pagerank]] round on [[Checkpoints.fixedPoint]]: the
     * round's ranks are checkpointed (executor-local by default, reliable
     * into `checkpointDir` when rounds must survive executor loss) and the
     * superseded round freed, and one node-grain driver probe joins the two
-    * rounds for `max |Δ|`. The edge/out-mass frames persist via
-    * [[Caches]]. Reaching `maxIters` is not an error: the ranks of the
-    * last round are returned.
+    * rounds for `max |Δ|`. Reaching `maxIters` is not an error: the ranks
+    * of the last round are returned.
     */
   def pagerankUntil(edgesIn: DataFrame, eps: Double = 1e-6,
       maxIters: Int = 40,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     require(maxIters >= 1, s"maxIters must be positive, got $maxIters")
-    val base =
-      if (edgesIn.columns.contains("w"))
-        edgesIn.select(col("src"), col("dst"), col("w").cast("double").as("w"))
-      else edgesIn.select(col("src"), col("dst"), lit(1.0).as("w"))
-    val edges = Caches.cache(base)
-    // out-mass per node, exact decimal (uniform weights → wsum == deg, so
-    // rank/wsum reproduces pagerank()'s rank/deg bits)
-    val wsum = Caches.cache(edges.groupBy("src")
-      .agg(sum(col("w").cast(DecimalType(28, 6))).as("wsum"))
-      .select(col("src").as("node"), col("wsum")))
-    // per-round-constant out-mass attached to the cached edge list ONCE
-    // (the pagerank() discipline): each round then joins rank only
-    val edgesWsum = Caches.cache(spread(edges
-      .join(wsum.select(col("node").as("src"), col("wsum")), "src")))
+    val (edges, rank0, w) = rankEdges(edgesIn)
     // the probe is the state itself: the test joins both rounds, and a
     // NaN delta stops the loop as a converged one does
     def settled(prev: DataFrame, next: DataFrame): Boolean =
       !(next.join(prev.select(col("node"), col("rank").as("prev")), "node")
         .agg(coalesce(max(abs(col("rank") - col("prev"))), lit(0.0)))
         .head().getDouble(0) >= eps)
-    val (rank, rounds, _) = Checkpoints.fixedPoint(
-        wsum.select(col("node"), lit(1.0).as("rank")), maxIters,
-        checkpointDir)(identity)(settled) { rank =>
-      edgesWsum
-        .join(rank, col("src") === col("node"))
-        .select(col("dst"),
-          q6(col("rank") * col("w") / col("wsum").cast("double"))
-            .cast(DecimalType(28, 6)).as("c"))
-        .groupBy(col("dst").as("node"))
-        .agg((lit(0.15) + lit(0.85) * sum(col("c")).cast("double"))
-          .as("rank"))
-    }
-    (rank.select(col("node"), col("rank")), rounds)
+    val (rank, rounds, _) = Checkpoints.fixedPoint(rank0, maxIters,
+      checkpointDir)(identity)(settled)(rankRound(edges, w))
+    (rank, rounds)
   }
+
+  /** The PageRank round input: the edge list `(src, dst[, w], wsum)` with
+    * each source's out-mass attached once (it is per-round constant, so a
+    * round joins rank only), the initial ranks (node, 1.0), and the weight
+    * column a round multiplies by. With a `w` column the out-mass is its
+    * exact DECIMAL(28,6) sum; without one it is the out-degree and the
+    * weight is the literal 1.0, so uniform edges carry no weight column
+    * and no decimal sum. Either out-mass is cast to double once per node.
+    */
+  private def rankEdges(edgesIn: DataFrame): (DataFrame, DataFrame, Column) = {
+    val weighted = edgesIn.columns.contains("w")
+    val edges = Caches.cache(spread(edgesIn.select(col("src") +: col("dst") +:
+      (if (weighted) Seq(col("w").cast("double").as("w")) else Nil): _*)))
+    val mass =
+      if (weighted) sum(col("w").cast(DecimalType(28, 6))) else count(lit(1))
+    val wsum = Caches.cache(edges.groupBy("src")
+      .agg(mass.cast("double").as("wsum")))
+    (Caches.cache(spread(edges.join(wsum, "src"))),
+      wsum.select(col("src").as("node"), lit(1.0).as("rank")),
+      if (weighted) col("w") else lit(1.0))
+  }
+
+  /** One PageRank round over [[rankEdges]]: each contribution
+    * `rank·w/wsum` quantizes to the 1e-6 grain ([[q6]]) and sums as exact
+    * decimal. Under uniform weights `rank·1.0/wsum` has the bits of
+    * `rank/deg`: the product is exact and wsum is an exact integer.
+    */
+  private def rankRound(edges: DataFrame, w: Column)(rank: DataFrame)
+      : DataFrame =
+    edges
+      .join(rank, col("src") === col("node"))
+      .select(col("dst"),
+        q6(col("rank") * w / col("wsum"))
+          .cast(DecimalType(28, 6)).as("c"))
+      .groupBy(col("dst").as("node"))
+      .agg((lit(0.15) + lit(0.85) * sum(col("c")).cast("double")).as("rank"))
 
   /** Synchronous label propagation over a SYMMETRIC edge list
     * `edges(src, dst)` — every node starts labeled with its own id; each
@@ -449,8 +452,8 @@ object Graph {
     val dec19 = DecimalType(19, 0)
     // labels is typically an ITERATIVE plan (the LPA rounds); it feeds BOTH
     // endpoint joins, so without a cache the whole round chain executes
-    // twice (measured 40 s vs 10 s on the r9 fixture key). Registered with
-    // Caches for the harness sweep.
+    // twice (graph_modularity measured 40 s uncached, 10 s cached).
+    // Registered with Caches for the harness sweep.
     val lab = Caches.cache(labels.select(col("node"), col("label")))
     val e = edgesIn.select(col("src"), col("dst"))
       .join(lab.select(col("node").as("src"), col("label").as("lsrc")), "src")
@@ -500,7 +503,7 @@ object Graph {
 
   /** Degree-ordered compact-forward orientation of an id-ordered
     * UNDIRECTED edge list `e0(u, v)`, `u < v` — the derivation shared by
-    * [[triangles]] and [[localClustering]], exposed (r13) so the oriented
+    * [[triangles]] and [[localClustering]], exposed so the oriented
     * frame can be PERSISTED once per (session, source) and every later
     * triangle-family run can start from the stored table
     * ([[trianglesOriented]] / [[localClusteringOriented]]).
@@ -548,7 +551,7 @@ object Graph {
         s"${bounds.getLong(1)}")
   }
 
-  /** EAGER WEDGE-BUDGET PROBE (r13): ONE aggregate over the oriented edge
+  /** EAGER WEDGE-BUDGET PROBE: ONE aggregate over the oriented edge
     * list returning `(|E|, Σ_lo C(outdeg(lo), 2))` — the second number is
     * the EXACT row count of the wedge frame the triangle family is about
     * to generate, surfaced BEFORE the generation job runs (the
@@ -558,7 +561,7 @@ object Graph {
     * Over a [[writeEdges]]-persisted oriented artifact (bucketed by the
     * low endpoint) the `groupBy(lo)` is exchange-free.
     *
-    * OVERFLOW-SAFE (r14 ADVICE): the Σ od·(od−1) accumulator runs in
+    * OVERFLOW-SAFE: the Σ od·(od−1) accumulator runs in
     * DECIMAL(38,0) — each factor cast to DECIMAL(19,0) first, the
     * assortativity product rule, exact to 10³⁸ — because a plain long sum
     * wraps silently in non-ANSI mode, and a guard that wraps to a small
@@ -615,7 +618,7 @@ object Graph {
     * row count (refused above `wedgeBudget` with the number — see
     * [[WEDGE_BUDGET]]) and `|E|` for the broadcast guard in the same job.
     *
-    * EDGE-GRAIN BROADCAST GUARD (r12): the wedge frame is the one stage
+    * EDGE-GRAIN BROADCAST GUARD: the wedge frame is the one stage
     * that dwarfs everything (Σ outdeg² rows — 41M at the sf0.1 fixture's
     * 1.2M edges), and the default plan SHUFFLES it twice: once into the
     * wedge self-join, once into the closing-edge probe. When the ORIENTED
@@ -707,8 +710,8 @@ object Graph {
 
   /** |E|-grain broadcast guard for the triangle family's wedge joins —
     * the [[nodeHint]] discipline with an EDGE ceiling, fed the exact edge
-    * count [[wedgeProbe]] already paid for (r13 — previously its own
-    * count job): the hint only when the whole edge list is
+    * count [[wedgeProbe]] already paid for (no count job of its own): the
+    * hint only when the whole edge list is
     * broadcast-range. Default 5e6 edges ≈ 120 MB as a hash relation
     * (24 bytes/row payload, ~2× map overhead) — executor-safe at
     * the 8–16 GB floor; callers on smaller executors lower it, and a
@@ -732,7 +735,7 @@ object Graph {
     * Returns node-grain rows (node, degree, tri_n, cc). Float discipline:
     * cc is one double division of exact integers — identical IEEE in any
     * engine → RAW. The wedge joins ride the same [[edgeHint]]-guarded
-    * broadcast as [[triangles]] (r12) — map-side wedge generation + close
+    * broadcast as [[triangles]] — map-side wedge generation + close
     * while the oriented list is broadcast-range, shuffled equi-joins
     * beyond it.
     */
@@ -780,63 +783,41 @@ object Graph {
 
   /** Single-source BFS hop counts over a SYMMETRIC edge list
     * `edges(src, dst)` — (node, hop) for every node within `maxHops` of
-    * `source` (hop 0 = the source itself). Bounded-depth unroll: the
-    * frontier expands one hop per round and already-visited nodes are
-    * anti-joined away, so each node appears exactly once at its SHORTEST
-    * hop distance (frontier-BFS invariant — fully deterministic, no
-    * tie-breaking needed).
-    *
-    * Scale shape: per round ONE src-keyed equi-join (edges ⋈ frontier) +
-    * one distinct + one node-keyed LEFT ANTI join against the visited set
-    * — the Pregel BFS step. Frontier and visited frames persist via
-    * [[Caches]] (visited is re-read by every later round's anti-join);
-    * bounded `maxHops` keeps plan depth fixed (an open-ended BFS would
-    * run on [[Checkpoints.fixedPoint]] like [[pagerankUntil]]). Both state frames
-    * are NODE-grain; when they broadcast, the edge list is never
-    * reshuffled — each round is map-side edge⋈frontier + one node-grain
-    * distinct + a broadcast anti-join. But frontier and visited GROW
-    * monotonically toward the node set (on a hub graph hop 2 is most of
-    * it), so a forced broadcast hint would be the one plan shape that
-    * degrades with scale by construction. The hint is therefore GUARDED by
-    * [[nodeHint]]'s eager node-count probe: only when the WHOLE node set —
-    * the ceiling either state frame can reach — is broadcast-range
-    * (`broadcastMaxNodes`) do the state sides carry the hint; beyond it
-    * the hints are dropped and AQE picks broadcast vs shuffle per round
-    * from measured sizes, shuffling at most the node-grain state, never
-    * the edge list. Either path produces the identical result (GraphsSpec
-    * pins hinted == unhinted).
+    * `source` (hop 0 = the source itself): [[multiBfsHops]] with one
+    * source, so the two cannot drift apart.
     */
   def bfsHops(edgesIn: DataFrame, source: Long, maxHops: Int,
-      broadcastMaxNodes: Long = 5000000L): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val edges = Caches.cache(edgesIn.select(col("src"), col("dst")))
-    val spark = edgesIn.sparkSession
-    val hinted = nodeHint(edges, broadcastMaxNodes)
-    var frontier = Caches.cache(
-      spark.range(1).select(lit(source).as("node"), lit(0).as("hop")))
-    var visited = frontier
-    for (h <- 1 to maxHops) {
-      frontier = Caches.cache(edges
-        .join(hinted(frontier.select(col("node").as("src"))), "src")
-        .select(col("dst").as("node")).distinct()
-        .join(hinted(visited.select("node")), Seq("node"), "left_anti")
-        .withColumn("hop", lit(h)))
-      visited = Caches.cache(visited.union(frontier))
-    }
-    visited.select(col("node"), col("hop"))
-  }
+      broadcastMaxNodes: Long = 5000000L): DataFrame =
+    multiBfsHops(edgesIn, Seq(source), maxHops, broadcastMaxNodes)
+      .select("node", "hop")
 
-  /** Multi-source BFS hop counts — [[bfsHops]] generalized to a bounded
-    * PROBE SET of sources in ONE pass: state is (bsrc, node, hop) at
-    * (source × node) grain, every source's frontier expanding
-    * independently under the same per-round plan (one edges ⋈ frontier
-    * equi-join, one distinct, one anti-join against the visited set — all
-    * keyed (bsrc, node)). For k sources this is ONE solver run with k×
-    * state instead of k solver runs with k× plan/scan overhead — the
-    * shape sampled centrality estimators need (BFS from a handful of
-    * probes, never all-pairs). State stays node-grain × k; the broadcast
-    * hints ride [[nodeHint]]'s |V| probe, so a caller with a large probe
-    * set lowers `broadcastMaxNodes` to keep k·|V| broadcast-safe.
+  /** Multi-source BFS hop counts over a SYMMETRIC edge list
+    * `edges(src, dst)` — (source, node, hop) for every node within
+    * `maxHops` of each source, in ONE pass over a bounded PROBE SET: state
+    * is (bsrc, node, hop) at (source × node) grain, every source's
+    * frontier expanding independently under the same per-round plan. For
+    * k sources this is ONE solver run with k× state instead of k solver
+    * runs with k× plan/scan overhead — the shape sampled centrality
+    * estimators need (BFS from a handful of probes, never all-pairs).
+    * Bounded-depth unroll: the frontier expands one hop per round and
+    * already-visited (source, node) pairs are anti-joined away, so each
+    * node appears once per source at its SHORTEST hop distance
+    * (frontier-BFS invariant — deterministic, no tie-breaking). A source
+    * with no edges yields its hop-0 row only.
+    *
+    * Scale shape: per round ONE src-keyed equi-join (edges ⋈ frontier) +
+    * one distinct + one (bsrc, node)-keyed LEFT ANTI join against the
+    * visited set — the Pregel BFS step. Frontier and visited frames persist
+    * via [[Caches]] (visited is re-read by every later round's anti-join);
+    * bounded `maxHops` keeps plan depth fixed. Both state frames GROW
+    * monotonically toward k×|V| (on a hub graph hop 2 is most of it), so
+    * their broadcast hints are GUARDED by [[nodeHint]]'s eager node-count
+    * probe: only when the whole node set is broadcast-range do the state
+    * sides carry the hint; beyond it AQE picks broadcast vs shuffle per
+    * round from measured sizes, shuffling at most the state, never the
+    * edge list. A caller with a large probe set lowers `broadcastMaxNodes`
+    * to keep k·|V| broadcast-safe. Either path produces the identical
+    * result (GraphsSpec pins hinted == unhinted).
     */
   def multiBfsHops(edgesIn: DataFrame, sources: Seq[Long], maxHops: Int,
       broadcastMaxNodes: Long = 5000000L): DataFrame = {
@@ -845,7 +826,7 @@ object Graph {
     // an ALREADY-persisted input (betweennessSampled passes its own cached
     // projection) reads through its existing blocks — re-caching the
     // projection would materialize a second copy of the largest input
-    // frame (r14 ADVICE)
+    // frame
     val edges =
       if (edgesIn.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
         edgesIn.select(col("src"), col("dst"))
@@ -871,7 +852,7 @@ object Graph {
     visited.select(col("bsrc").as("source"), col("node"), col("hop"))
   }
 
-  /** SAMPLED BETWEENNESS CENTRALITY (Brandes-style, r14) over a SYMMETRIC
+  /** SAMPLED BETWEENNESS CENTRALITY (Brandes-style) over a SYMMETRIC
     * edge list `edges(src, dst)` — the probe-set estimator behind every
     * at-scale betweenness ranking (exact Brandes is Θ(|V|·BFS + |V|·|E|)):
     * BFS from a SMALL `sources` set bounded at `maxHops`, count shortest
@@ -926,10 +907,10 @@ object Graph {
       freeable += out
       out
     }
-    // spread() deliberately NOT applied here or in the BFS family (r17):
-    // the full-run A/B read bfs_hops +1.1 s and betweenness +1.6 s with it
-    // — their few light rounds don't repay an up-front edge shuffle, unlike
-    // kcore/pagerank's heavier round loops
+    // no spread() here or in the BFS family: their few light rounds do not
+    // repay an up-front edge shuffle (with it, graph_bfs_hops read +1.1 s
+    // and graph_betweenness_sampled +1.6 s), unlike kcore/pagerank's
+    // heavier round loops
     val edges = Caches.cache(edgesIn.select(col("src"), col("dst")))
     val hops = cp(multiBfsHops(edges, sources, maxHops, broadcastMaxNodes))
     // per-source shortest-path DAG: the edges that advance one hop level
@@ -941,11 +922,9 @@ object Graph {
       .filter(col("hv") === col("hu") + 1)
       .select(col("source"), col("src"), col("dst"), col("hu")))
     // forward: σ per level (σ(level 0) = 1 at each source)
-    // (r17 note: an attempt to relax the interior σ checkpoints to lazy
-    // Caches.cache — fewer barrier jobs — MEASURED SLOWER on a same-host
-    // single-key A/B, med 9.3 s vs 6.2 s, so the per-level eager
-    // checkpoints stand; the barrier cost is cheaper than whatever the
-    // lazy chain re-pays at materialization.)
+    // each level is an eager checkpoint: lazy Caches.cache levels (fewer
+    // barrier jobs) measured slower on graph_betweenness_sampled, median
+    // 9.3 s vs 6.2 s
     val sigma = new Array[DataFrame](maxHops + 1)
     sigma(0) = cpFreeable(hops.filter(col("hop") === 0)
       .select(col("source"), col("node"), lit(1L).as("sigma")))

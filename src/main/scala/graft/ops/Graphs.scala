@@ -34,7 +34,7 @@ import H.{dec6Sum, dec6SumSql, q6, q6Sql}
   * PageRank contributions quantize to a 1e-6 grain IN DOUBLE SPACE
   * (`floor(q·1e6+0.5)/1e6`, identical IEEE ops both engines — a direct
   * double→DECIMAL cast rounds Spark's shortest-repr vs DuckDB's exact
-  * binary and diverged on 29 weighted-fixture quotients in r8), then sum
+  * binary, and the two differ on 29 weighted-fixture quotients), then sum
   * as exact decimal (order-independent across both engines' aggregation
   * orders); the damping step `0.15 + 0.85·sum` is identical IEEE ops on
   * identical bits, so ranks emit RAW.
@@ -52,31 +52,25 @@ object Graphs {
     * customer↔supplier transaction graph — the graph-centrality quality
     * signal of web-corpus curation (a page's rank is a standard keep-weight
     * in pretraining pipelines), here exercised on the star schema's natural
-    * bipartite graph. Delegates to [[graft.api.Graph.pagerank]]; the
-    * weighted / until-convergence solver [[graft.api.Graph.pagerankUntil]]
-    * shares its per-round arithmetic bit-for-bit under uniform weights, so
-    * this oracled key gates both (ApiSpec pins the equality).
+    * bipartite graph. Delegates to [[graft.api.Graph.pagerank]] with
+    * uniform weights; the until-convergence solver
+    * [[graft.api.Graph.pagerankUntil]] runs the same round, so this
+    * oracled key gates both (ApiSpec pins the equality).
     *
-    * Scale shape: the edge list and degree frame build once and persist via
-    * `Caches` (read 5× each); every iteration is ONE src-keyed hash join
-    * (rank ⋈ deg is node-grain, then edges ⋈ ranks co-partitions on the
-    * same key) + ONE dst-keyed hash aggregate — the Pregel step as Catalyst
-    * sees it. No windows, no driver-side state beyond the loop counter; the
-    * 5-iteration unroll keeps plan depth bounded (the open-ended solver
-    * localCheckpoints per round like the CC operator does). Dangling
-    * nodes cannot exist: the graph is symmetric, so every node has outdeg
-    * ≥ 1 and the damping constant absorbs the rest.
+    * Scale shape: the edge list with its out-degree attached builds once
+    * and persists via `Caches` (read 5×); every iteration is ONE src-keyed
+    * hash join + ONE dst-keyed hash aggregate — the Pregel step as Catalyst
+    * sees it. No windows, no driver-side state; the 5-iteration unroll
+    * keeps plan depth bounded. Dangling nodes cannot exist: the graph is
+    * symmetric, so every node has outdeg ≥ 1 and the damping constant
+    * absorbs the rest.
     */
   private val graphPagerank = Q(
     "graph_pagerank",
     (s, d) => {
-      // artifact read (r12): the weighted transaction artifact's (u, v)
-      // projection IS the distinct trading-pair set this key used to derive
-      val e0 = txnArtifact(s, d)
-        .select(col("u").as("src"), col("v").as("dst"))
-      val edges =
-        e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      Graph.pagerank(edges, iters = 5)
+      // the transaction artifact's (u, v) projection is the distinct
+      // trading-pair set; its `w` stays out, so the weights are uniform
+      Graph.pagerank(Graph.symmetric(txnArtifact(s, d)), iters = 5)
         .orderBy(col("rank").desc, col("node").asc)
     },
     Some {
@@ -99,26 +93,21 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     * graph with TRANSACTION MULTIPLICITY as the edge weight — the signal
     * the unweighted key's `distinct()` discards: a customer-supplier pair
     * with 40 lineitems carries 40× the rank flow of a one-off trade. Runs
-    * through [[graft.api.Graph.pagerankUntil]] (eps = 0 ⇒ exactly
-    * maxIters = 5 rounds — deterministic, so the solver's WEIGHTED path
-    * runs under the DuckDB gate; its uniform-weight path is gated by
-    * ApiSpec's bit-equality with [[graft.api.Graph.pagerank]]).
+    * [[graft.api.Graph.pagerank]] with the `w` column, so the weighted
+    * round runs under the DuckDB gate; ApiSpec pins
+    * [[graft.api.Graph.pagerankUntil]] at `eps = 0` to the same bits.
     *
     * Scale shape: identical to the unweighted key (per round one src-keyed
-    * equi-join + one dst-keyed agg) plus the solver's localCheckpoint per
-    * round; contributions `rank·w/wsum` quantize to DECIMAL(28,6) with the
-    * weight promoted to double on both engines before the quotient.
+    * equi-join + one dst-keyed agg); contributions `rank·w/wsum` quantize
+    * to DECIMAL(28,6) with the weight promoted to double on both engines
+    * before the quotient.
     */
   private val graphPagerankWeighted = Q(
     "graph_pagerank_weighted",
     (s, d) => {
-      // artifact read (r12); still cached — both union branches and every
-      // solver round re-read the frame
-      val e0 = Caches.cache(txnArtifact(s, d)
-        .select(col("u").as("src"), col("v").as("dst"), col("w")))
-      val edges = e0.union(
-        e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      Graph.pagerankUntil(edges, eps = 0.0, maxIters = 5)._1
+      // cached: both directions of the symmetric list re-read the frame
+      val e0 = Caches.cache(txnArtifact(s, d).select("u", "v", "w"))
+      Graph.pagerank(Graph.symmetric(e0, Seq("w")), iters = 5)
         .orderBy(col("rank").desc, col("node").asc)
     },
     Some {
@@ -213,21 +202,29 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     * The 1-row basket-truncation metric is its own artifact
     * (`coorder_meta`), which graph_triangles surfaces. Both go through the
     * [[graft.api.Tables.tableOrDerive]] gate, so either is re-derived
-    * alone when it is missing. A derivation builds the [[basketArrays]]
+    * alone when it is missing. A derivation persists the [[basketArrays]]
     * frame once — one lineitem scan, no window, no join — and both tables
-    * read it; it is freed before the call returns, so nothing the
-    * derivation persisted outlives it.
+    * read it; it is unpersisted before the call returns, so nothing the
+    * derivation persisted outlives it. A call that derives nothing
+    * persists nothing.
     */
   private[graft] def coOrderArtifact(s: SparkSession, d: String)
-      : (DataFrame, DataFrame) = Caches.scoped {
-    lazy val b = Caches.cache(basketArrays(coOrderItems(s, d)))
-    val meta = Tables.tableOrDerive(s, Tables.artifactName("coorder_meta", d))(
-      cappedCount(b).coalesce(1))
-    val ew = Graph.edgesOrDerive(s, Tables.artifactName("coorder", d),
-        payload = Seq("w")) {
-      basketPairs(b).groupBy("u", "v").agg(count(lit(1)).as("w"))
+      : (DataFrame, DataFrame) = {
+    var persisted: Option[DataFrame] = None
+    lazy val b = {
+      val f = basketArrays(coOrderItems(s, d)).persist()
+      persisted = Some(f)
+      f
     }
-    (ew, meta)
+    try {
+      val meta = Tables.tableOrDerive(s, Tables.artifactName("coorder_meta", d))(
+        cappedCount(b).coalesce(1))
+      val ew = Graph.edgesOrDerive(s, Tables.artifactName("coorder", d),
+          payload = Seq("w")) {
+        basketPairs(b).groupBy("u", "v").agg(count(lit(1)).as("w"))
+      }
+      (ew, meta)
+    } finally persisted.foreach(_.unpersist(blocking = true))
   }
 
   /** The persisted ORIENTED co-order graph — [[coOrderArtifact]] one
@@ -297,22 +294,35 @@ SELECT node, rank FROM r5 ORDER BY rank DESC, node ASC"""
     lpaLabelsArtifact(s, d)
   }
 
-  /** The oracles' co-order items: distinct `(ok, pk)`, nulls excluded
-    * (the [[basketArrays]] null rule).
+  /** The oracles' capped baskets: li → ranked → kept — distinct
+    * `(ok, pk)` items under the [[basketArrays]] null rule, each basket
+    * cut to its `MAXBASKET` lowest part keys by a rank window.
     */
-  private def coOrderLiSql: String =
-    """SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
-WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL"""
+  private def keptSql: String =
+    s"""li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
+rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
+kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET)"""
 
-  /** Shared oracle CTE prefix for the capped co-order graph: li → ranked →
-    * kept → e0 — the independent window + self-join formulation of
+  /** Shared oracle CTE prefix for the capped co-order graph: [[keptSql]]
+    * → e0 — the independent window + self-join formulation of
     * [[capBaskets]], under the same null rule.
     */
   private def coOrderSql: String =
-    s"""li AS ($coOrderLiSql),
-rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
-kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
+    s"""$keptSql,
 e0 AS (SELECT DISTINCT a.pk AS u, b.pk AS v FROM kept a JOIN kept b ON a.ok = b.ok AND a.pk < b.pk)"""
+
+  /** The triangle-family oracles' orientation over [[coOrderSql]]'s e0:
+    * degrees `deg(n, dg)` and the degree-ordered edges `o(lo, hi, khi)` —
+    * the [[graft.api.Graph.orient]] derivation as SQL joins.
+    */
+  private def orientSql: String =
+    s"""deg AS (SELECT n, count(*) AS dg FROM (SELECT u AS n FROM e0 UNION ALL SELECT v AS n FROM e0) GROUP BY 1),
+ek AS (SELECT u, v, du.dg * ${Graph.KMUL} + u AS ku, dv.dg * ${Graph.KMUL} + v AS kv
+       FROM e0 JOIN deg du ON u = du.n JOIN deg dv ON v = dv.n),
+o AS (SELECT CASE WHEN ku < kv THEN u ELSE v END AS lo,
+             CASE WHEN ku < kv THEN v ELSE u END AS hi,
+             CASE WHEN ku < kv THEN kv ELSE ku END AS khi FROM ek)"""
 
   /** Triangle count on the PART co-order graph (parts bought in the same
     * order — the market-basket graph: ~0.006 density at sf0.1 vs the
@@ -339,7 +349,7 @@ e0 AS (SELECT DISTINCT a.pk AS u, b.pk AS v FROM kept a JOIN kept b ON a.ok = b.
   private val graphTriangles = Q(
     "graph_triangles",
     (s, d) => {
-      // reads the persisted ORIENTED artifact (r13) — degrees + the
+      // reads the persisted ORIENTED artifact — degrees + the
       // degree-ordered edge list stored once per session, so this run
       // pays only the probes and the wedge joins; the stored meta row
       // carries the truncation metric, so no ranking window re-runs here
@@ -348,16 +358,48 @@ e0 AS (SELECT DISTINCT a.pk AS u, b.pk AS v FROM kept a JOIN kept b ON a.ok = b.
       Graph.trianglesOriented(deg, oriented).crossJoin(capStats)
     },
     Some(s"""WITH $coOrderSql,
-deg AS (SELECT n, count(*) AS dg FROM (SELECT u AS n FROM e0 UNION ALL SELECT v AS n FROM e0) GROUP BY 1),
-ek AS (SELECT u, v, du.dg * ${Graph.KMUL} + u AS ku, dv.dg * ${Graph.KMUL} + v AS kv
-       FROM e0 JOIN deg du ON u = du.n JOIN deg dv ON v = dv.n),
-o AS (SELECT CASE WHEN ku < kv THEN u ELSE v END AS lo,
-             CASE WHEN ku < kv THEN v ELSE u END AS hi,
-             CASE WHEN ku < kv THEN kv ELSE ku END AS khi FROM ek),
+$orientSql,
 w AS (SELECT x.hi AS wu, y.hi AS wv FROM o x JOIN o y ON x.lo = y.lo AND x.khi < y.khi),
 t AS (SELECT count(*) AS n_triangles FROM w JOIN o ON w.wu = o.lo AND w.wv = o.hi)
 SELECT (SELECT count(*) FROM deg) AS n_nodes, (SELECT count(*) FROM e0) AS n_edges, n_triangles,
 (SELECT count(DISTINCT ok) FROM rk WHERE rk > $MAXBASKET) AS n_capped_orders FROM t"""))
+
+  /** SESSION-persisted artifact of the 4-round LPA labels on the co-order
+    * graph: BOTH `graph_label_prop` (emits the labels) and
+    * `graph_modularity` (scores them) read the identical 4-round
+    * propagation. The label frame is a deterministic pure function of the
+    * fixture (smallest-label tie-break, integer votes), so it takes
+    * the [[coOrderArtifact]] discipline one derivation deeper: derived
+    * once per (session, fixture dir) through
+    * [[graft.api.Tables.tableOrDerive]], read by both keys; both DuckDB
+    * oracles still unroll the rounds from raw parquet, so artifact ==
+    * derivation stays gated end-to-end on each (and GraphsSpec pins
+    * read-back == direct).
+    */
+  private[graft] def lpaLabelsArtifact(s: SparkSession, d: String): DataFrame =
+    Tables.tableOrDerive(s, Tables.artifactName("lpa_coorder_i4", d)) {
+      // the cache still matters inside the one derive: every LPA round
+      // re-reads the edge frame, and one in-memory copy beats
+      // 2×(rounds+1) parquet scans even of the bucketed artifact
+      val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
+      Graph.labelPropagation(Graph.symmetric(e0), iters = 4)
+    }
+
+  /** The oracles' 4 unrolled label-propagation rounds over an `edges`
+    * CTE: l0 labels every node with itself, and round i counts each
+    * node's neighbor labels by `vote` and keeps the top one, smallest
+    * label on ties (a row_number window — fixture-scale DuckDB).
+    */
+  private def lpaSql(vote: String): String =
+    "l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),\n" +
+      (1 to 4).map { i =>
+        s"""c$i AS (SELECT e.dst AS node, l.label AS label, $vote AS cnt
+FROM edges e JOIN l${i - 1} l ON e.src = l.node GROUP BY 1, 2),
+l$i AS (SELECT node, label FROM (
+    SELECT node, label,
+      row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) AS rn
+    FROM c$i) WHERE rn = 1)"""
+      }.mkString(",\n")
 
   /** Label-propagation communities (4 synchronous rounds) on the part
     * co-order graph — [[graft.api.Graph.labelPropagation]]: every part
@@ -374,49 +416,13 @@ SELECT (SELECT count(*) FROM deg) AS n_nodes, (SELECT count(*) FROM e0) AS n_edg
     * as graph_triangles. The oracle expresses the identical
     * argmax as a row_number window — fixture-scale DuckDB, same rows.
     */
-  /** SESSION-persisted artifact of the 4-round LPA labels on the co-order
-    * graph: BOTH
-    * `graph_label_prop` (emits the labels) and `graph_modularity` (scores
-    * them) run the identical 4-round propagation, and each paid the full
-    * round chain per run. The label frame is a deterministic pure function
-    * of the fixture (smallest-label tie-break, integer votes), so it takes
-    * the [[coOrderArtifact]] discipline one derivation deeper: derived
-    * once per (session, fixture dir) through
-    * [[graft.api.Tables.tableOrDerive]], read by both keys; both DuckDB
-    * oracles still unroll the rounds from raw parquet, so artifact ==
-    * derivation stays gated end-to-end on each (and GraphsSpec pins
-    * read-back == direct).
-    */
-  private[graft] def lpaLabelsArtifact(s: SparkSession, d: String): DataFrame =
-    Tables.tableOrDerive(s, Tables.artifactName("lpa_coorder_i4", d)) {
-      // the cache still matters inside the one derive: every LPA round
-      // re-reads the edge frame, and one in-memory copy beats
-      // 2×(rounds+1) parquet scans even of the bucketed artifact
-      val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val edges =
-        e0.select(col("u").as("src"), col("v").as("dst"))
-          .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      Graph.labelPropagation(edges, iters = 4)
-    }
-
   private val graphLabelProp = Q(
     "graph_label_prop",
     (s, d) => lpaLabelsArtifact(s, d).orderBy("node"),
-    Some {
-      val rounds = (1 to 4).map { i =>
-        s"""c$i AS (SELECT e.dst AS node, l.label AS label, count(*) AS cnt
-FROM edges e JOIN l${i - 1} l ON e.src = l.node GROUP BY 1, 2),
-l$i AS (SELECT node, label FROM (
-    SELECT node, label,
-      row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) AS rn
-    FROM c$i) WHERE rn = 1)"""
-      }.mkString(",\n")
-      s"""WITH $coOrderSql,
+    Some(s"""WITH $coOrderSql,
 edges AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v AS src, u AS dst FROM e0),
-l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-$rounds
-SELECT node, label FROM l4 ORDER BY node"""
-    })
+${lpaSql("count(*)")}
+SELECT node, label FROM l4 ORDER BY node"""))
 
   /** WEIGHTED label propagation (§2.12 ext) — [[graphLabelProp]] with
     * CO-ORDER MULTIPLICITY as the edge weight: the signal the unweighted
@@ -436,33 +442,18 @@ SELECT node, label FROM l4 ORDER BY node"""
     "graph_label_prop_weighted",
     (s, d) => {
       // the artifact IS this key's exact input — (u, v, w) with w the
-      // distinct-basket co-order count (r12)
+      // distinct-basket co-order count
       val e0 = Caches.cache(coOrderArtifact(s, d)._1)
-      val edges = e0
-        .select(col("u").as("src"), col("v").as("dst"), col("w"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst"), col("w")))
-      Graph.labelPropagationWeighted(edges, iters = 4).orderBy("node")
+      Graph.labelPropagationWeighted(Graph.symmetric(e0, Seq("w")), iters = 4)
+        .orderBy("node")
     },
-    Some {
-      val rounds = (1 to 4).map { i =>
-        s"""c$i AS (SELECT e.dst AS node, l.label AS label, CAST(sum(e.w) AS BIGINT) AS cnt
-FROM edges e JOIN l${i - 1} l ON e.src = l.node GROUP BY 1, 2),
-l$i AS (SELECT node, label FROM (
-    SELECT node, label,
-      row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) AS rn
-    FROM c$i) WHERE rn = 1)"""
-      }.mkString(",\n")
-      s"""WITH li AS ($coOrderLiSql),
-rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
-kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
+    Some(s"""WITH $keptSql,
 e0 AS (SELECT a.pk AS u, b.pk AS v, count(*) AS w
   FROM kept a JOIN kept b ON a.ok = b.ok AND a.pk < b.pk GROUP BY 1, 2),
 edges AS (SELECT u AS src, v AS dst, w FROM e0
   UNION ALL SELECT v AS src, u AS dst, w FROM e0),
-l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-$rounds
-SELECT node, label FROM l4 ORDER BY node"""
-    })
+${lpaSql("CAST(sum(e.w) AS BIGINT)")}
+SELECT node, label FROM l4 ORDER BY node"""))
 
   /** Community QUALITY for [[graphLabelProp]] (§2.12 ext) — Newman
     * modularity of the 4-round LPA labels on the co-order graph, via
@@ -493,27 +484,13 @@ SELECT node, label FROM l4 ORDER BY node"""
     "graph_modularity",
     (s, d) => {
       val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val edges =
-        e0.select(col("u").as("src"), col("v").as("dst"))
-          .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      // shared with graph_label_prop via the session artifact (r15) —
-      // the 4-round propagation runs once per (session, fixture dir)
-      val labels = lpaLabelsArtifact(s, d)
-      Graph.modularity(edges, labels)
+      // shared with graph_label_prop via the session artifact — the
+      // 4-round propagation runs once per (session, fixture dir)
+      Graph.modularity(Graph.symmetric(e0), lpaLabelsArtifact(s, d))
     },
-    Some {
-      val rounds = (1 to 4).map { i =>
-        s"""c$i AS (SELECT e.dst AS node, l.label AS label, count(*) AS cnt
-FROM edges e JOIN l${i - 1} l ON e.src = l.node GROUP BY 1, 2),
-l$i AS (SELECT node, label FROM (
-    SELECT node, label,
-      row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) AS rn
-    FROM c$i) WHERE rn = 1)"""
-      }.mkString(",\n")
-      s"""WITH $coOrderSql,
+    Some(s"""WITH $coOrderSql,
 edges AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v AS src, u AS dst FROM e0),
-l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-$rounds,
+${lpaSql("count(*)")},
 le AS (SELECT ls.label AS lsrc, ld.label AS ldst
   FROM edges JOIN l4 ls ON edges.src = ls.node
              JOIN l4 ld ON edges.dst = ld.node),
@@ -525,8 +502,7 @@ SELECT count(*) AS n_communities,
   (CAST(CAST(sum(d) AS BIGINT) AS DOUBLE) * CAST(CAST(sum(inc) AS BIGINT) AS DOUBLE)
    - CAST(sum(CAST(d AS DECIMAL(19,0)) * CAST(d AS DECIMAL(19,0))) AS DOUBLE))
   / (CAST(CAST(sum(d) AS BIGINT) AS DOUBLE) * CAST(CAST(sum(d) AS BIGINT) AS DOUBLE)) AS modularity
-FROM perc"""
-    })
+FROM perc"""))
 
   /** Neighbor cap for [[graphJaccardSim]] — C(32, 2) = 496 wedges per
     * center max. The co-order graph's MEDIAN degree is ~115 at every SF
@@ -554,8 +530,7 @@ FROM perc"""
     "graph_jaccard_sim",
     (s, d) => {
       val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val adj = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
+      val adj = Graph.symmetric(e0)
       val capped = adj
         .groupBy("src").agg(count(lit(1)).as("dg"))
         .filter(col("dg") > JCAP)
@@ -628,9 +603,7 @@ ORDER BY jacc DESC, u ASC, v ASC"""))
             .as("lift"))
         .orderBy("u", "v")
     },
-    Some(s"""WITH li AS ($coOrderLiSql),
-rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
-kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
+    Some(s"""WITH $keptSql,
 pairs AS (SELECT a.pk AS u, b.pk AS v, count(*) AS s_uv
   FROM kept a JOIN kept b ON a.ok = b.ok AND a.pk < b.pk
   GROUP BY 1, 2 HAVING count(*) >= 2),
@@ -655,16 +628,16 @@ ORDER BY u, v"""))
     * each node its unique shortest hop.
     *
     * Scale shape: reads the capped [[coOrderArtifact]]; per round
-    * one src-keyed join + distinct + node-keyed anti-join (builder
-    * scaladoc). The oracle unrolls the identical 3 rounds as NOT-IN CTEs.
+    * one src-keyed join + distinct + anti-join against the visited set
+    * (builder scaladoc). The oracle unrolls the identical 3 rounds as
+    * NOT-IN CTEs.
     */
   private val graphBfsHops = Q(
     "graph_bfs_hops",
     (s, d) => {
       val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val edges = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      Graph.bfsHops(edges, source = 0L, maxHops = 3).orderBy("node")
+      Graph.bfsHops(Graph.symmetric(e0), source = 0L, maxHops = 3)
+        .orderBy("node")
     },
     Some {
       val rounds = (1 to 3).map { i =>
@@ -682,41 +655,59 @@ $rounds
 SELECT node, hop FROM v3 ORDER BY node"""
     })
 
-  /** Sampled-source harmonic centrality (§2.12 ext, r13) — the
+  /** The sampled-centrality probe set: the 4 lowest node ids of a
+    * symmetric edge list (deterministic and oracle-trivial; a production
+    * run swaps in a seeded random sample). A bounded 4-row driver collect.
+    */
+  private def probeSources(edges: DataFrame): Seq[Long] =
+    edges.select(col("src").as("n")).distinct().orderBy("n").limit(4)
+      .collect().map(_.getAs[Number](0).longValue).toSeq
+
+  /** The sampled-centrality oracles' hop table over [[coOrderSql]]'s e0:
+    * `m(source, node, hop)` from the [[probeSources]] over the symmetric
+    * list `sym`, built from unrolled DISTINCT walk levels + a min-hop
+    * aggregate (a length-k walk exists for every distance-k node, and min
+    * over walk lengths is the BFS distance) — a different algorithm than
+    * the frontier/anti-join solver, same rows.
+    */
+  private def probeHopsSql: String =
+    """sym AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
+sp AS (SELECT DISTINCT src AS n FROM sym ORDER BY n LIMIT 4),
+l0 AS (SELECT n AS bsrc, n AS node FROM sp),
+l1 AS (SELECT DISTINCT l0.bsrc, e.dst AS node FROM l0 JOIN sym e ON e.src = l0.node),
+l2 AS (SELECT DISTINCT l1.bsrc, e.dst AS node FROM l1 JOIN sym e ON e.src = l1.node),
+l3 AS (SELECT DISTINCT l2.bsrc, e.dst AS node FROM l2 JOIN sym e ON e.src = l2.node),
+walks AS (SELECT bsrc, node, 0 AS hop FROM l0
+  UNION ALL SELECT bsrc, node, 1 FROM l1
+  UNION ALL SELECT bsrc, node, 2 FROM l2
+  UNION ALL SELECT bsrc, node, 3 FROM l3),
+m AS (SELECT bsrc AS source, node, min(hop) AS hop FROM walks GROUP BY 1, 2)"""
+
+  /** Sampled-source harmonic centrality (§2.12 ext) — the
     * probe-based estimator behind every at-scale closeness/harmonic
     * ranking: exact all-pairs harmonic centrality is Θ(|V|·BFS), so
     * production estimators run BFS from a SMALL probe set and sum
-    * 1/distance per reached node (Eppstein–Wang style). Here: the 4
-    * lowest part ids (deterministic + oracle-trivial; a production run
-    * swaps in a seeded random sample — the ESTIMATOR shape is what this
-    * key pins), 3 hops, all sources in ONE
+    * 1/distance per reached node (Eppstein–Wang style). Here: the
+    * [[probeSources]] (the 4 lowest part ids — the ESTIMATOR shape is
+    * what this key pins), 3 hops, all sources in ONE
     * [[graft.api.Graph.multiBfsHops]] pass. Emits per reached node the
     * probe count and `Σ 1/hop`, the harmonic estimate.
     *
     * Float discipline: with hops ∈ {1,2,3}, `Σ 6/hop` is an EXACT integer
     * (6, 3, 2 per term — emitted as `h6_sum`); `harmonic = h6_sum / 6.0`
     * is one IEEE division of exact ints → RAW. The oracle closes the same
-    * 3-hop reach with unrolled DISTINCT walk levels + a min-hop aggregate
-    * (a length-k walk exists for every distance-k node, and min over walk
-    * lengths is the BFS distance) — a different algorithm than the
-    * frontier/anti-join solver, same rows.
+    * 3-hop reach over [[probeHopsSql]].
     *
     * Scale shape: state is (4 × node)-grain; per round one edges⋈frontier
     * equi-join + distinct + anti-join, the edge list read in place under
-    * the nodeHint guard. The probe-set collect is 4 rows (bounded driver
-    * probe, the codebook discipline).
+    * the nodeHint guard.
     */
   private val graphHarmonicSampled = Q(
     "graph_harmonic_sampled",
     (s, d) => {
       val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val edges = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      val srcs = e0.select(col("u").as("n"))
-        .union(e0.select(col("v").as("n")))
-        .distinct().orderBy("n").limit(4)
-        .collect().map(_.getAs[Number](0).longValue).toSeq
-      val hops = Graph.multiBfsHops(edges, srcs, maxHops = 3)
+      val edges = Graph.symmetric(e0)
+      val hops = Graph.multiBfsHops(edges, probeSources(edges), maxHops = 3)
       hops.filter(col("hop") > 0)
         .groupBy("node")
         .agg(count(lit(1)).as("n_reached"),
@@ -727,30 +718,18 @@ SELECT node, hop FROM v3 ORDER BY node"""
         .orderBy("node")
     },
     Some(s"""WITH $coOrderSql,
-sym AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
-sp AS (SELECT DISTINCT src AS n FROM sym ORDER BY n LIMIT 4),
-l0 AS (SELECT n AS bsrc, n AS node FROM sp),
-l1 AS (SELECT DISTINCT l0.bsrc, e.dst AS node FROM l0 JOIN sym e ON e.src = l0.node),
-l2 AS (SELECT DISTINCT l1.bsrc, e.dst AS node FROM l1 JOIN sym e ON e.src = l1.node),
-l3 AS (SELECT DISTINCT l2.bsrc, e.dst AS node FROM l2 JOIN sym e ON e.src = l2.node),
-hops AS (SELECT bsrc, node, 0 AS hop FROM l0
-  UNION ALL SELECT bsrc, node, 1 FROM l1
-  UNION ALL SELECT bsrc, node, 2 FROM l2
-  UNION ALL SELECT bsrc, node, 3 FROM l3),
-m AS (SELECT bsrc, node, min(hop) AS hop FROM hops GROUP BY 1, 2)
+$probeHopsSql
 SELECT node, count(*) AS n_reached,
   CAST(sum(CASE hop WHEN 1 THEN 6 WHEN 2 THEN 3 ELSE 2 END) AS BIGINT) AS h6_sum,
   CAST(sum(CASE hop WHEN 1 THEN 6 WHEN 2 THEN 3 ELSE 2 END) AS DOUBLE) / 6.0 AS harmonic
 FROM m WHERE hop > 0
 GROUP BY node ORDER BY node"""))
 
-  /** Sampled betweenness centrality (§2.12 ext, r14) — the Brandes-sampled
+  /** Sampled betweenness centrality (§2.12 ext) — the Brandes-sampled
     * estimator behind at-scale betweenness rankings (exact Brandes is
     * Θ(|V|·BFS); production estimators run the forward-σ/backward-δ pass
     * from a probe set — the [[graphHarmonicSampled]] discipline extended
-    * to dependency accumulation): BFS from the 4 lowest part ids
-    * (deterministic + oracle-trivial; a production run swaps a seeded
-    * random sample — the ESTIMATOR shape is what this key pins), 3 hops,
+    * to dependency accumulation): BFS from the [[probeSources]], 3 hops,
     * via [[graft.api.Graph.betweennessSampled]]. Emits per reached node
     * the probe count and the summed dependency `bc` — the sampled
     * betweenness estimate (which co-purchased parts BROKER the most
@@ -759,9 +738,8 @@ GROUP BY node ORDER BY node"""))
     * Float discipline: σ are exact longs; each δ term σv/σw·(1+δw) is
     * identical spelled-order IEEE quantized at 1e-6 and summed as exact
     * DECIMAL(28,6) (the PageRank rule), per level and again across
-    * sources → bc emits RAW. The oracle rebuilds hops from unrolled
-    * DISTINCT walk levels + min (the harmonic oracle's different-
-    * algorithm gate), then the same σ/δ chain.
+    * sources → bc emits RAW. The oracle rebuilds hops with
+    * [[probeHopsSql]], then the same σ/δ chain.
     *
     * Scale shape: one multi-source BFS (k×|V| state), the per-source DAG
     * as two node-keyed joins (≤ k×|E| rows, cached), one hash aggregate
@@ -772,27 +750,12 @@ GROUP BY node ORDER BY node"""))
     "graph_betweenness_sampled",
     (s, d) => {
       val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val edges = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      val srcs = e0.select(col("u").as("n"))
-        .union(e0.select(col("v").as("n")))
-        .distinct().orderBy("n").limit(4)
-        .collect().map(_.getAs[Number](0).longValue).toSeq
-      Graph.betweennessSampled(edges, srcs, maxHops = 3)
+      val edges = Graph.symmetric(e0)
+      Graph.betweennessSampled(edges, probeSources(edges), maxHops = 3)
         .orderBy("node")
     },
     Some(s"""WITH $coOrderSql,
-sym AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
-sp AS (SELECT DISTINCT src AS n FROM sym ORDER BY n LIMIT 4),
-l0 AS (SELECT n AS bsrc, n AS node FROM sp),
-l1 AS (SELECT DISTINCT l0.bsrc, e.dst AS node FROM l0 JOIN sym e ON e.src = l0.node),
-l2 AS (SELECT DISTINCT l1.bsrc, e.dst AS node FROM l1 JOIN sym e ON e.src = l1.node),
-l3 AS (SELECT DISTINCT l2.bsrc, e.dst AS node FROM l2 JOIN sym e ON e.src = l2.node),
-walks AS (SELECT bsrc, node, 0 AS hop FROM l0
-  UNION ALL SELECT bsrc, node, 1 FROM l1
-  UNION ALL SELECT bsrc, node, 2 FROM l2
-  UNION ALL SELECT bsrc, node, 3 FROM l3),
-m AS (SELECT bsrc AS source, node, min(hop) AS hop FROM walks GROUP BY 1, 2),
+$probeHopsSql,
 dag AS (SELECT h1.source, e.src, e.dst, h1.hop AS hu
   FROM sym e
   JOIN m h1 ON h1.node = e.src
@@ -849,9 +812,7 @@ GROUP BY m.node ORDER BY m.node"""))
     "graph_kcore",
     (s, d) => {
       val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val edges = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      Graph.kcore(edges, k = 70, rounds = 5).orderBy("node")
+      Graph.kcore(Graph.symmetric(e0), k = 70, rounds = 5).orderBy("node")
     },
     Some {
       val rounds = (1 to 5).map { i =>
@@ -885,7 +846,7 @@ ORDER BY node"""
     * (exact, order-independent, overflow-safe — Σxy alone can pass 2⁶³ on
     * a hub-heavy corpus where raw BIGINT sums would wrap), and the
     * PER-ROW products cast each FACTOR to DECIMAL(19,0) before
-    * multiplying (r8 advisory: a BIGINT x·y wraps silently in non-ANSI
+    * multiplying (a BIGINT x·y wraps silently in non-ANSI
     * Spark / errors in DuckDB before any decimal sum can save it;
     * 19+19 ≤ 38 keeps the product width legal in both engines); the closing
     * Pearson chain casts each sum to double once and runs identical
@@ -895,7 +856,7 @@ ORDER BY node"""
     * Scale shape: delegated to [[graft.api.Graph.assortativity]] — one
     * node-grain degree aggregate, one node-keyed join per endpoint (the
     * degree-frame hints are GUARDED by the shared
-    * [[graft.api.Graph.nodeHint]] probe, r11), one 5-sum
+    * [[graft.api.Graph.nodeHint]] probe), one 5-sum
     * map-side-combinable aggregate over the edges. Nothing quadratic
     * anywhere.
     */
@@ -903,9 +864,7 @@ ORDER BY node"""
     "graph_assortativity",
     (s, d) => {
       val e0 = Caches.cache(coOrderArtifact(s, d)._1.select("u", "v"))
-      val adj = e0.select(col("u").as("src"), col("v").as("dst"))
-        .union(e0.select(col("v").as("src"), col("u").as("dst")))
-      graft.api.Graph.assortativity(adj)
+      Graph.assortativity(Graph.symmetric(e0))
     },
     Some(s"""WITH $coOrderSql,
 adj AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0),
@@ -946,7 +905,7 @@ FROM m"""))
     "graph_components",
     (s, d) => {
       // the artifact's w IS this key's support count — the ≥3 filter runs
-      // on the stored column (r12), pruning before the solver as before
+      // on the stored column, pruning before the solver
       val pairs = coOrderArtifact(s, d)._1
         .filter(col("w") >= 3)
         .select(col("u").as("a_id"), col("v").as("b_id"))
@@ -956,9 +915,7 @@ FROM m"""))
         .orderBy("component")
     },
     Some(s"""WITH RECURSIVE
-li AS ($coOrderLiSql),
-rk AS (SELECT ok, pk, row_number() OVER (PARTITION BY ok ORDER BY pk) AS rk FROM li),
-kept AS (SELECT ok, pk FROM rk WHERE rk <= $MAXBASKET),
+$keptSql,
 p2 AS (SELECT a.pk AS u, b.pk AS v FROM kept a JOIN kept b
          ON a.ok = b.ok AND a.pk < b.pk
        GROUP BY 1, 2 HAVING count(*) >= 3),
@@ -973,8 +930,8 @@ cc AS (SELECT id, min(comp) AS component FROM reach GROUP BY id)
 SELECT component, count(*) AS n_parts, min(id) AS rep_part
 FROM cc GROUP BY component ORDER BY component"""))
 
-  /** Strongly connected components (§2.12 ext, r15 — the directed-graph
-    * alternative the r13 verdict queued behind betweenness) over the PART
+  /** Strongly connected components (§2.12 ext — the directed-graph
+    * counterpart of [[graphComponents]]) over the PART
     * FLOW graph: a genuinely DIRECTED derivation (the co-order graph is
     * symmetric, so SCC there is just CC) — within each order, parts sorted
     * by (first linenumber, partkey) chain into directed edges
@@ -1043,7 +1000,7 @@ SELECT node, scc FROM scc ORDER BY node"""))
   private val graphClusteringCoeff = Q(
     "graph_clustering_coeff",
     (s, d) => {
-      // oriented artifact read (r13): same stored tables as graph_triangles
+      // oriented artifact read: same stored tables as graph_triangles
       val (deg, oriented) = coOrderOriented(s, d)
       // cache the node-grain result: it feeds BOTH the avg aggregate and
       // the final cross join — uncached, the whole wedge pipeline would
@@ -1054,12 +1011,7 @@ SELECT node, scc FROM scc ORDER BY node"""))
       nodes.crossJoin(broadcast(avg)).orderBy("node")
     },
     Some(s"""WITH $coOrderSql,
-deg AS (SELECT n, count(*) AS dg FROM (SELECT u AS n FROM e0 UNION ALL SELECT v AS n FROM e0) GROUP BY 1),
-ek AS (SELECT u, v, du.dg * ${Graph.KMUL} + u AS ku, dv.dg * ${Graph.KMUL} + v AS kv
-       FROM e0 JOIN deg du ON u = du.n JOIN deg dv ON v = dv.n),
-o AS (SELECT CASE WHEN ku < kv THEN u ELSE v END AS lo,
-             CASE WHEN ku < kv THEN v ELSE u END AS hi,
-             CASE WHEN ku < kv THEN kv ELSE ku END AS khi FROM ek),
+$orientSql,
 w AS (SELECT x.lo AS ctr, x.hi AS wu, y.hi AS wv
       FROM o x JOIN o y ON x.lo = y.lo AND x.khi < y.khi),
 t AS (SELECT ctr, wu, wv FROM w JOIN o ON w.wu = o.lo AND w.wv = o.hi),

@@ -1359,19 +1359,33 @@ class ApiSpec extends SparkSpec {
   }
 
   test("pagerankUntil with uniform weights matches pagerank() bit-for-bit") {
+    import spark.implicits._
     import graft.api.Graph
     // an irregular little graph: path + chord + pendant
-    val g = sym(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L), (4L, 5L)))
-    val bounded = Graph.pagerank(g, iters = 5).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // eps = 0 never triggers (delta >= 0 always), so exactly maxIters run —
-    // same rounds, same decimal-quantized arithmetic, same bits
-    val (ranks, rounds) = Graph.pagerankUntil(g, eps = 0.0, maxIters = 5)
-    val until = ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(rounds == 5)
-    assert(until == bounded,
-      s"uniform-weight pagerankUntil must equal the unrolled builder:\n$until\n$bounded")
-    graft.api.Caches.sweep(spark)
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L), (4L, 5L))
+    val g = sym(pairs)
+    // the same graph weighted: non-integer weights, so the quotient
+    // rank·w/wsum rounds and quantizes at every term
+    val wts = Seq(3.0, 0.5, 1.25, 7.0, 2.0, 0.1)
+    val wp = pairs.zip(wts).map { case ((a, b), w) => (a, b, w) }
+    val gw = (wp ++ wp.map(p => (p._2, p._1, p._3))).toDF("src", "dst", "w")
+    val byWeights = Seq(g -> "uniform", gw -> "weighted").map { case (graph, what) =>
+      val bounded = Graph.pagerank(graph, iters = 5).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      // eps = 0 never triggers (delta >= 0 always), so exactly maxIters
+      // run — same rounds, same decimal-quantized arithmetic, same bits
+      val (ranks, rounds) = Graph.pagerankUntil(graph, eps = 0.0, maxIters = 5)
+      val until = ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(rounds == 5)
+      assert(until.keySet == bounded.keySet && until.forall { case (n, r) =>
+          java.lang.Double.doubleToRawLongBits(r) ==
+            java.lang.Double.doubleToRawLongBits(bounded(n)) },
+        s"$what pagerankUntil must equal the unrolled builder:\n$until\n$bounded")
+      graft.api.Caches.sweep(spark)
+      bounded
+    }
+    // the weighted graph is not a disguised uniform one: pagerank reads w
+    assert(byWeights(0) != byWeights(1), s"weights ignored: $byWeights")
   }
 
   test("pagerankUntil rank mass follows edge weights") {

@@ -809,20 +809,29 @@ class GraphsSpec extends SparkSpec
     graft.api.Caches.sweep(spark)
   }
 
-  test("multiBfsHops equals the per-source bfsHops union on a literal graph (r13)") {
+  test("multiBfsHops equals a driver-side BFS per source on a literal graph") {
     import spark.implicits._
-    // path 1-2-3-4-5 plus a branch 2-10; sources 1 and 10
+    // path 1-2-3-4-5 plus a branch 2-10; sources 1 and 10, 1 again (a
+    // repeated source adds no rows) and 99 (no edges: its hop-0 row only)
     val edges0 = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (2L, 10L))
-    val edges = (edges0 ++ edges0.map(e => (e._2, e._1)))
-      .toDF("src", "dst")
-    val multi = graft.api.Graph.multiBfsHops(edges, Seq(1L, 10L), 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val perSrc = Seq(1L, 10L).flatMap(sr =>
-      graft.api.Graph.bfsHops(edges, sr, 3)
-        .collect().map(r => (sr, r.getLong(0), r.getInt(1)))).toSet
-    assert(multi === perSrc)
+    val sym = edges0 ++ edges0.map(e => (e._2, e._1))
+    val edges = sym.toDF("src", "dst")
+    val sources = Seq(1L, 10L, 1L, 99L)
+    val multi = graft.api.Graph.multiBfsHops(edges, sources, 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    // the reference: a level-synchronous BFS over the literal edge list
+    val adj = sym.groupBy(_._1).map { case (n, es) => n -> es.map(_._2) }
+    def driverBfs(src: Long): Map[Long, Int] =
+      (1 to 3).foldLeft((Map(src -> 0), Set(src))) { case ((seen, frontier), h) =>
+        val next = frontier.flatMap(adj.getOrElse(_, Nil)) -- seen.keySet
+        (seen ++ next.map(_ -> h), next)
+      }._1
+    val expected = sources.distinct.flatMap(sr =>
+      driverBfs(sr).map { case (n, h) => (sr, n, h) })
+    assert(multi.sorted === expected.sorted)
     // spot-pin the distances: from 1, node 4 is 3 hops; from 10, node 3 is 2
     assert(multi.contains((1L, 4L, 3)) && multi.contains((10L, 3L, 2)))
+    assert(multi.filter(_._1 == 99L) === Seq((99L, 99L, 0)))
     graft.api.Caches.sweep(spark)
   }
 
